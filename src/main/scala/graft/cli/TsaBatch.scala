@@ -30,6 +30,15 @@ import scala.jdk.CollectionConverters._
   */
 object TsaBatch {
 
+  /** Most condition rows [[timelineOf]] collects to the driver for one
+    * plot and slide timeline. A condition's rows are its run-length
+    * compressed ranges — a month of 1-minute readings flipping on every
+    * reading is ~43k — and every row becomes a shape per lane in the
+    * slide, so past this bound the timeline is skipped and reported in
+    * the condition's error node instead of collected.
+    */
+  val TimelineMaxRows: Long = 100000L
+
   def main(args: Array[String]): Unit = {
     val opts = parseArgs(args)
     val inputDir = opts.getOrElse("input", sys.error("--input required"))
@@ -87,12 +96,16 @@ object TsaBatch {
     * (tsa/cond_collection.py:205-255: bold headers, range row,
     * `0.00 %` percentage cells) via the dependency-free [[Xlsx]]
     * writer.
+    *
+    * @param timelineMaxRows row bound of one condition's timeline
+    *   collect, checked against the summary's `n_rows`
     */
   def run(spark: SparkSession, sheets: Vector[(String, String)],
           obsPath: String, outDir: String, name: String,
           xlsx: Boolean = false, pptx: Boolean = false,
           svg: Boolean = false, png: Boolean = false,
-          pptxTemplate: Option[java.nio.file.Path] = None): Unit = {
+          pptxTemplate: Option[java.nio.file.Path] = None,
+          timelineMaxRows: Long = TimelineMaxRows): Unit = {
     val obs = spark.read.parquet(obsPath)
     val engine = new TsaEngine(spark)
     val summaryRows = Vector.newBuilder[String]
@@ -139,13 +152,11 @@ object TsaBatch {
         wsRows += Seq("site", "master_alias", "condition", "data_from",
           "data_until", "valid", "notvalid", "nodata", "rows")
           .map(h => Xlsx.Str(h, bold = true))
+        // the reference's per-sheet timing line
+        // (tsa/cond_collection.py:434-436): wall clock only, no Spark work
+        val fetchStart = System.nanoTime()
         val results = engine.run(spec, obs, Validation.localSensorIds)
         for (r <- results) {
-          if (r.errors.nonEmpty) {
-            val prev = condNodes.get(r.spec.idString).map(_.errors).getOrElse(Nil)
-            condNodes += r.spec.idString ->
-              graft.dsl.ErrorNode(r.spec.idString, prev ++ r.errors.messages)
-          }
           if (r.summary != null) {
             val s = r.summary.collect()(0)
             def tsOr(c: String): Xlsx.Cell = {
@@ -175,26 +186,38 @@ object TsaBatch {
               .parquet(s"$outDir/conditions/${r.spec.idString}")
             if (pptx || svg || png) {
               // the lane data IS the condition frame, run-length
-              // compressed by the pack kernel — report-sized, same
-              // collect class as the summary row above
-              val tl = timelineOf(r)
-              if ((svg || png) && tl._2.nonEmpty) {
+              // compressed by the pack kernel; the summary's n_rows
+              // bounds the collect before it runs
+              val nRows = s.getAs[Long]("n_rows")
+              val tl =
+                if (nRows <= timelineMaxRows) Some(timelineOf(r)).filter(_._2.nonEmpty)
+                else {
+                  r.errors.add(s"Timeline not drawn: $nRows result rows exceed " +
+                    s"the $timelineMaxRows-row timeline bound")
+                  None
+                }
+              for ((lanes, ranges) <- tl if svg || png) {
                 val plots = Paths.get(s"$outDir/plots")
                 Files.createDirectories(plots)
                 // reference png naming: f'{title}_{c.id_string}.png'
                 if (svg) SvgTimeline.write(
-                  plots.resolve(s"${title}_${r.spec.idString}.svg"), tl._1, tl._2)
+                  plots.resolve(s"${title}_${r.spec.idString}.svg"), lanes, ranges)
                 if (png) RasterTimeline.write(
-                  plots.resolve(s"${title}_${r.spec.idString}.png"), tl._1, tl._2)
+                  plots.resolve(s"${title}_${r.spec.idString}.png"), lanes, ranges)
               }
-              if (pptx)
-                deck += slideFor(title, r, Some(s), Some(tl).filter(_._2.nonEmpty))
+              if (pptx) deck += slideFor(title, r, Some(s), tl)
             }
           } else if (pptx)
             // reference still emits a slide for a no-data condition
             // ('Ei dataa saatavilla', no plot)
             deck += slideFor(title, r, None, None)
+          if (r.errors.nonEmpty) {
+            val prev = condNodes.get(r.spec.idString).map(_.errors).getOrElse(Nil)
+            condNodes += r.spec.idString ->
+              graft.dsl.ErrorNode(r.spec.idString, prev ++ r.errors.messages)
+          }
         }
+        log.info(f"Results fetched in ${(System.nanoTime() - fetchStart) / 1e9}%.3f s (sheet $title)")
       }
       collNodes += title ->
         graft.dsl.ErrorNode(title, parsed.sheetErrors.messages, condNodes)

@@ -18,8 +18,10 @@ import scala.collection.mutable
   *   - ALL primary blocks of the whole collection packed in ONE
   *     observation pass (broadcast key tagging + window partitioned by
   *     block id) instead of one Postgres call per block;
-  *   - condition results cached (the reference's temp tables) only when a
-  *     secondary condition actually references them.
+  *   - every analysed condition cached once, as the reference stores
+  *     each one in a temp table and reads it once: the summary, the
+  *     parquet write, the timeline and secondary references all read
+  *     that cache, which [[release]] drops per sheet.
   */
 /** @param packChunkHours time-chunk width for the skew-resistant pack
   *   (one week by default): readings are packed within (block, chunk)
@@ -185,9 +187,6 @@ final class TsaEngine(spark: SparkSession, maxMinutes: Int = 30,
 
     // Evaluate in topo order; register results for secondary refs.
     val results = Vector.newBuilder[ConditionResult]
-    val referenced: Set[String] = runnable.flatMap(_.blocks.collect {
-      case s: SecondaryBlock => s.sourceView
-    }).toSet
 
     for (spec <- order) {
       val errs = errsOf(spec)
@@ -213,14 +212,12 @@ final class TsaEngine(spark: SparkSession, maxMinutes: Int = 30,
               }
           }
           val blockRanges = parts.reduce(_ union _)
-          var data = ConditionEval.evalCondition(
-            blockRanges, spec.blocks.map(_.alias), spec.expr)
-          // Materialize only what secondary conditions will re-read —
-          // the reference's temp tables (tsa/condition.py:329-338).
-          if (referenced.contains(spec.idString)) {
-            data = data.cache()
-            persisted += data
-          }
+          // Cache every condition once — the reference's temp tables
+          // (tsa/condition.py:329-338): its first action evaluates it and
+          // every later action or secondary reference reads the cache.
+          val data = ConditionEval.evalCondition(
+            blockRanges, spec.blocks.map(_.alias), spec.expr).cache()
+          persisted += data
           catalog(spec.idString) = data
           results += ConditionResult(spec, data, ConditionEval.summarize(data), errs)
         } catch {

@@ -87,6 +87,21 @@ class TsaBatchSpec extends AnyFunSuite with SparkTest {
     val e = intercept[RuntimeException](TsaBatch.main(Array(
       "--input", sheets.toString, "--dryvalidate", "--log", "loud")))
     assert(e.getMessage.contains("--log"))
+    // a full run logs the reference's per-sheet timing line
+    // (tsa/cond_collection.py:434-436)
+    import spark.implicits._
+    val t0 = java.time.Instant.parse("2018-02-01T00:00:00Z")
+    val obsPath = dir.resolve("obs.parquet").toString
+    (0 until 24).map(h => (java.sql.Timestamp.from(t0.plusSeconds(h * 3600L)),
+      1120L, 27L, if (h % 3 == 0) 8.0 else 2.0))
+      .toDF("tfrom", "statid", "seid", "seval").write.parquet(obsPath)
+    TsaBatch.configureLogging("info", dir.resolve("res").toString, "logspec")
+    TsaBatch.run(spark, TsaBatch.readInput(sheets.toString), obsPath,
+      dir.resolve("res").toString, "logspec")
+    val fetched = Files.readString(logFile).linesIterator
+      .filter(_.contains("Results fetched in")).toVector
+    assert(fetched.size == 1, Files.readString(logFile).take(2000))
+    assert(fetched.head.contains("INFO") && fetched.head.contains("(sheet demo)"), fetched)
     // restore the suite's quiet default — configureLogging moved the
     // root level, which would otherwise spam later suites
     org.apache.logging.log4j.core.config.Configurator.setRootLevel(
@@ -322,6 +337,48 @@ class TsaBatchSpec extends AnyFunSuite with SparkTest {
       // block lanes are half-alpha like the reference (alpha 50%)
       assert(slide.contains("""<a:alpha val="50000"/>"""), "no alpha-50 block lane")
     } finally zf.close()
+  }
+
+  test("a condition past the timeline bound gets no plot and an error message") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("tsabatch_bound")
+    val t0 = java.time.Instant.parse("2018-02-01T00:00:00Z")
+    val obsPath = dir.resolve("obs.parquet").toString
+    (0 until 48).map(h => (java.sql.Timestamp.from(t0.plusSeconds(h * 3600L)),
+      1120L, 27L, if (h % 3 == 0) 8.0 else 2.0))
+      .toDF("tfrom", "statid", "seid", "seval").write.parquet(obsPath)
+    val out = dir.resolve("out").toString
+    Files.createDirectories(Paths.get(out))
+    val sheet =
+      """"start","end"
+        |"1.2.2018","28.2.2018"
+        |"site","master_alias","condition"
+        |"Testi","A1","s1120#keli_1 = 8"
+        |""".stripMargin
+    TsaBatch.run(spark, Vector("demo" -> sheet), obsPath, out, "bound",
+      pptx = true, svg = true, png = true, timelineMaxRows = 3)
+
+    // the summary and the condition parquet are still written
+    val summary = Files.readAllLines(Paths.get(s"$out/bound_summary.csv"))
+    assert(summary.size == 2)
+    val nRows = summary.get(1).split(",").last.toLong
+    assert(nRows > 3, summary)
+    assert(spark.read.parquet(s"$out/conditions/testi_a1").count() == nRows)
+    // no plot; the slide keeps its table but has no timeline shapes
+    assert(!Files.exists(Paths.get(s"$out/plots/demo_testi_a1.svg")))
+    assert(!Files.exists(Paths.get(s"$out/plots/demo_testi_a1.png")))
+    val zf = new java.util.zip.ZipFile(s"$out/bound.pptx")
+    val slide = try {
+      val in = zf.getInputStream(zf.getEntry("ppt/slides/slide1.xml"))
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    } finally zf.close()
+    assert(slide.contains("Voimassa") && !slide.contains("F03B20"))
+    assert(slide.contains("timeline bound"))
+    // the condition's error node says why
+    val errors = Files.readString(Paths.get(s"$out/bound_ERRORS.json"))
+    assert(errors.contains("testi_a1") &&
+      errors.contains(s"Timeline not drawn: $nRows result rows exceed the 3-row timeline bound"),
+      errors)
   }
 
   test("--pptx-template fills the reference's own report template") {

@@ -96,7 +96,7 @@ class ReleaseSpec extends AnyFunSuite with SparkTest {
     val engine = new TsaEngine(spark)
     val results = run(engine)
     results.foreach(r => r.data.count()) // materialize (populates caches)
-    // packed + the referenced a1 are cached
+    // packed + every analysed condition are cached
     assert(!spark.sharedState.cacheManager.isEmpty)
     assert(engine.catalog.keySet == Set("testi_a1", "testi_b1"))
 
@@ -109,5 +109,48 @@ class ReleaseSpec extends AnyFunSuite with SparkTest {
     assert(engine.catalog.isEmpty)
     assert(spark.sharedState.cacheManager.isEmpty,
       "engine caches must not outlive release()")
+  }
+
+  test("a cross-sheet reference reads the kept condition's loaded cache") {
+    spark.sharedState.cacheManager.clearCache()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    def sheet(title: String, rows: String) = {
+      val p = SheetParser.parse(title,
+        s"""start,end
+          |1.2.2018,28.2.2018
+          |site,master_alias,condition
+          |$rows
+          |""".stripMargin)
+      assert(p.conditionErrors.isEmpty)
+      p.spec.get
+    }
+    val a1 = """Testi,A1,"s1120#keli_1 in (7, 8)""""
+    // nothing in sheet 1 references a1; only sheet 2 does
+    val sheet1 = sheet("one", s"$a1\nTesti,C1,s1120#keli_1 = 2")
+    val x1 = "Muu,X1,not testi#a1"
+    val engine = new TsaEngine(spark)
+    val r1 = engine.run(sheet1, obs, Map("keli_1" -> 27))
+    r1.foreach(_.summary.collect())
+    // the pack plus one cache per analysed condition
+    assert((sc.getPersistentRDDs.keySet -- before).size == r1.size + 1)
+
+    engine.release(keep = Set("testi_a1"))
+    val kept = spark.sharedState.cacheManager.lookupCachedData(
+      engine.catalog("testi_a1").asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+    assert(kept.exists(_.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded),
+      "the kept condition lost its loaded cache")
+    // the pack and c1 are unpersisted: the kept frame's cache is the
+    // only one this engine still holds
+    val keptRdd = kept.get.cachedRepresentation.cacheBuilder.cachedColumnBuffers.id
+    assert(sc.getPersistentRDDs.keySet -- before == Set(keptRdd))
+
+    val crossSheet = engine.run(sheet("two", x1), obs, Map("keli_1" -> 27))
+    val single = new TsaEngine(spark)
+    val fresh = single.run(sheet("both", s"$a1\n$x1"), obs, Map("keli_1" -> 27))
+    val want = fresh.find(_.spec.idString == "muu_x1").get.summary.collect().toSeq
+    assert(crossSheet.head.summary.collect().toSeq == want)
+    engine.release()
+    single.release()
   }
 }
