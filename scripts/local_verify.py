@@ -12,10 +12,14 @@ sorts columns by name, sorts rows, and compares values.
 each value after canonicalization) — bit-faithful to the driver's
 hash, which fails on rendering divergences that value-compare equal:
 IEEE `-0.0 == 0.0` passes np.allclose but renders differently
-(exactly the round-10 q_embed_cov miss). Self-test:
-`python3 scripts/local_verify.py --selftest`.
+(exactly the round-10 q_embed_cov miss).
+
+`--gates a,b,...` checks only the named gates, for a targeted Verify
+dump (`runMain graft.Verify <sfDir> <out> a,b,...`): a named gate
+without output still FAILs, a name with no oracle entry is an error
+(exit 2). Self-test: `python3 scripts/local_verify.py --selftest`.
 """
-import sys, os, json, glob, hashlib
+import sys, os, json, glob, hashlib, tempfile, contextlib, io
 import duckdb
 import pandas as pd
 import numpy as np
@@ -105,14 +109,33 @@ def selftest():
     err = compare("t", a, b, hash_mode=True)
     assert err and "HASH" in err and "-0.0" in err, f"hash mode must catch -0.0: {err}"
     print("selftest OK: hash mode distinguishes -0.0 from 0.0; value mode does not")
+    # --gates: a targeted dump of q_a; q_b has an oracle but no output
+    with tempfile.TemporaryDirectory() as out:
+        json.dump({"q_a": "SELECT 1 AS x", "q_b": "SELECT 2 AS x"},
+                  open(os.path.join(out, "oracle_sql.json"), "w"))
+        os.makedirs(os.path.join(out, "q_a"))
+        pd.DataFrame({"x": [1]}).to_parquet(os.path.join(out, "q_a", "part-0.parquet"))
+        with contextlib.redirect_stdout(io.StringIO()):
+            assert verify(out, out, False, ["q_a"]) == (1, 0), "named dumped gate must pass"
+            assert verify(out, out, False, ["q_a", "q_b"]) == (1, 1), "named gate without output must FAIL"
+            assert verify(out, out, False, None) == (1, 1), "no --gates checks every oracle gate"
+        try:
+            verify(out, out, False, ["q_a", "q_typo"])
+            raise AssertionError("an unknown gate name must be an error")
+        except ValueError as e:
+            assert "q_typo" in str(e), e
+    print("selftest OK: --gates checks only named gates, fails a named gate without output, rejects unknown names")
     sys.exit(0)
 
-def main():
-    if sys.argv[1:] == ["--selftest"]:
-        selftest()
-    args = [a for a in sys.argv[1:] if a != "--hash"]
-    hash_mode = "--hash" in sys.argv[1:]
-    sf_dir, out_dir = args[0], args[1]
+def verify(sf_dir, out_dir, hash_mode, gates):
+    """Check the dump in `out_dir` against the oracle; `gates` (None =
+    every oracle gate) restricts the check. Returns (n_ok, n_bad)."""
+    oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
+    if gates is not None:
+        unknown = sorted(set(gates) - set(oracle))
+        if unknown:
+            raise ValueError(f"unknown gate(s) {', '.join(unknown)}: no oracle_sql.json entry")
+        oracle = {g: oracle[g] for g in gates}
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
@@ -120,7 +143,6 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}/*.parquet')")
         elif os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     n_ok = n_bad = 0
     for name, sql in sorted(oracle.items()):
         pdir = os.path.join(out_dir, name)
@@ -137,14 +159,35 @@ def main():
             print(f"FAIL {name}: {err}"); n_bad += 1
         else:
             print(f"OK   {name} ({len(spark_df)} rows)"); n_ok += 1
-    # queries without oracle → rows-only check
-    for pdir in sorted(glob.glob(os.path.join(out_dir, "*"))):
-        name = os.path.basename(pdir)
-        if not os.path.isdir(pdir) or name in oracle:
-            continue
-        files = glob.glob(os.path.join(pdir, "*.parquet"))
-        rows = sum(pd.read_parquet(f).shape[0] for f in files) if files else 0
-        print(f"ROWS {name}: {rows}")
+    if gates is None:
+        # queries without oracle → rows-only check
+        for pdir in sorted(glob.glob(os.path.join(out_dir, "*"))):
+            name = os.path.basename(pdir)
+            if not os.path.isdir(pdir) or name in oracle:
+                continue
+            files = glob.glob(os.path.join(pdir, "*.parquet"))
+            rows = sum(pd.read_parquet(f).shape[0] for f in files) if files else 0
+            print(f"ROWS {name}: {rows}")
+    return n_ok, n_bad
+
+def main():
+    argv = sys.argv[1:]
+    if argv == ["--selftest"]:
+        selftest()
+    hash_mode = "--hash" in argv
+    gates = None
+    if "--gates" in argv:
+        i = argv.index("--gates")
+        if i + 1 >= len(argv):
+            sys.exit("--gates needs a comma-separated list of gate names")
+        gates = [g for g in argv[i + 1].split(",") if g]
+        del argv[i:i + 2]
+    args = [a for a in argv if a != "--hash"]
+    sf_dir, out_dir = args[0], args[1]
+    try:
+        n_ok, n_bad = verify(sf_dir, out_dir, hash_mode, gates)
+    except ValueError as e:
+        print(f"ERROR {e}"); sys.exit(2)
     print(f"== {n_ok} ok, {n_bad} bad ==")
     sys.exit(1 if n_bad else 0)
 

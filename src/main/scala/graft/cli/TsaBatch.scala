@@ -413,18 +413,25 @@ object TsaBatch {
     dest
   }
 
-  private def parseArgs(args: Array[String]): Map[String, String] = {
+  private val SwitchFlags = Seq("dryvalidate", "xlsx", "pptx", "svg", "png")
+  private val ValueFlags = Seq("input", "obs", "out", "name", "log", "pptx-template")
+
+  /** A misspelt flag (`--pptx-templat t.pptx`) is an error naming the
+    * known flags, never silently dropped.
+    */
+  private[cli] def parseArgs(args: Array[String]): Map[String, String] = {
     val out = scala.collection.mutable.Map.empty[String, String]
     var i = 0
     while (i < args.length) {
       args(i) match {
-        case "--dryvalidate" => out("dryvalidate") = "true"; i += 1
-        case "--xlsx" => out("xlsx") = "true"; i += 1
-        case "--pptx" => out("pptx") = "true"; i += 1
-        case "--svg" => out("svg") = "true"; i += 1
-        case "--png" => out("png") = "true"; i += 1
-        case flag if flag.startsWith("--") && i + 1 < args.length =>
-          out(flag.drop(2)) = args(i + 1); i += 2
+        case f if f.startsWith("--") && SwitchFlags.contains(f.drop(2)) =>
+          out(f.drop(2)) = "true"; i += 1
+        case f if f.startsWith("--") && ValueFlags.contains(f.drop(2)) =>
+          if (i + 1 >= args.length) sys.error(s"$f needs a value")
+          out(f.drop(2)) = args(i + 1); i += 2
+        case f if f.startsWith("--") =>
+          sys.error(s"unknown flag $f; known flags: " +
+            (SwitchFlags ++ ValueFlags).map("--" + _).mkString(" "))
         case other => sys.error(s"unexpected argument: $other")
       }
     }

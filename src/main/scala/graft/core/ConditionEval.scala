@@ -17,7 +17,10 @@ import graft.model.Expr
   * boundaries, block k covers master range [t_i, t_{i+1}) iff the last
   * open/close event of block k at or before t_i is an "open". That turns
   * the N-way range join into one pivot + one window over the boundary
-  * grid — O(B·k) rows, one sort, no quadratic blow-up.
+  * grid — O(B·k) rows, no quadratic blow-up. The ranges are read once
+  * (one explode emits both events of a range) and shuffled once, by
+  * time chunk; the pivot, the fill window and the per-chunk carry all
+  * reuse that partitioning.
   */
 object ConditionEval {
 
@@ -54,23 +57,12 @@ object ConditionEval {
         .orderBy("vfrom")
     }
 
-    // R10: boundary events. Every range contributes an "open" at vfrom
-    // (priority 1, carrying the 3VL-encoded value) and a "close" at
-    // vuntil (priority 0). At an equal timestamp an open shadows a close
-    // (adjacent ranges), resolved by max(struct(prio, v)).
-    val opens = blockRanges.select(
-      col("vfrom").as("vt"), col("alias"),
-      struct(lit(1).as("prio"),
-        coalesce(col("istrue").cast("int"), lit(-1)).as("v")).as("ev"))
-    val closes = blockRanges.select(
-      col("vuntil").as("vt"), col("alias"),
-      struct(lit(0).as("prio"), lit(null).cast("int").as("v")).as("ev"))
-    val events = opens.union(closes)
-
-    // Pivot to one column per block alias; grid rows are the distinct
-    // boundary timestamps (the reference's UNION-dedup, R10).
-    val grid = events.groupBy("vt").pivot("alias", aliases).agg(max(col("ev")))
-
+    // R10: boundary events from ONE explode (one scan of the ranges).
+    // Every range contributes an "open" at vfrom (priority 1, carrying
+    // the 3VL-encoded value) and a "close" at vuntil (priority 0). At an
+    // equal timestamp an open shadows a close (adjacent ranges),
+    // resolved by max(struct(prio, v)).
+    //
     // Chunk-then-stitch forward fill — the same layout as
     // PackRanges.packKeyedChunked. A bare Window.orderBy("vt") (what the
     // reference's ORDER BY vt does, tsa/condition.py:374-380) would move
@@ -79,24 +71,35 @@ object ConditionEval {
     // scale that single key is the bottleneck. Instead: fill locally
     // within time chunks (parallel), then resolve each chunk's carry-in
     // value and trailing lead from a per-chunk summary that has one row
-    // per CHUNK (thousands of times smaller than the grid).
+    // per CHUNK (thousands of times smaller than the grid). The events
+    // shuffle once, by chunk; the pivot, the fill window and the
+    // per-chunk summary group within a chunk and add no exchange.
     val chunkSec = chunkHours * 3600L
+    val events = blockRanges
+      .select(col("alias"), explode(array(
+        struct(col("vfrom").as("vt"), struct(lit(1).as("prio"),
+          coalesce(col("istrue").cast("int"), lit(-1)).as("v")).as("ev")),
+        struct(col("vuntil").as("vt"), struct(lit(0).as("prio"),
+          lit(null).cast("int").as("v")).as("ev")))).as("e"))
+      .select(col("alias"), col("e.vt").as("vt"), col("e.ev").as("ev"))
+      .withColumn("chunk", floor(unix_timestamp(col("vt")) / lit(chunkSec)))
+      .repartition(col("chunk"))
+
+    // Pivot to one column per block alias; grid rows are the distinct
+    // boundary timestamps (the reference's UNION-dedup, R10).
+    val grid = events.groupBy("chunk", "vt").pivot("alias", aliases).agg(max(col("ev")))
+
     val wc = Window.partitionBy("chunk").orderBy("vt")
     val fillLocal = wc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    val gridC = grid.withColumn("chunk",
-      floor(unix_timestamp(col("vt")) / lit(chunkSec)))
-    var df = gridC
-    for (a <- aliases)
-      df = df.withColumn(s"__f_$a", last(col(a), ignoreNulls = true).over(fillLocal))
-    df = df.withColumn("__lead_local", lead(col("vt"), 1).over(wc))
+    val filled = grid.select(col("*") +: lead(col("vt"), 1).over(wc).as("__lead_local") +:
+      aliases.map(a => last(col(a), ignoreNulls = true).over(fillLocal).as(s"__f_$a")): _*)
 
     // Per-chunk summary: the chunk's min(vt) and, per alias, the latest
     // non-null event (= what forward fill carries out of the chunk) —
-    // ONE partial-aggregated groupBy over the raw grid, no extra window
-    // sort pass. vt is unique within the grid, so max_by is
-    // deterministic; all-null chunks yield null (carry falls through).
-    val summary = gridC.groupBy("chunk").agg(
+    // ONE groupBy over the raw grid, no extra window sort pass. vt is
+    // unique within the grid, so max_by is deterministic; all-null
+    // chunks yield null (carry falls through).
+    val summary = grid.groupBy("chunk").agg(
       min(col("vt")).as("cmin"),
       aliases.map(a =>
         max_by(col(a), when(col(a).isNotNull, col("vt"))).as(s"__co_$a")): _*)
@@ -105,17 +108,14 @@ object ConditionEval {
     // constant the optimizer can't fold away (lit(0) would be removed
     // from the spec, reverting to an unpartitioned window).
     val ws = Window.partitionBy(pmod(col("chunk"), lit(1))).orderBy("chunk")
-    var carry = summary.withColumn("__next_cmin", lead(col("cmin"), 1).over(ws))
-    for (a <- aliases)
-      carry = carry.withColumn(s"__ci_$a",
-        last(col(s"__co_$a"), ignoreNulls = true)
-          .over(ws.rowsBetween(Window.unboundedPreceding, -1)))
-    carry = carry.select(
-      col("chunk") +: col("__next_cmin") +: aliases.map(a => col(s"__ci_$a")): _*)
+    val carry = summary.select(
+      col("chunk") +: lead(col("cmin"), 1).over(ws).as("__next_cmin") +:
+        aliases.map(a => last(col(s"__co_$a"), ignoreNulls = true)
+          .over(ws.rowsBetween(Window.unboundedPreceding, -1)).as(s"__ci_$a")): _*)
 
     // R11: consecutive boundary pairs; a chunk's last row closes at the
     // next chunk's first boundary; drop the trailing open range.
-    df = df.join(broadcast(carry), Seq("chunk"))
+    val df = filled.join(broadcast(carry), Seq("chunk"))
       .withColumn("vuntil", coalesce(col("__lead_local"), col("__next_cmin")))
       .filter(col("vuntil").isNotNull)
 

@@ -17,7 +17,8 @@ import scala.collection.mutable
   *     user orders secondaries" rule;
   *   - ALL primary blocks of the whole collection packed in ONE
   *     observation pass (broadcast key tagging + window partitioned by
-  *     block id) instead of one Postgres call per block;
+  *     block id) instead of one Postgres call per block; a condition
+  *     reads all its primary blocks back in one filtered scan of it;
   *   - every analysed condition cached once, as the reference stores
   *     each one in a temp table and reads it once: the summary, the
   *     parquet write, the timeline and secondary references all read
@@ -195,23 +196,31 @@ final class TsaEngine(spark: SparkSession, maxMinutes: Int = 30,
         results += ConditionResult(spec, null, null, errs)
       } else {
         try {
-          val parts: Vector[DataFrame] = spec.blocks.map {
-            case p: PrimaryBlock =>
-              packed.filter(col("block_id") === blockIdOf((spec.idString, p.alias)))
-                .select(lit(p.alias).as("alias"), col("vfrom"), col("vuntil"), col("istrue"))
-            case s: SecondaryBlock =>
-              catalog.get(s.sourceView) match {
-                case Some(df) =>
-                  // R9: a secondary block reads the referenced condition's
-                  // master ranges (tsa/block.py:204-209).
-                  df.select(lit(s.alias).as("alias"), col("vfrom"), col("vuntil"),
-                    col("master").as("istrue"))
-                case None =>
-                  throw new NoSuchElementException(
-                    s"""referenced condition "${s.sourceView}" does not exist""")
-              }
+          // All primary blocks of the condition in ONE filtered scan of
+          // the pack, block_id mapped back to the block alias.
+          val ids = spec.blocks.collect {
+            case p: PrimaryBlock => blockIdOf((spec.idString, p.alias)) -> p.alias
           }
-          val blockRanges = parts.reduce(_ union _)
+          val primary = ids.headOption.map { case (id0, a0) =>
+            val alias = ids.tail.foldLeft(when(col("block_id") === id0, a0)) {
+              case (c, (id, a)) => c.when(col("block_id") === id, a)
+            }
+            packed.filter(col("block_id").isin(ids.map(_._1): _*))
+              .select(alias.as("alias"), col("vfrom"), col("vuntil"), col("istrue"))
+          }
+          val secondary = spec.blocks.collect { case s: SecondaryBlock =>
+            catalog.get(s.sourceView) match {
+              case Some(df) =>
+                // R9: a secondary block reads the referenced condition's
+                // master ranges (tsa/block.py:204-209).
+                df.select(lit(s.alias).as("alias"), col("vfrom"), col("vuntil"),
+                  col("master").as("istrue"))
+              case None =>
+                throw new NoSuchElementException(
+                  s"""referenced condition "${s.sourceView}" does not exist""")
+            }
+          }
+          val blockRanges = (primary ++: secondary).reduce(_ union _)
           // Cache every condition once — the reference's temp tables
           // (tsa/condition.py:329-338): its first action evaluates it and
           // every later action or secondary reference reads the cache.

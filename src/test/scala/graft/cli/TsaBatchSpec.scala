@@ -460,4 +460,17 @@ class TsaBatchSpec extends AnyFunSuite with SparkTest {
     }
     assert(ex.getMessage.contains("HEADER_IDX 17") || ex.getMessage.contains("required placeholders"))
   }
+
+  test("an unknown flag is rejected with the known flags listed, before any work") {
+    // a typo of --pptx-template must not silently drop the template
+    val e = intercept[RuntimeException](TsaBatch.main(Array(
+      "--input", "no-such-dir", "--dryvalidate",
+      "--pptx-templat", "t.pptx")))
+    assert(e.getMessage.contains("unknown flag --pptx-templat"), e.getMessage)
+    assert(e.getMessage.contains("--pptx-template") && e.getMessage.contains("--obs"), e.getMessage)
+    val noValue = intercept[RuntimeException](TsaBatch.parseArgs(Array("--input", "x", "--out")))
+    assert(noValue.getMessage.contains("--out needs a value"), noValue.getMessage)
+    assert(TsaBatch.parseArgs(Array("--input", "x", "--xlsx", "--pptx-template", "t.pptx")) ==
+      Map("input" -> "x", "xlsx" -> "true", "pptx-template" -> "t.pptx"))
+  }
 }

@@ -167,6 +167,56 @@ class TsaEngineSpec extends AnyFunSuite with SparkTest {
     assert(s2.getAs[Long]("nodata_s") == 2100L)
   }
 
+  test("one pack scan per condition maps block ids back to the right aliases") {
+    import spark.implicits._
+    import graft.dsl.{ConditionParser, ErrorCollector}
+    import org.apache.spark.sql.functions.lit
+    // keli values cross both bounds of `> 1 and < 5`; the two blocks
+    // share (station, sensor), so tagKeyed duplicates every keli reading
+    val obs = (
+      Seq(0L -> 0.0, 10L -> 3.0, 20L -> 8.0, 30L -> 3.0, 45L -> 0.5, 60L -> 4.0, 70L -> 9.0, 95L -> 2.0)
+        .map { case (m, v) => (ts(m), 1120L, 27L, v) } ++
+        Seq(0L -> -5.0, 25L -> 2.0, 50L -> -5.0, 80L -> -1.0, 95L -> 1.0)
+          .map { case (m, v) => (ts(m), 1120L, 3L, v) }
+      ).toDF("tfrom", "statid", "seid", "seval")
+    val errs = new ErrorCollector("test")
+    val a1 = ConditionParser.parse("Testi", "A1", "s1120#tie_1 < 0", errs).get
+    val b1 = ConditionParser.parse("Testi", "B1",
+      "s1120#keli_1 > 1 and s1120#keli_1 < 5 and testi#a1", errs).get
+    assert(errs.isEmpty, errs.shortStr)
+    val coll = CollectionSpec("sheet1",
+      java.time.LocalDateTime.of(2018, 2, 1, 0, 0, 0),
+      java.time.LocalDateTime.of(2018, 2, 28, 23, 59, 59), Vector(a1, b1))
+    val sensorIds = Map("keli_1" -> 27, "tie_1" -> 3)
+    val byId = new graft.engine.TsaEngine(spark).run(coll, obs, sensorIds)
+      .map(r => r.spec.idString -> r).toMap
+    val got = byId("testi_b1").data
+
+    // reference: the same pack, read one `block_id === i` filter per
+    // primary block (ids in topo order, as the engine numbers them)
+    val prims = Vector(a1, b1).flatMap(c => c.blocks.collect { case p: PrimaryBlock => (c.idString, p) })
+    val packed = PackRanges.packKeyedChunked(obs,
+      prims.zipWithIndex.map { case ((_, p), i) =>
+        PackRanges.KeyedBlock(i, p.stationId.toLong, sensorIds(p.sensorName).toLong,
+          PackRanges.predicate(col("seval"), p.op, p.values))
+      }, 30, 24 * 7)
+    val parts = b1.blocks.map {
+      case p: PrimaryBlock =>
+        packed.filter(col("block_id") === prims.indexOf((b1.idString, p)))
+          .select(lit(p.alias).as("alias"), col("vfrom"), col("vuntil"), col("istrue"))
+      case s: SecondaryBlock =>
+        byId("testi_a1").data.select(lit(s.alias).as("alias"), col("vfrom"), col("vuntil"),
+          col("master").as("istrue"))
+    }
+    val aliases = b1.blocks.map(_.alias)
+    val want = ConditionEval.evalCondition(parts.reduce(_ union _), aliases, b1.expr)
+    assert(got.columns.toSeq == want.columns.toSeq)
+    val wantRows = want.collect().toSeq
+    // the two keli blocks disagree somewhere, so a swapped mapping shows
+    assert(wantRows.exists(r => r.getAs[Any](aliases(0)) != r.getAs[Any](aliases(1))), wantRows)
+    assert(got.collect().toSeq == wantRows)
+  }
+
   test("cycle between secondary conditions recorded, both skipped") {
     import spark.implicits._
     import graft.dsl.{ConditionParser, ErrorCollector}

@@ -3,6 +3,12 @@ package graft.engine
 import graft.SparkTest
 import graft.dsl.SheetParser
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -12,9 +18,10 @@ import scala.jdk.CollectionConverters._
 /** Evaluate-once regression: every analysed condition is cached, so
   * the report's later actions on a condition (parquet write, timeline
   * collect) read that cache instead of evaluating the condition again.
-  * Counted in shuffle-map stages, not time.
+  * Counted in shuffle-map stages, not time. The plan-shape test pins
+  * what one evaluation costs: one pack scan and one shuffle per branch.
   */
-class EvalOnceSpec extends AnyFunSuite with SparkTest {
+class EvalOnceSpec extends AnyFunSuite with SparkTest with AdaptiveSparkPlanHelper {
 
   private val t0 = 1517443200L // 2018-02-01T00:00:00Z
   private def ts(h: Long): Timestamp = new Timestamp((t0 + h * 3600) * 1000)
@@ -90,5 +97,47 @@ class EvalOnceSpec extends AnyFunSuite with SparkTest {
     assert(later.isEmpty, s"later actions re-ran shuffle-map stages $later")
     engine.release()
     assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("a multi-block condition scans the pack once per grid branch and shuffles once, by chunk") {
+    val sheet =
+      """start,end
+        |1.2.2018,28.2.2018
+        |site,master_alias,condition
+        |Testi,A1,"s1120#keli_1 = 8 and s1120#tie_1 < 0 and s1120#keli_1 in (2, 8)"
+        |""".stripMargin
+    val parsed = SheetParser.parse("shape", sheet)
+    assert(parsed.conditionErrors.isEmpty)
+    val engine = new TsaEngine(spark)
+    val data = engine.run(parsed.spec.get, obs, Map("keli_1" -> 27, "tie_1" -> 3)).head.data
+    // the plan the condition's cache executes (AQE's initial plan;
+    // the helper's collect descends into it)
+    val plan: SparkPlan = data.queryExecution.withCachedData
+      .collectFirst { case r: InMemoryRelation => r }.get.cacheBuilder.cachedPlan
+    def hashKeys(e: ShuffleExchangeExec): Option[Seq[String]] = e.outputPartitioning match {
+      case h: HashPartitioning => Some(h.expressions.flatMap(_.references.map(_.name)))
+      case _ => None
+    }
+    def chunkExchanges(p: SparkPlan) =
+      collect(p) { case e: ShuffleExchangeExec if hashKeys(e).contains(Seq("chunk")) => e }
+
+    // the pack is the only cached relation this condition reads: one
+    // scan feeds the local fill, one the per-chunk summary
+    val packScans = collect(plan) { case s: InMemoryTableScanExec => s }
+    assert(packScans.size <= 2, s"${packScans.size} pack scans:\n${plan.treeString}")
+    // the boundary grid is never shuffled by timestamp
+    val byVt = collect(plan) { case e: ShuffleExchangeExec if hashKeys(e).exists(_.contains("vt")) => e }
+    assert(byVt.isEmpty, plan.treeString)
+    // below the carry (the single-partition window over chunks): one
+    // exchange on chunk, the events' own repartition — the pivot and
+    // the summary reuse it instead of adding their own
+    val carry = collect(plan) {
+      case w: WindowExec if w.windowExpression.exists(_.name == "__next_cmin") => w
+    }
+    assert(carry.size == 1, plan.treeString)
+    val belowCarry = chunkExchanges(carry.head)
+    assert(belowCarry.size == 1, plan.treeString)
+    assert(chunkExchanges(plan).forall(_.shuffleOrigin == REPARTITION_BY_COL), plan.treeString)
+    engine.release()
   }
 }
