@@ -31,14 +31,11 @@ object ConditionEval {
     *   [[PackRanges]], secondary from the result catalog)
     * @param aliases block aliases in condition order (pivot columns)
     * @param masterExpr boolean AST over the aliases
+    * @param chunkHours time-chunk width of the boundary grid
     * @return `(vfrom, vuntil, vdiff_s, <alias...>, master)` sorted by vfrom
     */
-  def evalCondition(blockRanges: DataFrame, aliases: Seq[String],
-                    masterExpr: Expr): DataFrame =
-    evalCondition(blockRanges, aliases, masterExpr, chunkHours = 24 * 7)
-
-  def evalCondition(blockRanges: DataFrame, aliases: Seq[String],
-                    masterExpr: Expr, chunkHours: Int): DataFrame = {
+  def evalCondition(blockRanges: DataFrame, aliases: Seq[String], masterExpr: Expr,
+                    chunkHours: Int = PackRanges.ChunkHours): DataFrame = {
     require(aliases.nonEmpty)
 
     // Single-block shortcut (tsa/condition.py:355-363; the reference's
@@ -63,8 +60,8 @@ object ConditionEval {
     // equal timestamp an open shadows a close (adjacent ranges),
     // resolved by max(struct(prio, v)).
     //
-    // Chunk-then-stitch forward fill — the same layout as
-    // PackRanges.packKeyedChunked. A bare Window.orderBy("vt") (what the
+    // Chunk-then-stitch forward fill — the same layout, chunk width and
+    // chunk index as PackRanges.pack. A bare Window.orderBy("vt") (what the
     // reference's ORDER BY vt does, tsa/condition.py:374-380) would move
     // the condition's entire boundary grid onto ONE partition; a
     // condition over hot stations spans the full analysis period, so at
@@ -74,7 +71,6 @@ object ConditionEval {
     // per CHUNK (thousands of times smaller than the grid). The events
     // shuffle once, by chunk; the pivot, the fill window and the
     // per-chunk summary group within a chunk and add no exchange.
-    val chunkSec = chunkHours * 3600L
     val events = blockRanges
       .select(col("alias"), explode(array(
         struct(col("vfrom").as("vt"), struct(lit(1).as("prio"),
@@ -82,7 +78,7 @@ object ConditionEval {
         struct(col("vuntil").as("vt"), struct(lit(0).as("prio"),
           lit(null).cast("int").as("v")).as("ev")))).as("e"))
       .select(col("alias"), col("e.vt").as("vt"), col("e.ev").as("ev"))
-      .withColumn("chunk", floor(unix_timestamp(col("vt")) / lit(chunkSec)))
+      .withColumn("chunk", PackRanges.chunkOf(col("vt"), chunkHours))
       .repartition(col("chunk"))
 
     // Pivot to one column per block alias; grid rows are the distinct

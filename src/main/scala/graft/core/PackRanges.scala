@@ -25,8 +25,8 @@ import graft.model.CmpOp
   * Spark-first restructuring (SURVEY.md §7.4 point 6): where the reference
   * calls pack_ranges once per block (one Postgres query each), we tag the
   * observation scan with a broadcast block-key table and compute ALL
-  * blocks in ONE windowed pass, partitioned by block id. At 100 TB this
-  * is the difference between k full scans and one.
+  * blocks in ONE windowed pass, partitioned by (block id, time chunk).
+  * At 100 TB this is the difference between k full scans and one.
   */
 object PackRanges {
 
@@ -70,10 +70,10 @@ object PackRanges {
       when(col("block_id") === id, p).otherwise(acc)
     }
 
-  /** Shared tagging prologue of both pack variants: pushable key
-    * pre-filter, broadcast of the (tiny) block-key table — rows matching
-    * several blocks duplicate per block; the reference would scan once
-    * per block — and the per-block `istrue` evaluation.
+  /** Tagging prologue of [[packKeyedChunked]]: pushable key pre-filter,
+    * broadcast of the (tiny) block-key table — rows matching several
+    * blocks duplicate per block; the reference would scan once per
+    * block — and the per-block `istrue` evaluation.
     */
   private[graft] def tagKeyed(obs: DataFrame, blocks: Seq[KeyedBlock]): DataFrame = {
     val spark = obs.sparkSession
@@ -85,132 +85,84 @@ object PackRanges {
       .withColumn("istrue", blockPred(blocks.map(b => b.blockId -> b.pred)))
   }
 
+  /** Time-chunk width of every batch pack and condition grid: one week. */
+  val ChunkHours: Int = 24 * 7
+
+  /** Chunk index of timestamp `t` at `chunkHours` per chunk. */
+  private[graft] def chunkOf(t: Column, chunkHours: Int): Column =
+    floor(unix_timestamp(t) / lit(chunkHours * 3600L))
+
   /** Pack all blocks in one pass over `obs(tfrom, statid, seid, seval)`.
     *
     * @return `(block_id, vfrom, vuntil, istrue)` — maximal constant-value
     *         ranges per block; `istrue` nullable (3VL).
     */
-  def packKeyed(obs: DataFrame, blocks: Seq[KeyedBlock], maxMinutes: Int): DataFrame =
-    pack(tagKeyed(obs, blocks), maxMinutes)
+  def packKeyedChunked(obs: DataFrame, blocks: Seq[KeyedBlock], maxMinutes: Int,
+                       chunkHours: Int = ChunkHours): DataFrame =
+    pack(tagKeyed(obs, blocks), maxMinutes, chunkHours)
 
-  /** Generic-tagging variant: each spec carries an arbitrary row filter
-    * (used where block keys are not simple equalities). Explodes one row
-    * per matching spec — use [[packKeyed]] on large scans.
-    */
-  final case class TaggedBlock(blockId: Int, filter: Column, pred: Column)
-  def packTagged(obs: DataFrame, blocks: Seq[TaggedBlock], maxMinutes: Int): DataFrame = {
-    val tagged = obs
-      .withColumn("block_id", explode(array(
-        blocks.map(b => when(b.filter, lit(b.blockId))): _*)))
-      .filter(col("block_id").isNotNull)
-    pack(tagged.withColumn("istrue",
-      blockPred(blocks.map(b => b.blockId -> b.pred))), maxMinutes)
-  }
-
-  /** Skew-resistant variant for very hot keys: a single block's series
-    * at 100 TB can hold billions of readings — one window partition per
-    * block (the [[packKeyed]] layout, and what the reference's global
-    * ORDER BY does) would bottleneck on that key. Here readings are
-    * packed WITHIN (block, time-chunk) partitions in parallel, then the
-    * partial islands (run-length compressed, orders of magnitude
-    * smaller) are stitched across chunk borders by one cheap second
-    * pass. Provably equivalent to [[packKeyed]]:
+  /** Pack over a pre-tagged frame with columns `(block_id, tfrom, istrue)`.
+    *
+    * Skew-resistant layout: a single block's series at 100 TB can hold
+    * billions of readings, and one window partition per block (what the
+    * reference's global ORDER BY does) would bottleneck on that key.
+    * Readings are packed WITHIN (block, time-chunk) partitions in
+    * parallel, then the partial islands (run-length compressed, orders
+    * of magnitude smaller) are stitched across chunk borders by one
+    * cheap second pass. One shuffle feeds each pass; the input is read
+    * once. The result does not depend on `chunkHours`:
     *   - each chunk-local lead equals the global lead, except the last
-    *     reading per chunk, whose lead is supplied by joining the next
-    *     non-empty chunk's min(tfrom);
+    *     reading per chunk, whose lead is the next non-empty chunk's
+    *     first reading — the vfrom of the next partial island;
     *   - value-keyed island merging is associative over ordered runs, so
     *     merging partial islands re-creates the global islands.
-    * (Equivalence is property-tested against packKeyed.)
+    * (Property-tested: 1-hour chunks == one chunk spanning the series.)
     */
-  def packKeyedChunked(obs: DataFrame, blocks: Seq[KeyedBlock], maxMinutes: Int,
-                       chunkHours: Int = 24): DataFrame = {
-    val chunkSec = chunkHours * 3600L
-    val withChunk = tagKeyed(obs, blocks)
-      .withColumn("chunk", (unix_timestamp(col("tfrom")) / chunkSec).cast("long"))
+  def pack(tagged: DataFrame, maxMinutes: Int, chunkHours: Int = ChunkHours): DataFrame = {
+    val cap = expr(s"INTERVAL '$maxMinutes' MINUTE")
 
-    // lead within (block, chunk); last row per chunk borrows the next
-    // non-empty chunk's first timestamp
+    // Partial islands within each chunk, parallel across chunks.
+    // R4: validity interval = [tfrom, lead(tfrom)); a chunk's last reading
+    // has no lead yet, so its island stays `open`. R5: cap at maxMinutes.
+    // R6: 3VL encode so NULL forms its own runs. R7: islands on value
+    // change only (gaps do NOT break runs — matches the reference, which
+    // stitches lower(first)..upper(last) of each run).
     val wc = Window.partitionBy("block_id", "chunk").orderBy("tfrom")
-    val chunkMins = withChunk.groupBy("block_id", "chunk")
-      .agg(min("tfrom").as("chunk_min"))
-    val wNext = Window.partitionBy("block_id").orderBy("chunk")
-    val nextMins = chunkMins
-      .withColumn("next_min", lead(col("chunk_min"), 1).over(wNext))
-      .select("block_id", "chunk", "next_min")
-
-    val ranges = withChunk
+    val leadLocal = col("lead_local")
+    val partial = tagged
+      .withColumn("chunk", chunkOf(col("tfrom"), chunkHours))
       .withColumn("lead_local", lead(col("tfrom"), 1).over(wc))
-      // borders are one row per (block, chunk) — broadcast keeps the
-      // reading stream on its existing (block, chunk) partitioning
-      // instead of re-shuffling it into a sort-merge join
-      .join(broadcast(nextMins), Seq("block_id", "chunk"))
-      .withColumn("tuntil_raw", coalesce(col("lead_local"), col("next_min")))
-      .filter(col("tuntil_raw").isNotNull)
-      .withColumn("tuntil",
-        least(col("tuntil_raw"),
-          col("tfrom") + expr(s"INTERVAL '$maxMinutes' MINUTE")))
       .withColumn("enc", coalesce(col("istrue").cast("int"), lit(-1)))
-
-    // partial islands within each chunk (parallel across chunks)
-    val partial = ranges
       .withColumn("chg",
         when(col("enc") === lag(col("enc"), 1).over(wc), lit(0)).otherwise(lit(1)))
       .withColumn("grp",
         sum(col("chg")).over(wc.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .groupBy(col("block_id"), col("chunk"), col("grp"))
-      .agg(min(col("tfrom")).as("vfrom"), max(col("tuntil")).as("vuntil"),
+      .agg(min(col("tfrom")).as("vfrom"),
+        // least() skips NULLs: the open reading must not contribute
+        max(when(leadLocal.isNotNull, least(leadLocal, col("tfrom") + cap))).as("vuntil"),
+        max(col("tfrom")).as("last_tfrom"),
+        max(leadLocal.isNull).as("open"),
         first(col("enc")).as("enc"))
 
-    // stitch: value-keyed merge over the (small) partial-island stream
+    // Stitch: an open island's last reading closes at the next partial
+    // island's vfrom (capped); the block's last reading has none and is
+    // dropped, and with it an island it alone forms. Then a value-keyed
+    // merge over the (small) partial-island stream.
     val wb = Window.partitionBy("block_id").orderBy("vfrom")
+    val nextFrom = lead(col("vfrom"), 1).over(wb)
     partial
+      .withColumn("vuntil", when(col("open") && nextFrom.isNotNull,
+        least(nextFrom, col("last_tfrom") + cap)).otherwise(col("vuntil")))
       .withColumn("chg",
         when(col("enc") === lag(col("enc"), 1).over(wb), lit(0)).otherwise(lit(1)))
       .withColumn("grp2",
         sum(col("chg")).over(wb.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .filter(col("vuntil").isNotNull)
       .groupBy(col("block_id"), col("grp2"))
       .agg(min(col("vfrom")).as("vfrom"), max(col("vuntil")).as("vuntil"),
         first(col("enc")).as("enc"))
       .select(col("block_id"), col("vfrom"), col("vuntil"),
-        when(col("enc") === 1, lit(true))
-          .when(col("enc") === 0, lit(false))
-          .otherwise(lit(null).cast("boolean")).as("istrue"))
-  }
-
-  /** Core pack over a pre-tagged frame with columns
-    * `(block_id, tfrom, istrue)`; one shuffle on block_id, two window
-    * passes sharing the same sort, one partial-aggregated groupBy.
-    */
-  def pack(tagged: DataFrame, maxMinutes: Int): DataFrame = {
-    val w = Window.partitionBy("block_id").orderBy("tfrom")
-
-    val ranges = tagged
-      // R4: validity interval = [tfrom, lead(tfrom)); last reading dropped
-      .withColumn("tuntil_raw", lead(col("tfrom"), 1).over(w))
-      .filter(col("tuntil_raw").isNotNull)
-      // R5: cap at maxMinutes
-      .withColumn("tuntil",
-        least(col("tuntil_raw"),
-          col("tfrom") + expr(s"INTERVAL '$maxMinutes' MINUTE")))
-      // R6: 3VL encode so NULL forms its own runs
-      .withColumn("enc", coalesce(col("istrue").cast("int"), lit(-1)))
-
-    // R7: islands on value change only (gaps do NOT break runs — matches
-    // the reference, which stitches lower(first)..upper(last) of each run)
-    val islands = ranges
-      .withColumn("chg",
-        when(col("enc") === lag(col("enc"), 1).over(w), lit(0)).otherwise(lit(1)))
-      .withColumn("grp",
-        sum(col("chg")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-
-    islands
-      .groupBy(col("block_id"), col("grp"))
-      .agg(
-        min(col("tfrom")).as("vfrom"),
-        max(col("tuntil")).as("vuntil"),
-        first(col("enc")).as("enc"))
-      .select(
-        col("block_id"), col("vfrom"), col("vuntil"),
         when(col("enc") === 1, lit(true))
           .when(col("enc") === 0, lit(false))
           .otherwise(lit(null).cast("boolean")).as("istrue"))

@@ -16,21 +16,16 @@ import scala.collection.mutable
   *     dangling-ref detection, superseding the fragile "primaries first,
   *     user orders secondaries" rule;
   *   - ALL primary blocks of the whole collection packed in ONE
-  *     observation pass (broadcast key tagging + window partitioned by
-  *     block id) instead of one Postgres call per block; a condition
+  *     observation pass (broadcast key tagging + windows partitioned by
+  *     block id and time chunk) instead of one Postgres call per block,
+  *     so a hot station's long series spreads over many tasks; a condition
   *     reads all its primary blocks back in one filtered scan of it;
   *   - every analysed condition cached once, as the reference stores
   *     each one in a temp table and reads it once: the summary, the
   *     parquet write, the timeline and secondary references all read
   *     that cache, which [[release]] drops per sheet.
   */
-/** @param packChunkHours time-chunk width for the skew-resistant pack
-  *   (one week by default): readings are packed within (block, chunk)
-  *   partitions in parallel and stitched at borders — see
-  *   [[graft.core.PackRanges.packKeyedChunked]].
-  */
-final class TsaEngine(spark: SparkSession, maxMinutes: Int = 30,
-                      packChunkHours: Int = 24 * 7) {
+final class TsaEngine(spark: SparkSession, maxMinutes: Int = 30) {
 
   /** Result catalog — the reference's session temp-table namespace
     * (`<site>_<master_alias>`, tsa/condition.py:317-414).
@@ -176,14 +171,9 @@ final class TsaEngine(spark: SparkSession, maxMinutes: Int = 30,
     val blockIdOf: Map[(String, String), Int] =
       primaries.zipWithIndex.map { case ((cid, p), i) => (cid, p.alias) -> i }.toMap
 
-    // Skew-resistant pack: one window partition per block (packKeyed)
-    // caps per-block parallelism at ONE task — a hot station's series
-    // over a long period is exactly the skewed key the chunked layout
-    // exists for (chunk-local islands in parallel, borders stitched from
-    // per-chunk partials; equivalence property-tested vs packKeyed).
     val packed =
       if (keyed.isEmpty) null
-      else PackRanges.packKeyedChunked(obsMain, keyed, maxMinutes, packChunkHours).cache()
+      else PackRanges.packKeyedChunked(obsMain, keyed, maxMinutes, PackRanges.ChunkHours).cache()
     if (packed != null) persisted += packed
 
     // Evaluate in topo order; register results for secondary refs.

@@ -56,8 +56,10 @@ object TsaQueries {
       |  FROM events GROUP BY 1, 2, 3)""".stripMargin
 
   /** pack_ranges CTE chain over `obs` for a given block-key VALUES list
-    * and per-block predicate CASE — mirrors PackRanges.pack step by step
-    * (lead → truncate+drop-last → 3VL encode → islands on value change).
+    * and per-block predicate CASE: the reference's unchunked steps (lead →
+    * truncate+drop-last → 3VL encode → islands on value change), one
+    * window per block. PackRanges.pack runs the same steps per time chunk
+    * and stitches at chunk borders, so this oracle checks the stitch too.
     */
   private def packSql(keysValues: String, predCase: String): String =
     s"""tagged AS (
@@ -215,7 +217,7 @@ object TsaQueries {
         PackRanges.KeyedBlock(0, 1L, 5L, PackRanges.predicate(col("seval"), CmpOp.Ge, Seq(20.0))),
         PackRanges.KeyedBlock(1, 2L, 1L, PackRanges.predicate(col("seval"), CmpOp.Lt, Seq(50.0))),
         PackRanges.KeyedBlock(2, 3L, 3L, PackRanges.predicate(col("seval"), CmpOp.In, Seq(10.0, 20.0, 30.0))))
-      PackRanges.packKeyed(obsFromEvents(s, d), blocks, MaxMinutes)
+      PackRanges.packKeyedChunked(obsFromEvents(s, d), blocks, MaxMinutes)
         .orderBy("block_id", "vfrom")
     }),
 
@@ -455,7 +457,7 @@ object TsaQueries {
       val blocks = Seq(
         PackRanges.KeyedBlock(0, 1L, 5L, PackRanges.predicate(col("seval"), CmpOp.Ge, Seq(20.0))),
         PackRanges.KeyedBlock(1, 2L, 1L, PackRanges.predicate(col("seval"), CmpOp.Lt, Seq(50.0))))
-      val packed = PackRanges.packKeyed(obsFromEvents(s, d), blocks, MaxMinutes)
+      val packed = PackRanges.packKeyedChunked(obsFromEvents(s, d), blocks, MaxMinutes)
       val l = packed.filter(col("block_id") === 0 && col("istrue") === true)
         .select(col("vfrom").as("lfrom"), col("vuntil").as("luntil"))
       val r = packed.filter(col("block_id") === 1 && col("istrue") === true)

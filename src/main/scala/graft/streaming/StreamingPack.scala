@@ -18,9 +18,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Arrival is assumed in event-time order per key (enforce upstream with
   * a watermark + `sortWithinPartitions` per micro-batch if the source
-  * reorders); late rows older than the state's last timestamp are
-  * dropped and counted in the emitted `late` flag... kept simple: they
-  * are ignored, matching a `dropDuplicates`+watermark pre-stage.
+  * reorders). A row at or before the state's last timestamp (late or
+  * duplicate) is dropped: it changes no state and nothing counts it,
+  * matching a `dropDuplicates`+watermark pre-stage.
   */
 object StreamingPack {
 

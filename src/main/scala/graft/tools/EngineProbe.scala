@@ -62,7 +62,7 @@ object EngineProbe {
           PackRanges.KeyedBlock(1, 2L, 1L,
             PackRanges.predicate(col("seval"), CmpOp.Lt, Seq(50.0))))
         t("pack alone (count)")(
-          PackRanges.packKeyedChunked(obsMain, keyed, 30, 24 * 7).count())
+          PackRanges.packKeyedChunked(obsMain, keyed, 30, PackRanges.ChunkHours).count())
         t("probe alone (distinct collect)")(
           rawStat.filter(col("tfrom").between(lit(from), lit(until)))
             .select(col("statid").cast("long"))

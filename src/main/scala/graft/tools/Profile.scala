@@ -96,8 +96,7 @@ object Profile {
       val coll = graft.model.CollectionSpec("demo",
         java.time.LocalDateTime.of(2024, 1, 1, 0, 0, 0),
         java.time.LocalDateTime.of(2024, 1, 31, 23, 59, 59), Vector(c1, c2))
-      val engine = new graft.engine.TsaEngine(spark, 720,
-        packChunkHours = sys.env.getOrElse("PROF_CHUNK_H", "168").toInt)
+      val engine = new graft.engine.TsaEngine(spark, 720)
       var res: Vector[graft.engine.TsaEngine#ConditionResult] = null
       t("engine.run (incl. validation job)") {
         res = engine.run(coll, graft.queries.TsaQueries.obsFromEvents(spark, d),
@@ -110,28 +109,6 @@ object Profile {
       t("c1 summary")(res(0).summary.count())
       engine.release()
     }
-
-    // engine pipeline pieces
-    val obs = graft.queries.TsaQueries.obsFromEvents(spark, d)
-    t("obsFromEvents")(obs.count())
-    t("obsFromEvents again")(obs.count())
-    val blocks = Seq(
-      graft.core.PackRanges.KeyedBlock(0, 1L, 5L,
-        graft.core.PackRanges.predicate(col("seval"), graft.model.CmpOp.Ge, Seq(20.0))),
-      graft.core.PackRanges.KeyedBlock(1, 2L, 1L,
-        graft.core.PackRanges.predicate(col("seval"), graft.model.CmpOp.Lt, Seq(50.0))))
-    t("packKeyed")(graft.core.PackRanges.packKeyed(obs, blocks, 720).count())
-    val packed = graft.core.PackRanges.packKeyed(obs, blocks, 720).cache()
-    t("packKeyed cache-materialize")(packed.count())
-    val ranges = packed
-      .withColumn("alias", when(col("block_id") === 0, "c1_0").otherwise("c1_1"))
-      .select("alias", "vfrom", "vuntil", "istrue")
-    val spec = {
-      val errs = new graft.dsl.ErrorCollector("p")
-      graft.dsl.ConditionParser.parse("demo", "c1", "s1#view >= 20 and s2#click < 50", errs).get
-    }
-    t("evalCondition")(graft.core.ConditionEval.evalCondition(
-      ranges, Seq("c1_0", "c1_1"), spec.expr).count())
 
     spark.stop()
   }

@@ -28,27 +28,34 @@ class PackRangesSpec extends AnyFunSuite with SparkTest {
     (keli ++ tie).toDF("tfrom", "statid", "seid", "seval")
   }
 
+  /** Every golden runs at 1-hour chunks (t0 is on an hour, so minute 60
+    * is a chunk border the stitch must close) and at the default width.
+    */
+  private val chunkWidths = Seq(1, PackRanges.ChunkHours)
+
   test("packKeyed: truncation + island merge across the gap") {
     val blocks = Seq(PackRanges.KeyedBlock(0, 1120L, 27L,
       PackRanges.predicate(col("seval"), CmpOp.Eq, Seq(8.0))))
-    val got = PackRanges.packKeyed(obs, blocks, maxMinutes = 30)
-      .orderBy("vfrom")
-      .collect()
-      .map(r => (r.getTimestamp(1), r.getTimestamp(2), Option(r.get(3))))
-      .toList
-    // [0,10)+[10,20) merge → [0,20) true; [20,30) false;
-    // [30,80) truncated to [30,60); [30,60) true + [80,90) true merge
-    // ACROSS the gap → [30,90) true (islands keyed on value change only,
-    // database/01_init_db.sql:161-199). Last reading (t=90) dropped.
-    assert(got == List(
-      (ts(0), ts(20), Some(true)),
-      (ts(20), ts(30), Some(false)),
-      (ts(30), ts(90), Some(true))))
+    for (h <- chunkWidths) withClue(s"chunkHours=$h: ") {
+      val got = PackRanges.packKeyedChunked(obs, blocks, maxMinutes = 30, chunkHours = h)
+        .orderBy("vfrom")
+        .collect()
+        .map(r => (r.getTimestamp(1), r.getTimestamp(2), Option(r.get(3))))
+        .toList
+      // [0,10)+[10,20) merge → [0,20) true; [20,30) false;
+      // [30,80) truncated to [30,60); [30,60) true + [80,90) true merge
+      // ACROSS the gap → [30,90) true (islands keyed on value change only,
+      // database/01_init_db.sql:161-199). Last reading (t=90) dropped.
+      assert(got == List(
+        (ts(0), ts(20), Some(true)),
+        (ts(20), ts(30), Some(false)),
+        (ts(30), ts(90), Some(true))))
+    }
   }
 
   test("packKeyed with no blocks yields an empty frame, not a crash") {
-    assert(PackRanges.packKeyed(obs, Seq.empty, maxMinutes = 30).count() == 0)
     assert(PackRanges.packKeyedChunked(obs, Seq.empty, maxMinutes = 30).count() == 0)
+    assert(PackRanges.packKeyedChunked(obs, Seq.empty, maxMinutes = 30, chunkHours = 1).count() == 0)
   }
 
   test("pack: in-operator and 3VL NULL runs") {
@@ -61,12 +68,14 @@ class PackRangesSpec extends AnyFunSuite with SparkTest {
       .toDF("tfrom", "statid", "seid", "seval")
     val blocks = Seq(PackRanges.KeyedBlock(0, 1L, 1L,
       PackRanges.predicate(col("seval"), CmpOp.In, Seq(2.0, 5.0))))
-    val got = PackRanges.packKeyed(o, blocks, 30).orderBy("vfrom").collect()
-      .map(r => (r.getTimestamp(1), r.getTimestamp(2), Option(r.get(3)))).toList
-    assert(got == List(
-      (ts(0), ts(10), Some(true)),
-      (ts(10), ts(30), None),
-      (ts(30), ts(40), Some(true))))
+    for (h <- chunkWidths) withClue(s"chunkHours=$h: ") {
+      val got = PackRanges.packKeyedChunked(o, blocks, 30, h).orderBy("vfrom").collect()
+        .map(r => (r.getTimestamp(1), r.getTimestamp(2), Option(r.get(3)))).toList
+      assert(got == List(
+        (ts(0), ts(10), Some(true)),
+        (ts(10), ts(30), None),
+        (ts(30), ts(40), Some(true))))
+    }
   }
 
   test("two-block condition: refinement, 3VL master, summary invariant") {
@@ -75,46 +84,48 @@ class PackRangesSpec extends AnyFunSuite with SparkTest {
         PackRanges.predicate(col("seval"), CmpOp.Eq, Seq(8.0))),
       PackRanges.KeyedBlock(1, 1120L, 3L,
         PackRanges.predicate(col("seval"), CmpOp.Lt, Seq(-3.0))))
-    val packed = PackRanges.packKeyed(obs, blocks, 30)
-    val ranges = packed.filter(col("block_id") === 0)
-      .select(org.apache.spark.sql.functions.lit("a1_0").as("alias"),
-        col("vfrom"), col("vuntil"), col("istrue"))
-      .union(packed.filter(col("block_id") === 1)
-        .select(org.apache.spark.sql.functions.lit("a1_1").as("alias"),
-          col("vfrom"), col("vuntil"), col("istrue")))
+    for (h <- chunkWidths) withClue(s"chunkHours=$h: ") {
+      val packed = PackRanges.packKeyedChunked(obs, blocks, 30, h)
+      val ranges = packed.filter(col("block_id") === 0)
+        .select(org.apache.spark.sql.functions.lit("a1_0").as("alias"),
+          col("vfrom"), col("vuntil"), col("istrue"))
+        .union(packed.filter(col("block_id") === 1)
+          .select(org.apache.spark.sql.functions.lit("a1_1").as("alias"),
+            col("vfrom"), col("vuntil"), col("istrue")))
 
-    val cond = ConditionEval.evalCondition(ranges, Seq("a1_0", "a1_1"),
-      Expr.And(Expr.Ref("a1_0"), Expr.Ref("a1_1")))
-    val rows = cond.collect().map(r =>
-      (r.getTimestamp(0), r.getTimestamp(1), r.getLong(2),
-        Option(r.get(3)), Option(r.get(4)), Option(r.get(5)))).toList
+      val cond = ConditionEval.evalCondition(ranges, Seq("a1_0", "a1_1"),
+        Expr.And(Expr.Ref("a1_0"), Expr.Ref("a1_1")))
+      val rows = cond.collect().map(r =>
+        (r.getTimestamp(0), r.getTimestamp(1), r.getLong(2),
+          Option(r.get(3)), Option(r.get(4)), Option(r.get(5)))).toList
 
-    // keli(=8) islands: [0,20)T [20,30)F [30,90)T
-    // tie(<-3) islands: [0,25)T [25,50)F [50,55)T
-    // boundaries: 0,20,25,30,50,55,90
-    assert(rows == List(
-      (ts(0), ts(20), 1200L, Some(true), Some(true), Some(true)),
-      (ts(20), ts(25), 300L, Some(false), Some(true), Some(false)),
-      (ts(25), ts(30), 300L, Some(false), Some(false), Some(false)),
-      (ts(30), ts(50), 1200L, Some(true), Some(false), Some(false)),
-      (ts(50), ts(55), 300L, Some(true), Some(true), Some(true)),
-      (ts(55), ts(90), 2100L, Some(true), None, None)))
+      // keli(=8) islands: [0,20)T [20,30)F [30,90)T
+      // tie(<-3) islands: [0,25)T [25,50)F [50,55)T
+      // boundaries: 0,20,25,30,50,55,90
+      assert(rows == List(
+        (ts(0), ts(20), 1200L, Some(true), Some(true), Some(true)),
+        (ts(20), ts(25), 300L, Some(false), Some(true), Some(false)),
+        (ts(25), ts(30), 300L, Some(false), Some(false), Some(false)),
+        (ts(30), ts(50), 1200L, Some(true), Some(false), Some(false)),
+        (ts(50), ts(55), 300L, Some(true), Some(true), Some(true)),
+        (ts(55), ts(90), 2100L, Some(true), None, None)))
 
-    val s = ConditionEval.summarize(cond).collect()(0)
-    val (validS, notvalidS, tottimeS, nodataS) =
-      (s.getAs[Long]("valid_s"), s.getAs[Long]("notvalid_s"),
-        s.getAs[Long]("tottime_s"), s.getAs[Long]("nodata_s"))
-    assert(validS == 1500L)
-    assert(notvalidS == 1800L)
-    assert(nodataS == 2100L) // NULL-master time; absorbs uncovered gaps too
-    assert(tottimeS == 5400L)
-    assert(validS + notvalidS + nodataS == tottimeS)
+      val s = ConditionEval.summarize(cond).collect()(0)
+      val (validS, notvalidS, tottimeS, nodataS) =
+        (s.getAs[Long]("valid_s"), s.getAs[Long]("notvalid_s"),
+          s.getAs[Long]("tottime_s"), s.getAs[Long]("nodata_s"))
+      assert(validS == 1500L)
+      assert(notvalidS == 1800L)
+      assert(nodataS == 2100L) // NULL-master time; absorbs uncovered gaps too
+      assert(tottimeS == 5400L)
+      assert(validS + notvalidS + nodataS == tottimeS)
+    }
   }
 
   test("single-block shortcut: master == block (SURVEY.md §7.4 pt 3)") {
     val blocks = Seq(PackRanges.KeyedBlock(0, 1120L, 27L,
       PackRanges.predicate(col("seval"), CmpOp.Eq, Seq(8.0))))
-    val ranges = PackRanges.packKeyed(obs, blocks, 30)
+    val ranges = PackRanges.packKeyedChunked(obs, blocks, 30)
       .select(org.apache.spark.sql.functions.lit("a1_0").as("alias"),
         col("vfrom"), col("vuntil"), col("istrue"))
     val cond = ConditionEval.evalCondition(ranges, Seq("a1_0"), Expr.Ref("a1_0"))

@@ -43,7 +43,7 @@ class PropertySpec extends AnyFunSuite with SparkTest {
         }.toDF("tfrom", "statid", "seid", "seval")
         val blocks = Seq(PackRanges.KeyedBlock(0, 1L, 1L,
           PackRanges.predicate(col("seval"), CmpOp.Le, Seq(2.0))))
-        val packed = PackRanges.packKeyed(obs, blocks, 30)
+        val packed = PackRanges.packKeyedChunked(obs, blocks, 30)
           .orderBy("vfrom").collect()
           .map(r => (r.getTimestamp(1).getTime, r.getTimestamp(2).getTime,
             Option(r.get(3)).map(_.asInstanceOf[Boolean])))
@@ -60,7 +60,7 @@ class PropertySpec extends AnyFunSuite with SparkTest {
         }
 
         // single-block condition: valid+notvalid+nodata == tottime
-        val ranges = PackRanges.packKeyed(obs, blocks, 30)
+        val ranges = PackRanges.packKeyedChunked(obs, blocks, 30)
           .select(lit("b_0").as("alias"), col("vfrom"), col("vuntil"), col("istrue"))
         val cond = ConditionEval.evalCondition(ranges, Seq("b_0"), Expr.Ref("b_0"))
         val s = ConditionEval.summarize(cond).collect()(0)
@@ -78,7 +78,7 @@ class PropertySpec extends AnyFunSuite with SparkTest {
         }.toDF("tfrom", "statid", "seid", "seval")
         val blocks = Seq(PackRanges.KeyedBlock(0, 1L, 1L,
           PackRanges.predicate(col("seval"), CmpOp.Eq, Seq(1.0))))
-        val packed = PackRanges.packKeyed(obs, blocks, 30)
+        val packed = PackRanges.packKeyedChunked(obs, blocks, 30)
         // feed islands back as readings valid at vfrom with their value:
         // islands of islands == islands (merge is maximal)
         val again = packed
@@ -95,7 +95,7 @@ class PropertySpec extends AnyFunSuite with SparkTest {
     }
   }
 
-  test("chunked pack == global pack for any series (skew-resistant path)") {
+  test("pack: 1-hour chunks == one chunk spanning the series, for any series") {
     forAllSeries(8) { series =>
       import spark.implicits._
       val obs = series.map { case (m, v) =>
@@ -106,9 +106,10 @@ class PropertySpec extends AnyFunSuite with SparkTest {
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.orderBy("vfrom").collect()
           .map(r => (r.getTimestamp(1), r.getTimestamp(2), Option(r.get(3)))).toList
-      // 1-hour chunks ⇒ many chunk borders inside the series
+      // 1-hour chunks ⇒ many chunk borders inside the series; 10-year
+      // chunks hold the whole series in one (the unchunked pack)
       val chunked = rows(PackRanges.packKeyedChunked(obs, blocks, 30, chunkHours = 1))
-      val global = rows(PackRanges.packKeyed(obs, blocks, 30))
+      val global = rows(PackRanges.packKeyedChunked(obs, blocks, 30, chunkHours = 24 * 365 * 10))
       assert(chunked == global)
     }
   }
@@ -124,7 +125,7 @@ class PropertySpec extends AnyFunSuite with SparkTest {
       val blocks = Seq(
         PackRanges.KeyedBlock(0, 1L, 1L, PackRanges.predicate(col("seval"), CmpOp.Le, Seq(1.0))),
         PackRanges.KeyedBlock(1, 1L, 2L, PackRanges.predicate(col("seval"), CmpOp.Le, Seq(2.0))))
-      val packed = PackRanges.packKeyed(obs, blocks, 30)
+      val packed = PackRanges.packKeyedChunked(obs, blocks, 30)
       def ranges(a: String, id: Int) = packed.filter(col("block_id") === id)
         .select(lit(a).as("alias"), col("vfrom"), col("vuntil"), col("istrue"))
       val br = ranges("x", 0).union(ranges("y", 1))
@@ -259,7 +260,7 @@ class PropertySpec extends AnyFunSuite with SparkTest {
     val blocks = Seq(
       PackRanges.KeyedBlock(0, 1L, 1L, PackRanges.predicate(col("seval"), CmpOp.Le, Seq(1.0))),
       PackRanges.KeyedBlock(1, 1L, 2L, PackRanges.predicate(col("seval"), CmpOp.Le, Seq(2.0))))
-    val packed = PackRanges.packKeyed(obs, blocks, 30)
+    val packed = PackRanges.packKeyedChunked(obs, blocks, 30)
     def ranges(a: String, id: Int) = packed.filter(col("block_id") === id)
       .select(lit(a).as("alias"), col("vfrom"), col("vuntil"), col("istrue"))
     val br = ranges("x", 0).union(ranges("y", 1))

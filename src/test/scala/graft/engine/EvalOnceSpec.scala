@@ -1,7 +1,9 @@
 package graft.engine
 
 import graft.SparkTest
+import graft.core.PackRanges
 import graft.dsl.SheetParser
+import graft.model.PrimaryBlock
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.SparkPlan
@@ -9,6 +11,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -20,6 +23,8 @@ import scala.jdk.CollectionConverters._
   * collect) read that cache instead of evaluating the condition again.
   * Counted in shuffle-map stages, not time. The plan-shape test pins
   * what one evaluation costs: one pack scan and one shuffle per branch.
+  * The pack-plan test pins what the traced benchmark relies on: a pack
+  * rebuilt outside the engine with its arguments reads the engine's cache.
   */
 class EvalOnceSpec extends AnyFunSuite with SparkTest with AdaptiveSparkPlanHelper {
 
@@ -97,6 +102,36 @@ class EvalOnceSpec extends AnyFunSuite with SparkTest with AdaptiveSparkPlanHelp
     assert(later.isEmpty, s"later actions re-ran shuffle-map stages $later")
     engine.release()
     assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("a pack plan built outside the engine with the engine's arguments hits its cached pack") {
+    spark.sharedState.cacheManager.clearCache()
+    val sheet =
+      """start,end
+        |1.2.2018,28.2.2018
+        |site,master_alias,condition
+        |Testi,A1,"s1120#keli_1 = 8 and s1120#tie_1 < 0"
+        |""".stripMargin
+    val parsed = SheetParser.parse("contract", sheet)
+    assert(parsed.conditionErrors.isEmpty)
+    val spec = parsed.spec.get
+    val sensorIds = Map("keli_1" -> 27, "tie_1" -> 3)
+    // what a traced run rebuilds: the sheet's readings in range, the
+    // primary blocks keyed in engine order, maxMinutes 30, weekly chunks
+    def utc(l: java.time.LocalDateTime) = Timestamp.from(l.toInstant(java.time.ZoneOffset.UTC))
+    val inRange = obs.filter(col("tfrom").between(lit(utc(spec.timeFrom)), lit(utc(spec.timeUntil))))
+    val keyed = spec.conditions.flatMap(_.blocks.collect { case p: PrimaryBlock => p })
+      .zipWithIndex.map { case (p, i) =>
+        PackRanges.KeyedBlock(i, p.stationId.toLong, sensorIds(p.sensorName).toLong,
+          PackRanges.predicate(col("seval"), p.op, p.values))
+      }
+    def hitsCache: Boolean = PackRanges.packKeyedChunked(inRange, keyed, 30, 24 * 7)
+      .queryExecution.withCachedData.collectFirst { case r: InMemoryRelation => r }.isDefined
+    assert(!hitsCache)
+    val engine = new TsaEngine(spark)
+    assert(engine.run(spec, obs, sensorIds).forall(_.data != null))
+    assert(hitsCache, "the engine's pack call or arguments changed")
+    engine.release()
   }
 
   test("a multi-block condition scans the pack once per grid branch and shuffles once, by chunk") {

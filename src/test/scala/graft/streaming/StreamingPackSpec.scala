@@ -101,7 +101,7 @@ class StreamingPackSpec extends AnyFunSuite with SparkTest {
       80L -> 1, 90L -> 1, 95L -> 0, 100L -> 0)
     val obs = eff.map { case (m, e) => (ts(m), 1L, 5L, if (e == 1) 5.0 else 0.0) }
       .toDF("tfrom", "statid", "seid", "seval")
-    val batch = graft.core.PackRanges.packKeyed(obs,
+    val batch = graft.core.PackRanges.packKeyedChunked(obs,
         Seq(graft.core.PackRanges.KeyedBlock(0, 1L, 5L,
           graft.core.PackRanges.predicate(
             org.apache.spark.sql.functions.col("seval"),
