@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 /** Distributed full-batch training of a linear model over corpus-scale
@@ -146,7 +148,8 @@ object LinearModel {
     * duplicated ids the per-row token count is not the per-ID gram
     * total, so xnorm would be denominated per row, not per id — the
     * same class of garbage the old window form produced (doubled bias
-    * rows), just a different shape of it.
+    * rows), just a different shape of it. [[featuresByDoc]] enforces
+    * it: an id with more than one bias row fails the feature build.
     */
   private def hashedGramFeatures(docs: DataFrame, idCol: String,
       textCol: String, buckets: Int): DataFrame = {
@@ -184,41 +187,14 @@ object LinearModel {
       lit(buckets.toLong).as("bucket"), lit(1.0).as("xnorm")))
   }
 
-  /** Model-representation crossover: up to this many buckets the
-    * (buckets+1)-double model rides as a PLAN LITERAL (`typedLit` +
-    * `element_at` — zero join, inlined into codegen) and the
-    * per-iteration gradient collects to a driver map. Past it the
-    * dense array stops being the right shape — a fastText-real model
-    * is 2M buckets, and a 2M-element literal array bloats every plan —
-    * so the model becomes a SUPPORT-SIZED driver map broadcast into
-    * the same per-row dot product (the MLlib linear-model layout:
-    * model-sized driver state, coefficient-sized gradient collected
-    * per iteration), with the arithmetic structured IDENTICALLY (same
-    * IEEE ops, same DECIMAL sums) so both paths produce bit-equal
-    * trajectories at any common bucket count (pinned by
-    * LinearModelSpec's literal/relation parity test). The sweep in
-    * SCALING.md locates the measured crossover.
-    */
-  private[graft] val literalModelMaxBuckets = 4096
-
-  /** The ONE routing predicate for the model representation — every
-    * auto-switching entry point (fit/predict/score) must branch on
-    * this, never on a re-inlined comparison, so a future threshold or
-    * policy change lands everywhere at once.
-    */
-  private def viaRelationFor(buckets: Int): Boolean =
-    buckets > literalModelMaxBuckets
-
   /** Full-batch logistic GD over hashed n-gram features — the
     * fastText-class quality/language gate (linear head over a hashed
     * bag of 1/2-grams), in the same train-in-T-scans shape as
-    * [[fitQualityGd]]: each iteration is one z-aggregation plus one
-    * gradient aggregation over the checkpointed feature relation, the
-    * (buckets+1)-double model broadcasts back (as a literal array up
-    * to [[literalModelMaxBuckets]], as a broadcast weight relation
-    * past it), and per-term products accumulate in DECIMAL(38,12) so
-    * the weight trajectory replays bit-exactly in the oracle's
-    * unrolled CTEs.
+    * [[fitQualityGd]]: each iteration is one action over the
+    * checkpointed feature relation, the (buckets+1)-double model
+    * broadcasts back into the next scan, and per-term products
+    * accumulate in DECIMAL(38,12) so the weight trajectory replays
+    * bit-exactly in the oracle's unrolled CTEs.
     *
     * @param label boolean column on `docs` (the training target)
     * @return (iter, bucket, w, loss): weights AFTER each update,
@@ -227,29 +203,14 @@ object LinearModel {
   def fitLogitGd(docs: DataFrame, idCol: String = "doc_id",
                  textCol: String = "text", label: Column,
                  buckets: Int = 64, iters: Int = 3,
-                 lr: Double = 0.5): DataFrame =
-    if (!viaRelationFor(buckets)) {
-      val spark = docs.sparkSession
-      import spark.implicits._
-      val (w, traj, _) = logitTrajectory(docs, idCol, textCol, label,
-        buckets, iters, lr, withLoss = true)
-      require(w.length == buckets + 1)
-      traj.toDF("iter", "bucket", "w", "loss")
-    } else {
-      val spark = docs.sparkSession
-      val (_, iterOut, _) = logitTrajectoryRel(docs, idCol, textCol,
-        label, buckets, iters, lr, withLoss = true)
-      // the loop runs on the ACTIVE bucket support; the trajectory
-      // contract is one row per (iteration, bucket), so densify here —
-      // off-support buckets provably hold exactly +0.0 at every
-      // iteration (see logitTrajectoryRel)
-      iterOut.map { case (it, wm, loss) =>
-        val bc = spark.sparkContext.broadcast(wm)
-        spark.range(buckets + 1L)
-          .select(lit(it).as("iter"), col("id").as("bucket"),
-            wLookupUdf(bc)(col("id")).as("w"), lit(loss).as("loss"))
-      }.reduce(_.unionByName(_))
-    }
+                 lr: Double = 0.5): DataFrame = {
+    val (traj, _) = logitTrajectory(docs, idCol, textCol, label,
+      buckets, iters, lr, withLoss = true)
+    traj.map { case (it, w, loss) =>
+      weightsFrame(docs.sparkSession, w).select(lit(it).as("iter"),
+        col("bucket"), col("w"), lit(loss).as("loss"))
+    }.reduce(_.unionByName(_))
+  }
 
   /** Train then score every doc with the fitted logistic model at scan
     * speed: (doc_id, sigma, pred) with σ̃ from the shared table and
@@ -259,30 +220,12 @@ object LinearModel {
   def fitPredictLogit(docs: DataFrame, idCol: String = "doc_id",
                       textCol: String = "text", label: Column,
                       buckets: Int = 64, iters: Int = 3,
-                      lr: Double = 0.5): DataFrame =
-    fitPredictLogitVia(docs, idCol, textCol, label, buckets, iters, lr,
-      viaRelation = viaRelationFor(buckets))
-
-  /** [[fitPredictLogit]] with the model-representation path pinned —
-    * the sweep bench compares both at one bucket count; production
-    * callers use the auto-switching public method.
-    */
-  private[graft] def fitPredictLogitVia(docs: DataFrame, idCol: String,
-      textCol: String, label: Column, buckets: Int, iters: Int,
-      lr: Double, viaRelation: Boolean): DataFrame =
-    if (!viaRelation) {
-      val (w, _, fd) = logitTrajectory(docs, idCol, textCol, label,
-        buckets, iters, lr, withLoss = false)
-      zSigmaArr(fd, w).select(col(idCol), col("__sig").as("sigma"),
-        (col("__sig") >= 0.5).as("pred"))
-    } else {
-      val (wm, _, fd) = logitTrajectoryRel(docs, idCol, textCol,
-        label, buckets, iters, lr, withLoss = false)
-      val bc = docs.sparkSession.sparkContext.broadcast(wm)
-      zSigmaMap(fd, bc)
-        .select(col(idCol), col("__sig").as("sigma"),
-          (col("__sig") >= 0.5).as("pred"))
-    }
+                      lr: Double = 0.5): DataFrame = {
+    val (traj, fd) = logitTrajectory(docs, idCol, textCol, label,
+      buckets, iters, lr, withLoss = false)
+    sigmaPred(fd.select(col(idCol),
+      zDotUdf(traj.last._2)(col("__f")).as("__z")), idCol)
+  }
 
   /** Train, then emit the RAW logit score z per doc (the margin —
     * monotone in σ̃ but at full resolution, where σ̃ is quantized to
@@ -292,89 +235,78 @@ object LinearModel {
   def fitScoreLogit(docs: DataFrame, idCol: String = "doc_id",
                     textCol: String = "text", label: Column,
                     buckets: Int = 64, iters: Int = 3,
-                    lr: Double = 0.5): DataFrame =
-    if (!viaRelationFor(buckets)) {
-      val (w, _, fd) = logitTrajectory(docs, idCol, textCol, label,
-        buckets, iters, lr, withLoss = false)
-      zSigmaArr(fd, w).select(col(idCol), col("__z").as("z"))
-    } else {
-      val (wm, _, fd) = logitTrajectoryRel(docs, idCol, textCol,
-        label, buckets, iters, lr, withLoss = false)
-      val bc = docs.sparkSession.sparkContext.broadcast(wm)
-      zSigmaMap(fd, bc).select(col(idCol), col("__z").as("z"))
-    }
+                    lr: Double = 0.5): DataFrame = {
+    val (traj, fd) = logitTrajectory(docs, idCol, textCol, label,
+      buckets, iters, lr, withLoss = false)
+    fd.select(col(idCol), zDotUdf(traj.last._2)(col("__f")).as("z"))
+  }
 
-  /** The trained model as a (bucket, w) RELATION — the broadcastable
-    * artifact at realistic (fastText-default 2M) bucket counts, where
-    * a plan-literal array stops being the right shape. Store it, join
-    * it, [[predictLogitWithRel]] it.
+  /** The trained model as a (bucket, w) RELATION — the storable
+    * artifact at realistic (fastText-default 2M) bucket counts. Store
+    * it, join it, [[predictLogitWithRel]] it.
     */
   def logitWeightsRel(docs: DataFrame, idCol: String = "doc_id",
                       textCol: String = "text", label: Column,
                       buckets: Int = 64, iters: Int = 3,
                       lr: Double = 0.5): DataFrame = {
-    val (wm, _, _) = logitTrajectoryRel(docs, idCol, textCol, label,
+    val (traj, _) = logitTrajectory(docs, idCol, textCol, label,
       buckets, iters, lr, withLoss = false)
-    // densify: the stored-model artifact keeps its one-row-per-bucket
-    // contract; off-support buckets are exactly +0.0 (see
-    // logitTrajectoryRel) — one model-sized projection at OUTPUT time
-    val bc = docs.sparkSession.sparkContext.broadcast(wm)
-    docs.sparkSession.range(buckets + 1L)
-      .select(col("id").as("bucket"), wLookupUdf(bc)(col("id")).as("w"))
+    weightsFrame(docs.sparkSession, traj.last._2)
   }
 
-  /** Dense lookup into a support-sized weight map: absent buckets are
-    * exactly +0.0 (the off-support invariant) — the same doubles the
-    * former `range LEFT JOIN support + coalesce(w, 0.0)` produced.
+  /** One (bucket, w) row per model cell, read from the broadcast model
+    * by a lookup over `range` — the model-sized projection happens at
+    * OUTPUT time, and no model-sized literal or local relation enters a
+    * plan. One partition: a lookup per cell is cheap even at 2M cells,
+    * and at 64 buckets more partitions only add tasks.
     */
-  private def wLookupUdf(
-      bc: org.apache.spark.broadcast.Broadcast[
-        java.util.HashMap[java.lang.Long, java.lang.Double]])
-      : org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (b: Long) =>
-      val v = bc.value.get(b)
-      if (v == null) 0.0 else v.doubleValue()
-    }
+  private def weightsFrame(spark: SparkSession,
+      w: Broadcast[Array[Double]]): DataFrame = {
+    val wOf = udf((b: Long) => w.value(b.toInt)).asNonNullable()
+    spark.range(0L, w.value.length.toLong, 1L, 1)
+      .select(col("id").as("bucket"), wOf(col("id")).as("w"))
+  }
 
   /** Score `docs` with an already-trained (bucket, w) weight relation:
-    * the model COLLECTS to a driver map once (a 2M × 8-byte model is
+    * the model COLLECTS to a driver array once (a 2M × 8-byte model is
     * ~16 MB — model-sized, never data-sized; the MLlib linear-model
-    * layout) and broadcasts into the fused per-row scorer — zero
-    * joins, zero exchanges per scoring call. Bit-parity with
-    * [[predictLogitWith]] at any common bucket count: the per-term
-    * multiply, DECIMAL sum and table lookup are structurally
-    * identical, and DECIMAL adds are exact so term order is free.
+    * layout) and scores through [[predictLogitWith]] — zero joins, zero
+    * exchanges per scoring call. A bucket absent from `wRel` scores
+    * with weight 0.0.
     *
-    * PRECONDITION: `wRel` holds one row per bucket (the
-    * [[logitWeightsRel]] artifact contract) — duplicate buckets would
-    * have double-counted in the former broadcast join too, just in a
-    * different shape.
+    * `wRel` must hold at most one row per bucket in [0, buckets] (the
+    * [[logitWeightsRel]] artifact contract): the collect reads at most
+    * buckets + 2 rows, and a larger relation, a bucket outside the
+    * range or a repeated bucket fails before any scoring.
     */
   def predictLogitWithRel(docs: DataFrame, wRel: DataFrame,
                           idCol: String = "doc_id",
                           textCol: String = "text",
                           buckets: Int = 64): DataFrame = {
-    val wm = new java.util.HashMap[java.lang.Long, java.lang.Double]()
-    wRel.select(col("bucket").cast("long"), col("w").cast("double"))
-      .collect().foreach(r => wm.put(r.getLong(0), r.getDouble(1)))
-    val bc = docs.sparkSession.sparkContext.broadcast(wm)
-    sigmaPred(docs.select(col(idCol),
-      fusedZMapUdf(bc, buckets)(col(textCol)).as("__z")), idCol)
+    val rows = wRel.select(col("bucket").cast("long"), col("w").cast("double"))
+      .limit(buckets + 2).collect()
+    require(rows.length <= buckets + 1, s"weight relation has more than " +
+      s"${buckets + 1} rows: a $buckets-bucket model has one row per " +
+      s"bucket 0..$buckets")
+    val w = new Array[Double](buckets + 1)
+    val seen = new java.util.BitSet(buckets + 1)
+    rows.foreach { r =>
+      require(!r.isNullAt(0) && r.getLong(0) >= 0 && r.getLong(0) <= buckets,
+        s"weight relation bucket ${r.get(0)} is outside [0, $buckets]")
+      val b = r.getLong(0).toInt
+      require(!seen.get(b), s"weight relation repeats bucket $b")
+      seen.set(b)
+      w(b) = r.getDouble(1)
+    }
+    predictLogitWith(docs, w, idCol, textCol, buckets)
   }
 
   /** (idCol, sigma, pred) from a (idCol, __z) frame — the shared
-    * σ̃-table lookup + decision tail of every scoring path (identical
-    * expressions to the former zSigma outputs).
+    * σ̃-table lookup + decision tail of every scoring path.
     */
-  private def sigmaPred(zf: DataFrame, idCol: String): DataFrame = {
-    val sigLit = typedLit(sigmoidTable.toSeq)
-    zf.withColumn("__idx",
-        least(greatest(floor((col("__z") + 8.0) * 32.0).cast("int"), lit(0)),
-          lit(511)))
-      .withColumn("__sig", element_at(sigLit, col("__idx") + 1))
-      .select(col(idCol), col("__sig").as("sigma"),
-        (col("__sig") >= 0.5).as("pred"))
-  }
+  private def sigmaPred(zf: DataFrame, idCol: String): DataFrame =
+    withSigma(zf).select(col(idCol), col("__sig").as("sigma"),
+      (col("__sig") >= 0.5).as("pred"))
 
   /** The trained (buckets+1)-double logistic model — the broadcastable
     * artifact [[predictLogitWith]] applies, e.g. to a STREAM of
@@ -385,41 +317,51 @@ object LinearModel {
                    buckets: Int = 64, iters: Int = 3,
                    lr: Double = 0.5): Array[Double] =
     logitTrajectory(docs, idCol, textCol, label, buckets, iters, lr,
-      withLoss = false)._1
+      withLoss = false)._1.last._2.value
 
   /** Score `docs` with an already-trained logistic model: the weights
-    * ride in the fused per-row scorer (broadcast in the codegen
-    * sense), the sigmoid is the shared table — a stateless SHUFFLE-
-    * FREE per-doc projection (no explode, no groupBy: the former
-    * feature build paid two exchanges per call), which is what makes
-    * it the cheap per-micro-batch scoring shape of q_stream_logit.
+    * broadcast once into the fused per-row scorer, the sigmoid is the
+    * shared table — a stateless SHUFFLE-FREE per-doc projection (no
+    * explode, no groupBy: the former feature build paid two exchanges
+    * per call), which is what makes it the cheap per-micro-batch
+    * scoring shape of q_stream_logit.
     */
   def predictLogitWith(docs: DataFrame, w: Array[Double],
                        idCol: String = "doc_id",
                        textCol: String = "text",
                        buckets: Int = 64): DataFrame = {
     require(w.length == buckets + 1)
+    val bc = docs.sparkSession.sparkContext.broadcast(w)
     sigmaPred(docs.select(col(idCol),
-      fusedZUdf(w, buckets)(col(textCol)).as("__z")), idCol)
+      fusedZUdf(bc, buckets)(col(textCol)).as("__z")), idCol)
   }
 
   /** Per-doc feature ARRAY relation: (idCol, __y, __f array<struct<
     * bucket, xnorm>>) — [[hashedGramFeatures]] grouped by document.
-    * One shuffle at build time; every literal-model GD iteration and
-    * the apply scan then run WITHOUT re-shuffling the feature relation
-    * (the z dot-product is per-row over the array, and only the
-    * bucket-sized gradient aggregate exchanges). Safe because every
-    * per-doc and per-bucket reduction in this path is a DECIMAL(38,12)
-    * sum — exact, hence order-free: grouping the identical terms
-    * differently cannot change a bit of the trajectory.
+    * One shuffle at build time; every GD iteration and the apply scan
+    * then run WITHOUT re-shuffling the feature relation (the z
+    * dot-product is per-row over the array, and only the bucket-sized
+    * gradient aggregate exchanges). Safe because every per-doc and
+    * per-bucket reduction in this path is a DECIMAL(38,12) sum —
+    * exact, hence order-free: grouping the identical terms differently
+    * cannot change a bit of the trajectory.
+    *
+    * The same aggregation counts each id's bias rows: a repeated
+    * `idCol` carries more than one, and `__f` itself raises the error,
+    * so no projection can prune the check and it costs no Spark job.
     */
   private def featuresByDoc(docs: DataFrame, idCol: String,
       textCol: String, label: Column, buckets: Int): DataFrame = {
     val d = docs.select(col(idCol),
       when(label, 1.0).otherwise(0.0).as("__y"))
+    val nBias = sum(when(col("bucket") === buckets, 1).otherwise(0))
     hashedGramFeatures(docs, idCol, textCol, buckets)
       .groupBy(col(idCol))
-      .agg(collect_list(struct(col("bucket"), col("xnorm"))).as("__f"))
+      .agg(when(nBias > 1, raise_error(concat(
+          lit(s"LinearModel: id column '$idCol' is not unique, repeated id: "),
+          col(idCol).cast("string"))))
+        .otherwise(collect_list(struct(col("bucket"), col("xnorm"))))
+        .as("__f"))
       .join(d, Seq(idCol))
   }
 
@@ -432,43 +374,17 @@ object LinearModel {
     * the former `sum(cast(...))` aggregate over the exploded relation,
     * for any term order, because decimal arithmetic here is exact.
     */
-  private def zDotUdf(w: Array[Double]): org.apache.spark.sql.expressions.UserDefinedFunction =
+  private def zDotUdf(w: Broadcast[Array[Double]]): UserDefinedFunction =
     udf { (fs: Seq[org.apache.spark.sql.Row]) =>
+      val wv = w.value
       var acc = java.math.BigDecimal.ZERO
       val it = fs.iterator
       while (it.hasNext) {
         val r = it.next()
         val term = java.math.BigDecimal
-          .valueOf(r.getDouble(1) * w(r.getLong(0).toInt))
+          .valueOf(r.getDouble(1) * wv(r.getLong(0).toInt))
           .setScale(12, java.math.RoundingMode.HALF_UP)
         acc = acc.add(term)
-      }
-      acc.doubleValue
-    }
-
-  /** [[zDotUdf]] with the model as a broadcast support-sized MAP (the
-    * relation-width twin): buckets absent from the map contribute
-    * nothing — exactly what the former inner join against the weight
-    * relation did (and a present w=0.0 adds an exact decimal zero), so
-    * the sum is bit-equal term for term.
-    */
-  private def zDotMapUdf(
-      bc: org.apache.spark.broadcast.Broadcast[
-        java.util.HashMap[java.lang.Long, java.lang.Double]])
-      : org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (fs: Seq[org.apache.spark.sql.Row]) =>
-      var acc = java.math.BigDecimal.ZERO
-      val m = bc.value
-      val it = fs.iterator
-      while (it.hasNext) {
-        val r = it.next()
-        val wv = m.get(r.getLong(0))
-        if (wv != null) {
-          val term = java.math.BigDecimal
-            .valueOf(r.getDouble(1) * wv.doubleValue())
-            .setScale(12, java.math.RoundingMode.HALF_UP)
-          acc = acc.add(term)
-        }
       }
       acc.doubleValue
     }
@@ -497,18 +413,13 @@ object LinearModel {
     * `FusedLogitScorerSpec` pins per-doc z equality against the
     * relational build on corpus and adversarial strings.
     */
-  private def fusedZ(text: String, buckets: Int,
-                     wOf: Long => java.lang.Double): Double = {
+  private def fusedZ(text: String, buckets: Int, w: Array[Double]): Double = {
     import org.apache.spark.unsafe.types.UTF8String
     var acc = java.math.BigDecimal.ZERO
-    def add(bucket: Long, xnorm: Double): Unit = {
-      val wv = wOf(bucket)
-      if (wv != null) {
-        acc = acc.add(java.math.BigDecimal
-          .valueOf(xnorm * wv.doubleValue())
-          .setScale(12, java.math.RoundingMode.HALF_UP))
-      }
-    }
+    def add(bucket: Long, xnorm: Double): Unit =
+      acc = acc.add(java.math.BigDecimal
+        .valueOf(xnorm * w(bucket.toInt))
+        .setScale(12, java.math.RoundingMode.HALF_UP))
     if (text != null) {
       val trimmed = UTF8String.fromString(text).toLowerCase.trim()
       val toks: Array[UTF8String] =
@@ -551,167 +462,63 @@ object LinearModel {
     acc.doubleValue
   }
 
-  private def fusedZUdf(w: Array[Double], buckets: Int)
-      : org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (text: String) =>
-      fusedZ(text, buckets, b => java.lang.Double.valueOf(w(b.toInt)))
-    }
+  private def fusedZUdf(w: Broadcast[Array[Double]],
+      buckets: Int): UserDefinedFunction =
+    udf { (text: String) => fusedZ(text, buckets, w.value) }
 
-  private def fusedZMapUdf(
-      bc: org.apache.spark.broadcast.Broadcast[
-        java.util.HashMap[java.lang.Long, java.lang.Double]],
-      buckets: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (text: String) => fusedZ(text, buckets, b => bc.value.get(b)) }
-
-  /** (idCol, __y, __f, __z, __idx, __sig) for weight vector `w` over a
-    * [[featuresByDoc]] frame — the shuffle-free twin of the former
-    * groupBy+join zSigma.
+  /** Adds (__idx, __sig) to a frame carrying `__z`: the σ̃-table cell
+    * and its value, the one place the table index is computed.
     */
-  private def zSigmaArr(fd: DataFrame, w: Array[Double]): DataFrame = {
-    val sigLit = typedLit(sigmoidTable.toSeq)
-    fd.withColumn("__z", zDotUdf(w)(col("__f")))
-      .withColumn("__idx",
+  private def withSigma(zf: DataFrame): DataFrame =
+    zf.withColumn("__idx",
         least(greatest(floor((col("__z") + 8.0) * 32.0).cast("int"), lit(0)),
           lit(511)))
-      .withColumn("__sig", element_at(sigLit, col("__idx") + 1))
-  }
+      .withColumn("__sig",
+        element_at(typedLit(sigmoidTable.toSeq), col("__idx") + 1))
 
-  /** The GD loop at relation (past-literal) widths: the model lives as
-    * a SUPPORT-SIZED driver map — the classic MLlib linear-model
-    * layout (model-sized state on the driver, a coefficient-sized
-    * gradient aggregated back per iteration), which is the shape that
-    * holds at fastText-real width (a 2M-bucket model is ~16 MB:
-    * model-sized, never data-sized). Each iteration is ONE action over
-    * the checkpointed per-doc feature arrays — per-row z/σ̃/residual
-    * via the broadcast map (no join, no per-doc exchange), the
+  /** The driver-loop GD over the [[featuresByDoc]] ARRAY layout — the
+    * classic MLlib linear-model layout: the model is driver state, a
+    * dense (buckets+1)-double array broadcast to the executors once
+    * per iteration (a 2M-bucket model is ~16 MB: model-sized, never
+    * data-sized, and kept out of every task closure), and a
+    * coefficient-sized gradient aggregates back; a support-sized map
+    * measured no faster at 2M buckets (SCALING.md). The feature relation
+    * shuffles ONCE at build time; each iteration is then a single
+    * action — per-row z/σ̃/residual (no join, no per-doc exchange), the
     * bucket-sized gradient aggregate, and (under `withLoss`) the mean
-    * ln-loss as an OBSERVED metric on the same action. The former
-    * relation loop paid, per iteration, a broadcast weight join + a
-    * per-doc groupBy exchange + a model-sized left-join update + a
-    * weight localCheckpoint.
+    * ln-loss summed as an OBSERVED metric on the same action instead
+    * of a second checkpoint+collect.
     *
-    * Bit-parity with the former loop, term by term: the map carries
-    * only the ACTIVE support (off-support buckets provably hold
-    * exactly +0.0 — w starts 0.0, the gradient only ever contains
-    * feature buckets, and `0.0 − lr·(0.0/n)` is `+0.0` in IEEE); a
-    * bucket absent from the map contributes nothing to z exactly as
-    * the former INNER join against the support relation dropped it;
-    * every reduction is an exact DECIMAL(38,12) sum so regrouping
-    * identical terms is bit-neutral; and the update
-    * `w − lr·(g/n)` runs the same IEEE ops the left-join expression
-    * evaluated (`LogitPathParitySpec`-class pinning via
-    * LinearModelSpec's literal/relation parity test).
+    * Every reduction is an exact DECIMAL(38,12) sum, so regrouping the
+    * identical terms is bit-neutral. A bucket no document carries is
+    * absent from the gradient and keeps its weight: it starts at +0.0
+    * and stays there, and its zero term (an exact DECIMAL zero) never
+    * moves a z (the oracle's `w − lr·(coalesce(g, 0)/n)` leaves it
+    * unchanged too). The update `w − lr·(g/n)` is the oracle's weight
+    * CTE, op for op.
     *
     * @param withLoss when false, the loss expressions are skipped
     *   entirely (loss is observational — it never feeds the weight
     *   trajectory); the returned per-iter losses are NaN.
-    * @return (final weight map, per-iter (iter, map, loss), fd — the
-    *   checkpointed per-doc feature-array relation the apply reuses)
-    */
-  private def logitTrajectoryRel(docs: DataFrame, idCol: String,
-      textCol: String, label: Column, buckets: Int, iters: Int,
-      lr: Double, withLoss: Boolean)
-      : (java.util.HashMap[java.lang.Long, java.lang.Double],
-         Seq[(Int, java.util.HashMap[java.lang.Long, java.lang.Double], Double)],
-         DataFrame) = {
-    require(buckets >= 1 && iters >= 1)
-    val spark = docs.sparkSession
-    val fd = featuresByDoc(docs, idCol, textCol, label, buckets)
-      .localCheckpoint(eager = false)
-    val n = fd.count() // == docs count: every doc emits a bias row
-    require(n > 0, "empty training set")
-    val lnSigLit = typedLit(lnSigTable.toSeq)
-    val ln1mLit = typedLit(ln1mSigTable.toSeq)
-    var w = new java.util.HashMap[java.lang.Long, java.lang.Double]()
-    val iterOut = (1 to iters).map { it =>
-      val bc = spark.sparkContext.broadcast(w)
-      val zs0 = fd.withColumn("__z", zDotMapUdf(bc)(col("__f")))
-        .withColumn("__idx",
-          least(greatest(floor((col("__z") + 8.0) * 32.0).cast("int"),
-            lit(0)), lit(511)))
-        .withColumn("__sig",
-          element_at(typedLit(sigmoidTable.toSeq), col("__idx") + 1))
-        .withColumn("__resid", col("__sig") - col("__y"))
-      val (zs, obs) =
-        if (!withLoss) (zs0, None)
-        else {
-          val o = Observation(s"logit_rel_loss_${System.nanoTime()}")
-          (zs0.withColumn("__lt",
-              -(col("__y") * element_at(lnSigLit, col("__idx") + 1) +
-                (lit(1.0) - col("__y")) * element_at(ln1mLit, col("__idx") + 1)))
-            .observe(o, sum(col("__lt").cast("decimal(38,12)"))
-              .cast("double").as("l")),
-            Some(o))
-        }
-      val g = zs.select(col("__resid"), explode(col("__f")).as("__t"))
-        .select(col("__t.bucket").as("bucket"),
-          (col("__resid") * col("__t.xnorm")).cast("decimal(38,12)").as("__g"))
-        .groupBy("bucket")
-        .agg(sum(col("__g")).cast("double").as("g"))
-        .collect()
-      val loss = obs.map(_.get("l").asInstanceOf[Double] / n)
-        .getOrElse(Double.NaN)
-      val next =
-        new java.util.HashMap[java.lang.Long, java.lang.Double](w)
-      // every support bucket appears in g (each doc contributes a
-      // residual row for each of its buckets), so this updates the
-      // whole support — buckets never seen stay off-map (+0.0)
-      g.foreach { r =>
-        val b = r.getLong(0)
-        val prev = w.get(b)
-        val w0 = if (prev == null) 0.0 else prev.doubleValue()
-        next.put(b, w0 - lr * (r.getDouble(1) / n))
-      }
-      w = next
-      (it, w, loss)
-    }
-    (w, iterOut, fd)
-  }
-
-  /** One-row-per-doc (idCol, sigma/z outputs) for a weight MAP over a
-    * [[featuresByDoc]] frame — the relation-width twin of
-    * [[zSigmaArr]].
-    */
-  private def zSigmaMap(fd: DataFrame,
-      bc: org.apache.spark.broadcast.Broadcast[
-        java.util.HashMap[java.lang.Long, java.lang.Double]]): DataFrame = {
-    val sigLit = typedLit(sigmoidTable.toSeq)
-    fd.withColumn("__z", zDotMapUdf(bc)(col("__f")))
-      .withColumn("__idx",
-        least(greatest(floor((col("__z") + 8.0) * 32.0).cast("int"), lit(0)),
-          lit(511)))
-      .withColumn("__sig", element_at(sigLit, col("__idx") + 1))
-  }
-
-  /** Driver-loop GD at literal-model widths over the [[featuresByDoc]]
-    * ARRAY layout: the feature relation shuffles ONCE at build time;
-    * each iteration is then a single action — per-row z/σ̃/residual
-    * (no join, no per-doc exchange), the bucket-sized gradient
-    * aggregate, and (under `withLoss`) the mean-ln-loss summed as an
-    * OBSERVED metric on the same action instead of a second
-    * checkpoint+collect. Every reduction is an exact DECIMAL(38,12)
-    * sum, so regrouping the identical terms is bit-neutral and the
-    * weight trajectory replays unchanged (LogitPathParitySpec pins it
-    * against the untouched relation path).
-    *
-    * `withLoss = false` additionally skips the loss expressions; the
-    * traj rows' loss slots are NaN (callers that skip loss never emit
-    * them).
+    * @return (per-iter (iter, broadcast weights AFTER the update,
+    *   loss BEFORE it), fd — the checkpointed per-doc feature-array
+    *   relation the apply reuses)
     */
   private def logitTrajectory(docs: DataFrame, idCol: String,
       textCol: String, label: Column, buckets: Int, iters: Int,
-      lr: Double, withLoss: Boolean): (Array[Double],
-        Seq[(Int, Long, Double, Double)], DataFrame) = {
+      lr: Double, withLoss: Boolean)
+      : (Seq[(Int, Broadcast[Array[Double]], Double)], DataFrame) = {
     require(buckets >= 1 && iters >= 1)
+    val sc = docs.sparkSession.sparkContext
     val fd = featuresByDoc(docs, idCol, textCol, label, buckets)
       .localCheckpoint(eager = false)
     val n = fd.count() // == docs count: every doc emits a bias row
     require(n > 0, "empty training set")
     val lnSigLit = typedLit(lnSigTable.toSeq)
     val ln1mLit = typedLit(ln1mSigTable.toSeq)
-    var w = Array.fill(buckets + 1)(0.0)
-    val traj = (1 to iters).flatMap { it =>
-      val zs0 = zSigmaArr(fd, w)
+    var w = sc.broadcast(new Array[Double](buckets + 1))
+    val traj = (1 to iters).map { it =>
+      val zs0 = withSigma(fd.withColumn("__z", zDotUdf(w)(col("__f"))))
         .withColumn("__resid", col("__sig") - col("__y"))
       val (zs, obs) =
         if (!withLoss) (zs0, None)
@@ -729,14 +536,19 @@ object LinearModel {
           (col("__resid") * col("__t.xnorm")).cast("decimal(38,12)").as("__g"))
         .groupBy("bucket")
         .agg(sum(col("__g")).cast("double").as("g"))
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+        .collect()
       val loss = obs.map(_.get("l").asInstanceOf[Double] / n)
         .getOrElse(Double.NaN)
-      w = Array.tabulate(buckets + 1)(b =>
-        w(b) - lr * (g.getOrElse(b.toLong, 0.0) / n))
-      (0 to buckets).map(b => (it, b.toLong, w(b), loss))
+      val prev = w.value
+      val next = prev.clone()
+      g.foreach { r =>
+        val b = r.getLong(0).toInt
+        next(b) = prev(b) - lr * (r.getDouble(1) / n)
+      }
+      w = sc.broadcast(next)
+      (it, w, loss)
     }
-    (w, traj, fd)
+    (traj, fd)
   }
 
   /** Train-then-apply paying the regex feature extraction ONCE: the id-

@@ -1072,29 +1072,24 @@ object TrainQueries {
         .orderBy(desc("threshold"))
     }),
 
-    // the logistic gate at a REALISTIC model size: 8192 hash buckets
-    // — past the literal-model ceiling, so the public API routes to
-    // the broadcast-relation path (weights live as a (bucket, w)
-    // relation broadcast-joined against the features; the GD update
-    // is a model-sized left join, nothing model-sized collects or
-    // inlines into a plan — the shape that holds at fastText's 2M
-    // default). Same oracle family: the DuckDB weight CTEs were
-    // always relational, only the modulus and vector length change.
+    // the logistic gate at a REALISTIC model size: 8192 hash buckets,
+    // on the same path as the 64-bucket gates (the dense weight array
+    // broadcasts once per GD iteration and once for the apply; nothing
+    // model-sized inlines into a plan). Same oracle family: the DuckDB
+    // weight CTEs are relational, only the modulus and vector length
+    // change.
     "q_logit_big" -> ((s, d) =>
       graft.operators.LinearModel.fitPredictLogit(Tables.documents(s, d),
           label = graft.operators.TextOps.qualityScore(col("text")) >= 0.5,
           buckets = 8192)
         .orderBy("doc_id")),
 
-    // the MB-scale model shape END TO END: 262144 hash buckets — AT
-    // the measured literal/relation crossover (~2.6e5 buckets,
-    // tools/LogitBench) and two orders past the plan-literal ceiling.
-    // The broadcast weight-RELATION path carries it: ~2 MB of weights
-    // broadcast once per iteration, the GD update a model-sized left
-    // join, nothing model-sized ever collects to the driver or
-    // inlines into a plan — the exact shape a fastText-default 2M-
-    // bucket model takes, one doubling short. Oracle structurally
-    // unchanged (the DuckDB weight CTEs were always relational).
+    // the MB-scale model shape END TO END: 262144 hash buckets, a
+    // ~2 MB dense weight array broadcast once per iteration; the
+    // gradient collect stays support-sized and nothing model-sized
+    // inlines into a plan — the shape a fastText-default 2M-bucket
+    // model takes, three doublings short. Oracle structurally
+    // unchanged (the DuckDB weight CTEs are relational).
     "q_logit_huge" -> ((s, d) =>
       graft.operators.LinearModel.fitPredictLogit(Tables.documents(s, d),
           label = graft.operators.TextOps.qualityScore(col("text")) >= 0.5,
@@ -1103,14 +1098,12 @@ object TrainQueries {
 
     // fastText-REAL width: 2,097,152 hash buckets (the fastText
     // default `-bucket 2000000` rounded to the next power of two),
-    // 8x past q_logit_huge's crossover gate. Nothing structural
-    // changes — that is the point being PROVEN rather than argued:
-    // the weight relation broadcasts ~34 MB once per iteration
-    // (fine for any executor; at this width a real deployment flips
-    // spark.sql.autoBroadcastJoinThreshold or lets AQE pick a
-    // shuffle join, both correct), the GD update stays a model-sized
-    // left join, the feature scan still dominates. The oracle's
-    // weight CTEs are relational and width-parameterized, unchanged.
+    // 8x past q_logit_huge. Nothing structural changes — that is the
+    // point being PROVEN rather than argued: the ~16 MB dense weight
+    // array broadcasts once per iteration and once for the apply, the
+    // gradient collect stays support-sized, the feature scan still
+    // dominates. The oracle's weight CTEs are relational and
+    // width-parameterized, unchanged.
     "q_logit_2m" -> ((s, d) =>
       graft.operators.LinearModel.fitPredictLogit(Tables.documents(s, d),
           label = graft.operators.TextOps.qualityScore(col("text")) >= 0.5,
@@ -1118,11 +1111,10 @@ object TrainQueries {
         .orderBy("doc_id")),
 
     // train on the standing corpus, score the STREAM forever: the
-    // fitted 65-double logit model broadcasts as literals and each
-    // arriving micro-batch scores via the stateless per-doc projection
-    // (foreachBatch — the feature build's per-doc window is batch-local
-    // machinery, not stream state). Bit-parity with the batch apply,
-    // shared oracle.
+    // fitted 65-double logit model broadcasts into the fused per-row
+    // scorer once per arriving micro-batch, a stateless per-doc
+    // projection (foreachBatch; no explode, no shuffle, no stream
+    // state). Bit-parity with the batch apply, shared oracle.
     "q_stream_logit" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val w = graft.operators.LinearModel.logitWeights(docs,
@@ -1984,10 +1976,9 @@ object TrainQueries {
     */
   /** `buckets` parameterizes ONLY the hash modulus, the bias-bucket
     * index and the weight-vector length — the CTE structure is
-    * bucket-count-agnostic (weights are a RELATION in the oracle just
-    * as in the Spark relation path, which is why the 64-bucket
-    * literal-model gates and the 8192-bucket broadcast-relation gate
-    * share one oracle family).
+    * bucket-count-agnostic (weights are a RELATION in the oracle, so
+    * the 64-bucket gates and the 8192 to 2M-bucket gates share one
+    * oracle family).
     */
   private def logitFeatSqlFor(buckets: Int): String = {
     def l(a: Array[Double]) = a.mkString("[", ",", "]")

@@ -2685,40 +2685,21 @@ class SnapshotStoreOps(protected val fs: StoreFs) {
           .sortWithinPartitions("__b", keyCol)
           .write.mode(SaveMode.Overwrite).partitionBy("__b").parquet(tmp)
       case None =>
-        // repartitionByRange derives its range bounds from a SAMPLING
-        // JOB over its child — without intervention the child (a
-        // merge's read+anti-join+union pipeline, a compaction's full
-        // table read) executes TWICE per commit: once for the sample,
-        // once for the shuffle map stage. Persist the child for the
-        // duration of the write so both passes read materialized
-        // blocks; the range layout itself (filesPerCommit files, tight
-        // per-file envelopes — what the pruning gates REQUIRE) is
-        // unchanged because the same rows feed the same partitioner.
-        // MEMORY_AND_DISK: a commit's rewrite set is change-set-sized
-        // (hit files + batch), not table-sized, and spills rather than
-        // recomputes. `spark.graft.store.writePersist=false` restores
-        // the unpersisted shape.
-        val persistWrite = java.lang.Boolean.parseBoolean(
-          spark.conf.get("spark.graft.store.writePersist", "false"))
+        // repartitionByRange samples its child, so the child runs twice
+        // (ROADMAP "commit-write double execution" is the fix)
         val src = layout match {
           case None => aligned
           case Some(z) => aligned.withColumn("__layout", z)
         }
-        val pinned =
-          if (persistWrite)
-            src.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          else src
-        try {
-          val clustered = layout match {
-            case None => pinned.repartitionByRange(filesPerCommit, col(keyCol))
-              .sortWithinPartitions(keyCol)
-            case Some(_) => pinned
-              .repartitionByRange(filesPerCommit, col("__layout"))
-              .sortWithinPartitions("__layout")
-              .drop("__layout")
-          }
-          clustered.write.mode(SaveMode.Overwrite).parquet(tmp)
-        } finally if (persistWrite) pinned.unpersist(blocking = false)
+        val clustered = layout match {
+          case None => src.repartitionByRange(filesPerCommit, col(keyCol))
+            .sortWithinPartitions(keyCol)
+          case Some(_) => src
+            .repartitionByRange(filesPerCommit, col("__layout"))
+            .sortWithinPartitions("__layout")
+            .drop("__layout")
+        }
+        clustered.write.mode(SaveMode.Overwrite).parquet(tmp)
     }
     val destRel = if (staged) s"$stagePrefix$uuid" else "data"
     fs.mkdirs(s"$root/$destRel")

@@ -13,9 +13,6 @@ object CommitProbe {
     val spark = graft.GraftSession.local(32, 32)
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000000L).selectExpr("sum(id)").collect()
-    // before/after switch for the write-persist change
-    sys.env.get("GRAFT_WRITE_PERSIST").foreach(v =>
-      spark.conf.set("spark.graft.store.writePersist", v))
 
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val verbose = sys.env.get("GRAFT_PROBE_VERBOSE").contains("1")

@@ -113,4 +113,27 @@ class FusedLogitScorerSpec extends AnyFunSuite with SparkTest {
       .orderBy("doc_id").collect().map(_.toSeq)
     assert(viaRel.toSeq == dense.toSeq)
   }
+
+  test("predictLogitWithRel rejects a malformed weight relation") {
+    import spark.implicits._
+    val docs = adversarial
+    def fails(rows: Seq[(Long, Double)], msg: String): Unit = {
+      val e = intercept[IllegalArgumentException](LinearModel
+        .predictLogitWithRel(docs, rows.toDF("bucket", "w"), buckets = buckets))
+      assert(e.getMessage.contains(msg), e.getMessage)
+    }
+    val full = (0 to buckets).map(b => (b.toLong, w(b)))
+    fails(full :+ ((buckets + 1).toLong -> 1.0), "more than 65 rows")
+    fails(Seq(0L -> 1.0, (buckets + 1).toLong -> 1.0),
+      s"bucket ${buckets + 1} is outside [0, $buckets]")
+    fails(Seq(-1L -> 1.0), s"bucket -1 is outside [0, $buckets]")
+    fails(Seq(3L -> 1.0, 3L -> 2.0), "repeats bucket 3")
+    // an absent bucket scores with weight 0.0
+    val sparse = full.filter(_._1 % 2 == 0)
+    val dense = Array.tabulate(buckets + 1)(b => if (b % 2 == 0) w(b) else 0.0)
+    assert(LinearModel.predictLogitWithRel(docs, sparse.toDF("bucket", "w"),
+        buckets = buckets).orderBy("doc_id").collect().toSeq ==
+      LinearModel.predictLogitWith(docs, dense, buckets = buckets)
+        .orderBy("doc_id").collect().toSeq)
+  }
 }

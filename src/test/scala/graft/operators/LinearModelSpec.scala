@@ -70,28 +70,33 @@ class LinearModelSpec extends AnyFunSuite with SparkTest {
       s"final loss ${losses.last} did not halve the ln 2 start")
   }
 
-  test("literal and relation model paths are bit-equal at a common bucket count") {
-    // same corpus, same bucket count, both representations: the
-    // trajectories and predictions must be IDENTICAL doubles — the
-    // contract that lets the large-bucket gate share the oracle family
-    val lit64 = LinearModel.fitPredictLogitVia(docs, "doc_id", "text",
-        qualityLabel, buckets = 64, iters = 3, lr = 0.5,
-        viaRelation = false)
-      .orderBy("doc_id").collect().map(_.toSeq)
-    val rel64 = LinearModel.fitPredictLogitVia(docs, "doc_id", "text",
-        qualityLabel, buckets = 64, iters = 3, lr = 0.5,
-        viaRelation = true)
-      .orderBy("doc_id").collect().map(_.toSeq)
-    assert(lit64.toSeq == rel64.toSeq)
-    // the relation-artifact apply matches the fused train+predict
-    val wRel = LinearModel.logitWeightsRel(docs, label = qualityLabel,
-      buckets = 64, iters = 3, lr = 0.5)
-    val applied = LinearModel.predictLogitWithRel(docs, wRel, buckets = 64)
-      .orderBy("doc_id").collect().map(_.toSeq)
-    assert(applied.toSeq == rel64.toSeq)
-    // auto-routing: past the threshold the public API takes the
-    // relation path and still returns one row per doc
-    assert(LinearModel.literalModelMaxBuckets == 4096)
+  test("the weight-relation artifact scores like fitPredictLogit") {
+    // the stored (bucket, w) model applied back must reproduce the fused
+    // train+predict bit for bit, at the default width and at
+    // q_logit_big's
+    for (b <- Seq(64, 8192)) {
+      val fitted = LinearModel.fitPredictLogit(docs, label = qualityLabel,
+          buckets = b, iters = 3, lr = 0.5)
+        .orderBy("doc_id").collect().map(_.toSeq)
+      val wRel = LinearModel.logitWeightsRel(docs, label = qualityLabel,
+        buckets = b, iters = 3, lr = 0.5)
+      assert(wRel.count() == b + 1L)
+      val applied = LinearModel.predictLogitWithRel(docs, wRel, buckets = b)
+        .orderBy("doc_id").collect().map(_.toSeq)
+      assert(applied.toSeq == fitted.toSeq, s"buckets=$b")
+    }
+  }
+
+  test("logit training fails loudly on a repeated document id") {
+    import spark.implicits._
+    val dup = Seq((1L, "alpha beta", true), (2L, "gamma", false),
+      (1L, "alpha beta", true)).toDF("doc_id", "text", "y")
+    val e = intercept[Exception](
+      LinearModel.fitPredictLogit(dup, label = col("y")).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("id column 'doc_id' is not unique")),
+      msgs.mkString(" | "))
   }
 
   test("logit learns a planted n-gram signal to high accuracy") {
