@@ -2,7 +2,7 @@ package graft.cli
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.dsl.{SheetParser, Validation}
+import graft.dsl.{Identifiers, SheetParser, Validation}
 import graft.engine.TsaEngine
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -309,7 +309,8 @@ object TsaBatch {
         Some(s"Datan tarkasteluväli ${t(f)}-${t(u)}")
       }
     }.getOrElse("Ei dataa saatavilla")
-    def delta(c: String) = s.map(row => fmtDelta(row.getAs[Long](c))).getOrElse("-")
+    def delta(c: String) = s.map(row => Identifiers.strfdelta(row.getAs[Long](c),
+      "{days} pv {hours} h {minutes} min")).getOrElse("-")
     def pct(c: String) = s.map(row => "%.2f %%".formatLocal(java.util.Locale.ROOT,
       row.getAs[Double](c) * 100)).getOrElse("-")
     Pptx.Slide(
@@ -326,10 +327,6 @@ object TsaBatch {
       timeline = timeline,
       footer = "graft TSA engine")
   }
-
-  /** Reference `strfdelta(td, '{days} pv {hours} h {minutes} min')`. */
-  private def fmtDelta(secs: Long): String =
-    s"${secs / 86400} pv ${secs % 86400 / 3600} h ${secs % 3600 / 60} min"
 
   /** `--input` is either the reference's native entry point — one
     * `.xlsx` workbook (tsa/analysis_collection.py:71), read by the

@@ -3,7 +3,7 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{ConditionEval, PackRanges}
-import graft.dsl.ErrorCollector
+import graft.dsl.{ErrorCollector, Validation}
 import graft.model._
 import scala.collection.mutable
 
@@ -134,28 +134,18 @@ final class TsaEngine(spark: SparkSession, maxMinutes: Int = 30) {
         s"""Station id "${p.stationId}" not present in observation data for this period""")
     }
 
-    // Resolve sensor ids (tsa/block.py:181-193); unresolved → condition
-    // is skipped with a recorded error, not a crash.
-
-    val resolved: Vector[(ConditionSpec, Boolean)] = coll.conditions.map { spec =>
-      var ok = true
-      val blocks = spec.blocks.map {
-        case p: PrimaryBlock =>
-          sensorIds.get(p.sensorName) match {
-            case Some(id) => p.copy(sensorId = Some(id))
-            case None =>
-              errsOf(spec).add(s"""No sensor id found by sensor name "${p.sensorName}"""")
-              ok = false; p
-          }
-        case s => s
-      }
-      (spec.copy(blocks = blocks), ok)
-    }
+    // Resolve sensor ids (tsa/block.py:181-193); a condition runs iff
+    // every primary block resolved — otherwise it is skipped with a
+    // recorded error, not a crash.
+    val resolved = coll.conditions.map(spec =>
+      Validation.resolveSensorIds(spec, sensorIds, errsOf(spec)))
+    val okById = resolved.map(s => s.idString -> s.blocks.forall {
+      case p: PrimaryBlock => p.sensorId.isDefined
+      case _ => true
+    }).toMap
 
     // Topological order over secondary references (SURVEY.md §7.4 pt 4).
-    val specById = resolved.map { case (s, _) => s.idString -> s }.toMap
-    val okById = resolved.map { case (s, ok) => s.idString -> ok }.toMap
-    val order = topoSort(resolved.map(_._1), errsOf)
+    val order = topoSort(resolved, errsOf)
 
     // Pack ALL primary blocks of runnable conditions in one pass.
     val runnable = order.filter(s => okById(s.idString))

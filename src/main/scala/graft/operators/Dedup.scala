@@ -35,14 +35,10 @@ object Dedup {
     * subtree on the driver per call and bypass AQE's view of the plan;
     * the exchange itself is cheap relative to the per-row signature
     * work it parallelizes, and every downstream consumer shuffles on a
-    * key anyway. On a cluster whose scans are already wide (100 MB+
-    * files → thousands of scan partitions) the extra exchange buys
-    * nothing — set `spark.graft.spread=false` there to make it a no-op
-    * (a session-conf read, not a plan probe).
+    * key anyway.
     */
   private[graft] def spread(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.get("spark.graft.spread", "true") == "false") df
-    else df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
   /** Exact dedup: one survivor (min id) per fingerprint.
     * Returns (idCol, textCol…) of survivors only.

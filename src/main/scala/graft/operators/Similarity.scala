@@ -33,18 +33,6 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.fvecCosine(a, b)
 
-  /** Brute-force cosine top-k: every query against every vector.
-    * Norms are precomputed per side BEFORE the join (never recomputed
-    * per pair), queries broadcast. Exact baseline for ANN recall.
-    *
-    * @return (query_id, vec_id, cos_sim, rank) with rank 1..k
-    */
-  /** Spread before interpreted per-row array math — see [[Dedup.spread]]
-    * (unconditional round-robin; `spark.graft.spread=false` disables on
-    * clusters whose scans are already wide).
-    */
-  private def spread(df: DataFrame): DataFrame = Dedup.spread(df)
-
   /** Compiled primitives for the dense inner loops: a row-at-a-time UDF
     * over `array<float>` deserializes (and boxes) both arrays per PAIR,
     * which dominates dense self-joins. mapPartitions with one side
@@ -66,6 +54,12 @@ object Similarity {
   private def round6(x: Double): Double =
     java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
+  /** Brute-force cosine top-k: every query against every vector.
+    * Norms are precomputed per side BEFORE the join (never recomputed
+    * per pair), queries broadcast. Exact baseline for ANN recall.
+    *
+    * @return (query_id, vec_id, cos_sim, rank) with rank 1..k
+    */
   def bruteForceTopK(vectors: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
@@ -74,7 +68,7 @@ object Similarity {
         .as[(Long, Array[Float])].collect().sortBy(_._1)
         .map { case (id, e) => (id, e, math.sqrt(dotd(e, e))) }
     val qb = spark.sparkContext.broadcast(qs)
-    val sims = spread(vectors)
+    val sims = Dedup.spread(vectors)
       .select(col("vec_id").cast("long"), col("embedding"))
       .as[(Long, Array[Float])]
       .mapPartitions { it =>
@@ -161,7 +155,7 @@ object Similarity {
       df.select(col(idCol), posexplode(allBuckets(col("embedding"))))
         .select(col(idCol), col("pos").as("table"), col("col").as("bucket"))
 
-    val v = tablesOf(spread(vectors), "vec_id")
+    val v = tablesOf(Dedup.spread(vectors), "vec_id")
     val q = tablesOf(queries.withColumnRenamed("vec_id", "query_id"), "query_id")
 
     // dedup multi-table collisions on IDS ONLY — shuffling the
@@ -362,7 +356,7 @@ object Similarity {
               nCells: Int = 16, nIters: Int = 3, nProbe: Int = 4): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
-    val vecs = spread(vectors).select(col("vec_id").cast("long"), col("embedding"))
+    val vecs = Dedup.spread(vectors).select(col("vec_id").cast("long"), col("embedding"))
       .as[(Long, Array[Float])]
 
     val centroids = kmeansFit(vecs, dim, nCells, nIters)
@@ -398,7 +392,7 @@ object Similarity {
     val subDim = dim / m
     val spark = vectors.sparkSession
     import spark.implicits._
-    val vecs = spread(vectors)
+    val vecs = Dedup.spread(vectors)
       .select(col("vec_id").cast("long"), col("embedding"))
       .as[(Long, Array[Float])]
       // training makes nIters passes; pay the scan once
@@ -549,7 +543,7 @@ object Similarity {
   def vectorBuckets(vectors: DataFrame, dim: Int, nPlanes: Int = 8,
                     nTables: Int = 12): DataFrame = {
     val allBuckets = bucketsUdf(dim, nPlanes, nTables)
-    spread(vectors)
+    Dedup.spread(vectors)
       .select(col("vec_id").cast("long").as("id"), col("embedding"))
       .select(col("id"), posexplode(allBuckets(col("embedding"))))
       .select(col("id"), col("pos").as("table"), col("col").as("bucket"))
@@ -636,7 +630,7 @@ object Similarity {
 
   def cosinePairsLsh(vectors: DataFrame, threshold: Double, dim: Int,
                      nPlanes: Int = 8, nTables: Int = 12): DataFrame = {
-    val base = spread(vectors)
+    val base = Dedup.spread(vectors)
       .select(col("vec_id").cast("long").as("id"), col("embedding"))
     val banded = vectorBuckets(vectors, dim, nPlanes, nTables)
     val candidates = banded.groupBy("table", "bucket")
@@ -668,7 +662,7 @@ object Similarity {
         .as[(Long, Array[Float])].collect().sortBy(_._1)
         .map { case (id, e) => (id, e, math.sqrt(dotd(e, e))) }
     val ab = spark.sparkContext.broadcast(all)
-    spread(vectors)
+    Dedup.spread(vectors)
       .select(col("vec_id").cast("long"), col("embedding"))
       .as[(Long, Array[Float])]
       .mapPartitions { it =>
@@ -803,7 +797,7 @@ object Similarity {
     val spark = vectors.sparkSession
     import spark.implicits._
     val subDim = dim / m
-    val vecs = spread(vectors)
+    val vecs = Dedup.spread(vectors)
       .select(col("vec_id").cast("long"), col("embedding"))
       .as[(Long, Array[Float])]
       .localCheckpoint(eager = false) // coarse + m subspace fits share the scan
@@ -927,7 +921,7 @@ object Similarity {
                nIters: Int = 3, tau: Double = 0.3): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
-    val vecs = spread(vectors)
+    val vecs = Dedup.spread(vectors)
       .select(col("vec_id").cast("long"), col("embedding"))
       .as[(Long, Array[Float])]
     val centroids = kmeansFit(vecs, dim, nCells, nIters)
@@ -982,7 +976,7 @@ object Similarity {
     val spark = vectors.sparkSession
     import spark.implicits._
     require(q > 0 && q <= 1)
-    val vecs = spread(vectors)
+    val vecs = Dedup.spread(vectors)
       .select(col("vec_id").cast("long"), col("embedding"))
       .as[(Long, Array[Float])]
     val centroids = kmeansFit(vecs, dim, nCells, nIters)
@@ -1308,7 +1302,7 @@ object Similarity {
         .select(col("vec_id").cast("long"), col("bits"))
         .as[(Long, Array[Long])].collect().sortBy(_._1)
     val qb = spark.sparkContext.broadcast(qs)
-    val dists = binaryQuantize(spread(vectors), idCol, vecCol)
+    val dists = binaryQuantize(Dedup.spread(vectors), idCol, vecCol)
       .select(col("vec_id").cast("long"), col("bits"))
       .as[(Long, Array[Long])]
       .mapPartitions { it =>

@@ -2648,6 +2648,16 @@ class SnapshotStoreOps(protected val fs: StoreFs) {
                      bucketN: Option[Int] = None,
                      renames: Vector[Rename] = Vector.empty,
                      props: Map[String, String] = Map.empty): Staged = {
+    // parsed before anything is written: a junk value fails the commit
+    // without leaving data files behind
+    val footerStatsKey = "spark.graft.store.footerStats"
+    val footerStatsOn =
+      spark.conf.get(footerStatsKey, "true").trim.toLowerCase(java.util.Locale.ROOT) match {
+        case "true" => true
+        case "false" => false
+        case v => throw new IllegalArgumentException(
+          s"""$footerStatsKey must be true or false, got "$v"""")
+      }
     val uuid = java.util.UUID.randomUUID().toString.take(8)
     // scratch lives UNDER the store root — the hop into data/ below
     // is then same-filesystem by construction (an atomic move from
@@ -2742,8 +2752,7 @@ class SnapshotStoreOps(protected val fs: StoreFs) {
     // scan path unchanged — `spark.graft.store.footerStats=false`
     // forces the scan.
     val footerStats: Option[Vector[FileEntry]] =
-      if (moved.isEmpty || bloomBits > 0 ||
-          spark.conf.get("spark.graft.store.footerStats", "true") == "false")
+      if (moved.isEmpty || bloomBits > 0 || !footerStatsOn)
         None
       else {
         import org.apache.spark.sql.types._

@@ -41,17 +41,4 @@ object StreamingCondition {
       wide.select(col(keyCol).cast("int").as("block_id"),
         col(tsCol).as("tfrom"), encode3vl(master).as("enc")),
       maxMinutes)
-
-  /** Convenience: compile a DSL expression against alias→Column
-    * bindings (e.g. `"a and not b"` with a → `col("se_27") === 8`).
-    */
-  def compileWith(expr: Expr, bindings: Map[String, Column]): Column = {
-    def go(e: Expr): Column = e match {
-      case Expr.Ref(a) => bindings(a)
-      case Expr.And(l, r) => go(l) && go(r)
-      case Expr.Or(l, r) => go(l) || go(r)
-      case Expr.Not(x) => !go(x)
-    }
-    go(expr)
-  }
 }

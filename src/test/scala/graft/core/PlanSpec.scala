@@ -1,14 +1,23 @@
 package graft.core
 
 import graft.SparkTest
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Plan-shape assertions: the optimizations we rely on at 100 TB must
   * survive refactors — filter/column pushdown into the parquet scan,
   * broadcast of dimension tables, and one shuffle feeding each window
   * pass of the pack kernel (SURVEY.md §4, §7.4 pt 6).
   */
-class PlanSpec extends AnyFunSuite with SparkTest {
+class PlanSpec extends AnyFunSuite with SparkTest with AdaptiveSparkPlanHelper {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -63,13 +72,6 @@ class PlanSpec extends AnyFunSuite with SparkTest {
     assert(!plan.contains("CartesianProduct"), plan)
     // (the one sort-merge join — all-docs LEFT JOIN weights on id — is
     // correct: both sides are corpus-sized)
-  }
-
-  test("q_pagerank: no cartesian product across five unrolled iterations") {
-    val plan = physicalPlan("q_pagerank")
-    // the only nested-loop joins allowed are the broadcast one-row
-    // dangling-mass scalars
-    assert(!plan.contains("CartesianProduct"), plan)
   }
 
   test("pack kernel: block keys broadcast; one exchange feeds each window pass") {
@@ -189,7 +191,6 @@ class PlanSpec extends AnyFunSuite with SparkTest {
   }
 
   test("HLL sketch: (group,bucket) then group — exactly two exchanges, no join") {
-    import org.apache.spark.sql.functions._
     val toks = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("source"),
         explode(graft.operators.TextOps.tokens(lower(col("text")))).as("term"))
@@ -326,10 +327,135 @@ class PlanSpec extends AnyFunSuite with SparkTest {
     }
   }
 
-  test("kcore: equi-joins only across all unrolled peel rounds") {
-    val plan = physicalPlan("q_kcore")
-    assert(!plan.contains("CartesianProduct"), plan)
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
+  /** Executed plan of every action `body` runs, in order. The graph
+    * loops localCheckpoint each round, and every localCheckpoint is an
+    * action of its own, so this sees each unrolled round, where the
+    * returned frame's plan shows only the last checkpoint's scan. A
+    * marker collect follows `body`; the listener bus delivers in order,
+    * so the marker's callback means every earlier plan has arrived.
+    */
+  private def actionPlans(body: => DataFrame): Vector[(String, SparkPlan)] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
+    val marker = spark.range(1).toDF()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe eq marker.queryExecution) markerSeen.countDown()
+        else plans.add(fn -> qe.executedPlan)
+      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body.collect()
+      marker.collect()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not deliver the marker action")
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toVector
+  }
+
+  /** The graph gates' edge frames at gate scale: supplier→customer
+    * links for the link-analysis loops, and the co-purchase pairs
+    * (equi-self-join spelling, repeat pairs for label propagation).
+    */
+  private def linkEdges: DataFrame = {
+    val li = graft.sources.Tables.lineitem(spark, sf).select(col("l_orderkey"), col("l_suppkey"))
+    val ord = graft.sources.Tables.orders(spark, sf).select(col("o_orderkey"), col("o_custkey"))
+    li.join(ord, col("l_orderkey") === col("o_orderkey"))
+      .select(concat(lit("s"), col("l_suppkey").cast("string")).as("src"),
+        concat(lit("c"), col("o_custkey").cast("string")).as("dst"))
+  }
+  private def orderParts: DataFrame = graft.sources.Tables.lineitem(spark, sf)
+    .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
+  private def coPurchase: DataFrame = orderParts.as("a").join(orderParts.as("b"),
+      col("a.o") === col("b.o") && col("a.p") < col("b.p"))
+    .select(col("a.p").as("src"), col("b.p").as("dst"))
+
+  /** The distributed loop's plans (`smallGraphEdges = 0` forces it at
+    * gate scale): no cartesian product in any round, and a nested-loop
+    * join only where the loop broadcasts a one-row scalar — its build
+    * side is a global (grouping-free) aggregate. The loop must take at
+    * least `minCheckpoints` checkpoints (one or two per round), so the
+    * rounds were really seen: the driver small-graph path checkpoints
+    * only its edge frame.
+    */
+  private def checkLoopPlans(minCheckpoints: Int, scalarJoins: Boolean)(loop: => DataFrame): Unit = {
+    val plans = actionPlans(loop)
+    plans.foreach { case (fn, p) =>
+      assert(collect(p) { case c: CartesianProductExec => c }.isEmpty, s"$fn:\n$p")
+      collect(p) { case j: BroadcastNestedLoopJoinExec => j }.foreach { j =>
+        assert(scalarJoins, s"$fn: nested-loop join:\n$p")
+        val build = if (j.buildSide == BuildRight) j.right else j.left
+        val top = collect(build) { case a: BaseAggregateExec => a }.headOption
+        assert(top.exists(_.groupingExpressions.isEmpty),
+          s"$fn: nested-loop join against a non-scalar side:\n$p")
+      }
+    }
+    val checkpoints = plans.count(_._1 == "localCheckpoint")
+    assert(checkpoints >= minCheckpoints,
+      s"saw $checkpoints checkpoints, want $minCheckpoints: ${plans.map(_._1)}")
+  }
+
+  test("pageRank loop: no cartesian in any of five unrolled iterations") {
+    // the only nested-loop join allowed is the broadcast one-row
+    // dangling-mass scalar
+    checkLoopPlans(minCheckpoints = 5, scalarJoins = true)(graft.operators.Graph.pageRank(
+      linkEdges, "src", "dst", iters = 5, smallGraphEdges = 0L))
+  }
+
+  test("hits loop: no cartesian in any of three unrolled iterations") {
+    // the only nested-loop join allowed is the broadcast one-row L2
+    // norm scalar, once per half-iteration
+    checkLoopPlans(minCheckpoints = 6, scalarJoins = true)(graft.operators.Graph.hits(
+      linkEdges, "src", "dst", iters = 3, smallGraphEdges = 0L))
+  }
+
+  test("kcore loop: equi-joins only across all unrolled peel rounds") {
+    // the gate's k = 80 peels four rounds of this graph, two checkpoints
+    // each; the fourth is the fixpoint that ends the loop early
+    checkLoopPlans(minCheckpoints = 8, scalarJoins = false)(graft.operators.Graph.kcoreMembers(
+      coPurchase, "src", "dst", k = 80, rounds = 8, smallGraphEdges = 0L))
+  }
+
+  test("label propagation loop: equi-joins only across unrolled rounds") {
+    val repeat = coPurchase.groupBy("src", "dst").agg(count(lit(1)).as("w"))
+      .filter(col("w") >= 2)
+    checkLoopPlans(minCheckpoints = 4, scalarJoins = false)(graft.operators.Graph
+      .labelPropagation(repeat, "src", "dst", rounds = 4, smallGraphEdges = 0L))
+  }
+
+  test("graph gates plan the driver small-graph path (LocalTableScan)") {
+    // at gate scale every graph loop replays on the driver: the
+    // returned frame is the local result, not a checkpointed loop
+    for (q <- Seq("q_pagerank", "q_hits", "q_kcore", "q_lpa")) {
+      val plan = physicalPlan(q)
+      assert(plan.contains("LocalTableScan"), s"$q:\n$plan")
+      assert(!plan.contains("ExistingRDD"), s"$q:\n$plan")
+    }
+  }
+
+  test("co-occurrence pairs: no join, one hash exchange above the input") {
+    // bucket-collect: one exchange groups the membership relation and
+    // pair expansion stays local to each group (the self-join spelling
+    // shuffled both join sides and joined them)
+    def formatted(df: DataFrame) = df.queryExecution
+      .explainString(org.apache.spark.sql.execution.FormattedMode)
+    val plan = formatted(graft.operators.Graph.coOccurrencePairs(orderParts, "o", "p"))
+    assert(!plan.contains("Join"), plan)
+    assert(hashExchanges(plan) - hashExchanges(formatted(orderParts)) == 1, plan)
+  }
+
+  test("logit apply over a weight relation: no Window, no exchange") {
+    // the fused scorer is a per-doc projection: tokenize, hash and dot
+    // inside one udf, the weights broadcast — nothing shuffles
+    val docs = graft.sources.Tables.documents(spark, sf)
+    val wRel = spark.range(65L).select(col("id").as("bucket"),
+      (col("id") % 7).cast("double").as("w"))
+    val plan = graft.operators.LinearModel.predictLogitWithRel(docs, wRel, buckets = 64)
+      .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+    assert(!plan.contains("Window"), plan)
+    assert(!plan.contains("Exchange"), plan)
+    assert(!plan.contains("Join"), plan)
   }
 
   test("bitext scale shape: candidate generation is an equi-join, no cross") {
@@ -424,7 +550,6 @@ class PlanSpec extends AnyFunSuite with SparkTest {
     // scan behind a localCheckpoint barrier; the scoring plan must
     // read that materialized relation — a regex/split node here means
     // the corpus is being re-tokenized per model application
-    import org.apache.spark.sql.functions._
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val scored = graft.operators.LinearModel.fitScoreLogit(docs,
       label = col("lang") === "en", iters = 1)
@@ -456,7 +581,6 @@ class PlanSpec extends AnyFunSuite with SparkTest {
   }
 
   test("merge-on-read scan: delete keys broadcast into a left-anti join") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("morplan").toString + "/t"
     graft.sources.SnapshotStore.init(spark,

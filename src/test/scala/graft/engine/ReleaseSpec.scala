@@ -59,6 +59,31 @@ class ReleaseSpec extends AnyFunSuite with SparkTest {
     }
   }
 
+  test("unknown sensor name: that condition is skipped, the others still run") {
+    val sheet =
+      """start,end
+        |1.2.2018,28.2.2018
+        |site,master_alias,condition
+        |Testi,A1,"s1120#keli_1 in (7, 8)"
+        |Testi,U1,"s1120#keli_1 = 8 and s1120#keli_99 = 1"
+        |Testi,B1,not a1
+        |""".stripMargin
+    val parsed = SheetParser.parse("unk", sheet)
+    assert(parsed.conditionErrors.isEmpty)
+    val results = new TsaEngine(spark).run(parsed.spec.get, obs, Map("keli_1" -> 27))
+    val byId = results.map(r => r.spec.idString -> r).toMap
+    val u = byId("testi_u1")
+    assert(u.data == null && u.summary == null)
+    assert(u.errors.messages == Seq(
+      """No sensor id found by sensor name "keli_99"""",
+      "There were errors with this condition and it will not be analyzed"),
+      u.errors.shortStr)
+    for (id <- Seq("testi_a1", "testi_b1")) {
+      assert(byId(id).errors.isEmpty, byId(id).errors.shortStr)
+      assert(byId(id).data.count() > 0)
+    }
+  }
+
   test("dangling secondary reference records an error, no crash") {
     val sheet =
       """start,end

@@ -14,6 +14,20 @@ class OperatorsSpec extends AnyFunSuite with SparkTest {
   private lazy val docs = spark.read.parquet(s"$sf/documents.parquet")
   private lazy val embs = spark.read.parquet(s"$sf/embeddings.parquet")
 
+  private val Boilerplate =
+    "subscribe to our newsletter today for the latest updates and offers"
+
+  /** `docs` with a fixed boilerplate sentence appended to `hotPct`% of
+    * them (hash-selected, deterministic): its shingles get a document
+    * frequency of about hotPct·N/100, the Zipfian head of a real crawl.
+    * The added ~10 shingles on a ~60-shingle union (J ≈ 0.17) leave the
+    * pairs at threshold 0.5 unchanged.
+    */
+  private def hotCorpus(docs: org.apache.spark.sql.DataFrame, hotPct: Int) =
+    docs.withColumn("text",
+      when(pmod(hash(col("doc_id")), lit(100)) < lit(hotPct),
+        concat(col("text"), lit(" " + Boilerplate))).otherwise(col("text")))
+
   test("exact dedup keeps one survivor per fingerprint") {
     import spark.implicits._
     val withDups = docs.select($"doc_id", $"text")
@@ -112,10 +126,10 @@ class OperatorsSpec extends AnyFunSuite with SparkTest {
 
   test("prefix-filtered jaccard equals naive on a HOT-SHINGLE (Zipfian) corpus") {
     // the regime the prefix path exists for (boilerplate shared by 30%
-    // of docs — see ZipfBench/SCALING.md for the performance side);
+    // of docs — SCALING.md records the performance side);
     // correctness must hold exactly there too: hot shingles leave every
     // prefix, so candidate sets differ wildly while outputs agree
-    val hot = graft.tools.ZipfBench.hotCorpus(docs, hotPct = 30)
+    val hot = hotCorpus(docs, hotPct = 30)
     val naive = Dedup.jaccardPairs(hot, "doc_id", "text", 3, 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val prefix = Dedup.jaccardPairsPrefix(hot, "doc_id", "text", 3, 0.5)

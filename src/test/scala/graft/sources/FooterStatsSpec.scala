@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkTest
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -42,6 +43,54 @@ class FooterStatsSpec extends AnyFunSuite with SparkTest {
     // and the table reads back identically through range skipping
     assert(SnapshotStore.scanKeyRange(spark, viaFooter, 100L, 199L)
       .count() == 100L)
+  }
+
+  /** Spark jobs `body` starts. A marker job follows `body`; the
+    * listener bus delivers in order, so the marker's start means every
+    * job of `body` has been counted.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("fstat.marker") != null)
+          markerSeen.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty("fstat.marker", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("fstat.marker", null)
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not deliver the marker job")
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("footerStats flag: true/false in any case, trimmed; junk throws") {
+    // (manifest, jobs) of one commit under `flag`; the scan path's
+    // stats pass is a Spark job the footer path does not run
+    def initWith(flag: String): (Seq[Any], Int) = {
+      val root = freshRoot("flag")
+      spark.conf.set("spark.graft.store.footerStats", flag)
+      try {
+        val jobs = jobsOf(SnapshotStore.init(spark, base, root, "k",
+          statsCols = Seq("z"), filesPerCommit = 4))
+        (entryMeta(SnapshotStore.currentManifest(root)), jobs)
+      } finally spark.conf.unset("spark.graft.store.footerStats")
+    }
+    val (scanMeta, scanJobs) = initWith("false")
+    val (upperMeta, upperJobs) = initWith("FALSE")
+    val (_, footerJobs) = initWith(" True ")
+    assert(upperMeta == scanMeta)
+    assert(upperJobs == scanJobs && footerJobs < scanJobs,
+      s"jobs: false=$scanJobs FALSE=$upperJobs True=$footerJobs")
+    val e = intercept[IllegalArgumentException](initWith("junk"))
+    assert(e.getMessage.contains("spark.graft.store.footerStats"), e.getMessage)
   }
 
   test("footer path refuses NULL keys exactly like the scan path") {
