@@ -48,34 +48,22 @@ object Bench {
     // every other query.
     val needsFixtures = subset.fold(true)(s =>
       s.exists(graft.queries.TsaQueries.fixtureBackedQueries))
-    val fixtureResults: Map[String, Double] =
-      if (!needsFixtures) Map.empty
-      else graft.queries.TsaQueries.benchFixtures.map { case (name, warm) =>
-        System.gc()
-        val t0 = System.nanoTime()
-        try warm(spark, sfDir) catch { case _: Throwable => () }
-        name -> (System.nanoTime() - t0) / 1e9
-      }.toMap
-    val results = timed.map { case (name, fn) =>
-      // reclaim UNREFERENCED lazy-localCheckpoint blocks from the
-      // previous query (ContextCleaner unpersists on GC): leaked blocks
-      // otherwise accumulate across 60+ queries in this shared JVM and
-      // perturb later measurements by multiples (measured 3.3s vs 13.5s
-      // on the same query isolated vs late-in-suite). Referenced caches
-      // (the condition result catalog) survive — GC only collects what
-      // nothing points to.
-      System.gc()
-      val times = (1 to iters).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }
-      name -> times.min
-    }
-    val all = fixtureResults ++ results
+    val (fixtureTimes, fixtureFailed) =
+      if (!needsFixtures) (Vector.empty, Vector.empty)
+      else timeAll(graft.queries.TsaQueries.benchFixtures.map { case (name, warm) =>
+        name -> (() => warm(spark, sfDir))
+      }, 1)
+    val (queryTimes, queryFailed) = timeAll(timed.toSeq.map { case (name, fn) =>
+      name -> (() => { fn(spark, sfDir).count(); () })
+    }, iters)
+    val all = fixtureTimes ++ queryTimes
+    val failed = fixtureFailed ++ queryFailed
+    failed.foreach { case (name, msg) => System.err.println(s"[bench] $name failed: $msg") }
     val qs = all.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = if (all.nonEmpty) all.values.sum else 0.0
+    val failedJson = failed.map { case (k, m) => s"${Verify.jsonString(k)}:${Verify.jsonString(m)}" }
+      .mkString("{", ",", "}")
+    val total = all.map(_._2).sum
     // 1-minute load BEFORE the suite is sampled at startup below; AFTER
     // here — a contended bench host (three driver rounds running) then
     // convicts its own artifact instead of consuming a judge round.
@@ -84,22 +72,58 @@ object Bench {
         .split("\\s+").head
       catch { case _: Throwable => "-1" }
     val loadLine = s""""loadavg":{"before":$loadBefore,"after":${loadavg()},"cpus":$cpus}"""
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir",$loadLine}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir",$loadLine}""")
     // The driver captures a bounded tail of this process's output; the
     // ~4KB per-query line above was truncated mid-line in round 7
     // ("parsed": null). Repeat the headline total on its own SHORT final
     // line so a machine-readable record always survives tail capture,
     // and persist the COMPLETE per-query map to a sibling artifact file
     // that no tail window can cut (round 8 lost ~33 per-query numbers).
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","queryCount":${all.size},$loadLine}""")
+    // The short line names the failures without their messages, which
+    // can run to kilobytes of plan text.
+    val failedNames = failed.map(f => Verify.jsonString(f._1)).mkString("[", ",", "]")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","queryCount":${all.size},"failed":$failedNames,$loadLine}""")
     // only a FULL run may refresh the committed artifact — a dev
     // subset run (SPARK_GRAFT_ONLY) would otherwise clobber the
     // official per-query record with a 5-query map
     if (subset.isEmpty)
       try java.nio.file.Files.writeString(
         java.nio.file.Paths.get("bench_queries.json"),
-        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","queryCount":${all.size},$loadLine}""")
+        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir","queryCount":${all.size},$loadLine}""")
       catch { case _: Throwable => () }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} entries failed: ${failed.map(_._1).mkString(",")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Min-of-`iters` wall seconds per entry, in order. An entry that
+    * throws on any run is a failure (name -> message) and gets no time:
+    * a query that fails fast must not read as a fast query.
+    */
+  private[graft] def timeAll(entries: Seq[(String, () => Unit)], iters: Int)
+      : (Vector[(String, Double)], Vector[(String, String)]) = {
+    val times = Vector.newBuilder[(String, Double)]
+    val failed = Vector.newBuilder[(String, String)]
+    for ((name, run) <- entries) {
+      // reclaim UNREFERENCED lazy-localCheckpoint blocks from the
+      // previous query (ContextCleaner unpersists on GC): leaked blocks
+      // otherwise accumulate across 60+ queries in this shared JVM and
+      // perturb later measurements by multiples (measured 3.3s vs 13.5s
+      // on the same query isolated vs late-in-suite). Referenced caches
+      // (the condition result catalog) survive — GC only collects what
+      // nothing points to.
+      System.gc()
+      try {
+        val runs = (1 to iters).map { _ =>
+          val t0 = System.nanoTime()
+          run()
+          (System.nanoTime() - t0) / 1e9
+        }
+        times += name -> runs.min
+      } catch { case e: Throwable => failed += name -> String.valueOf(e.getMessage) }
+    }
+    (times.result(), failed.result())
   }
 }

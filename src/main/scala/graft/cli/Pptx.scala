@@ -310,7 +310,7 @@ object Pptx {
         """<a:prstGeom prst="rect"><a:avLst/></a:prstGeom></p:spPr>""" +
         """<p:txBody><a:bodyPr wrap="square"/><a:lstStyle/><a:p>""" +
         s"""<a:r><a:rPr lang="fi-FI" sz="${sizePt * 100}"$b><a:solidFill><a:srgbClr val="$color"/></a:solidFill></a:rPr>""" +
-        s"""<a:t>${esc(text)}</a:t></a:r></a:p></p:txBody></p:sp>"""
+        s"""<a:t>${Ooxml.esc(text)}</a:t></a:r></a:p></p:txBody></p:sp>"""
     }
 
     /** Placeholder-bound text shape: no xfrm, no run styling — both
@@ -324,7 +324,7 @@ object Pptx {
         """<p:cNvSpPr><a:spLocks noGrp="1"/></p:cNvSpPr>""" +
         s"""<p:nvPr><p:ph$t$i/></p:nvPr></p:nvSpPr><p:spPr/>""" +
         """<p:txBody><a:bodyPr/><a:lstStyle/><a:p>""" +
-        s"""<a:r><a:rPr lang="fi-FI"/><a:t>${esc(text)}</a:t></a:r></a:p></p:txBody></p:sp>"""
+        s"""<a:r><a:rPr lang="fi-FI"/><a:t>${Ooxml.esc(text)}</a:t></a:r></a:p></p:txBody></p:sp>"""
     }
 
     def rect(x: Long, y: Long, cx: Long, cy: Long, rgb: String, alphaPct: Int): String = {
@@ -351,17 +351,16 @@ object Pptx {
           """<a:tr h="230400">""" +
             r.padTo(nCols, "").map { c =>
               """<a:tc><a:txBody><a:bodyPr/><a:lstStyle/><a:p>""" +
-                s"""<a:r><a:rPr lang="fi-FI" sz="800"><a:solidFill><a:srgbClr val="000000"/></a:solidFill></a:rPr><a:t>${esc(c)}</a:t></a:r>""" +
+                s"""<a:r><a:rPr lang="fi-FI" sz="800"><a:solidFill><a:srgbClr val="000000"/></a:solidFill></a:rPr><a:t>${Ooxml.esc(c)}</a:t></a:r>""" +
                 """</a:p></a:txBody><a:tcPr><a:noFill/></a:tcPr></a:tc>"""
             }.mkString + "</a:tr>"
         }.mkString +
         "</a:tbl></a:graphicData></a:graphic></p:graphicFrame>"
     }
 
-    /** Timeline lanes as native shapes inside `box` — the reference's
-      * broken_barh geometry: half-height alpha-50 block lanes,
-      * full-height opaque master lane, lane labels at the left
-      * (`labelW` EMU of the box reserved for them).
+    /** Timeline lanes as native shapes inside `box` — [[SvgTimeline]]'s
+      * colours and lane style in integer EMU geometry, lane labels at
+      * the left (`labelW` EMU of the box reserved for them).
       */
     def timeline(box: Box, labelW: Long,
                  lanes: Seq[SvgTimeline.Lane], ranges: Seq[SvgTimeline.Range]): String = {
@@ -370,25 +369,17 @@ object Pptx {
       val plotX = box.x + labelW
       val plotW = box.cx - labelW
       val laneH = math.min(685800L, box.cy / lanes.size)
-      val t0 = ranges.map(_.fromSec).min
-      val span = math.max(1L, ranges.map(_.untilSec).max - t0)
-      def px(t: Long): Long = plotX + (t - t0) * plotW / span
+      val ext = SvgTimeline.extent(ranges)
+      def px(t: Long): Long = plotX + (t - ext.t0) * plotW / ext.span
       for ((lane, li) <- lanes.zipWithIndex) {
-        val isMaster = li == lanes.size - 1
-        val hFrac = if (isMaster) 80 else 50
-        val alpha = if (isMaster) 100 else 50
-        val y = box.y + li * laneH + laneH * (100 - hFrac) / 200
-        val h = laneH * hFrac / 100
+        val style = SvgTimeline.laneStyle(li == lanes.size - 1)
+        val y = box.y + li * laneH + laneH * (100 - style.heightPct) / 200
+        val h = laneH * style.heightPct / 100
         sb ++= textBox(box.x, y + h / 2 - 114300, labelW - 57150, 228600L, lane.label, 9)
         for (r <- ranges) {
           val x0 = px(r.fromSec)
           val cx = math.max(9525L, px(r.untilSec) - x0)
-          val rgb = r.lanes(li) match {
-            case Some(true) => "F03B20"
-            case Some(false) => "2B83BA"
-            case None => "BABABA"
-          }
-          sb ++= rect(x0, y, cx, h, rgb, alpha)
+          sb ++= rect(x0, y, cx, h, f"${SvgTimeline.laneColor(r.lanes(li))}%06X", style.alphaPct)
         }
       }
       sb.toString
@@ -460,6 +451,4 @@ object Pptx {
     sb ++= SlideClose
     sb.toString
   }
-
-  private def esc(s: String): String = Ooxml.esc(s)
 }

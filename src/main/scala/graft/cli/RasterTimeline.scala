@@ -14,9 +14,6 @@ object Png {
   private val Dpi300PerMeter = 11811 // round(300 / 0.0254)
 
   /** @param rgb row-major 0xRRGGBB pixels, length width*height */
-  def write(path: Path, width: Int, height: Int, rgb: Array[Int]): Unit =
-    Files.write(path, encode(width, height, rgb))
-
   def encode(width: Int, height: Int, rgb: Array[Int]): Array[Byte] = {
     require(rgb.length == width * height, "pixel buffer size mismatch")
     val out = new java.io.ByteArrayOutputStream()
@@ -75,10 +72,10 @@ object Png {
 /** The condition timeline as a DPI-300 PNG raster — byte-level parity
   * with the reference's output format (tsa/condition.py:448-554 renders
   * `broken_barh` to PNG at dpi=300; `cond_collection.py:379` embeds
-  * it). Geometry, colors and lane structure are IDENTICAL to
-  * [[SvgTimeline]] (one renderer per output format over the same
-  * model); labels use a built-in 5×7 bitmap font so the raster needs no
-  * font files. The SVG remains the richer artifact (crisp at any zoom,
+  * it). The layout is [[SvgTimeline]]'s, drawn by a sink that fills
+  * a pixel buffer at `scale`×; labels use a built-in 5×7 bitmap font
+  * so the raster needs no font files, and logic annotations are left
+  * out. The SVG remains the richer artifact (crisp at any zoom,
   * annotations); this sink exists for drop-in users whose tooling
   * expects the reference's PNG files.
   */
@@ -86,10 +83,6 @@ object RasterTimeline {
 
   import SvgTimeline.{Lane, Range}
 
-  private val ColorTrue = 0xF03B20
-  private val ColorFalse = 0x2B83BA
-  private val ColorNull = 0xBABABA
-  private val ColorGrid = 0xE5E5E5
   private val White = 0xFFFFFF
 
   /** Render at `scale`× the SVG's logical geometry; the default 3×
@@ -99,78 +92,41 @@ object RasterTimeline {
   def write(path: Path, lanes: Seq[Lane], ranges: Seq[Range],
             width: Int = 1280, laneHeight: Int = 56, scale: Int = 3): Unit = {
     val (w, h, px) = render(lanes, ranges, width, laneHeight, scale)
-    Png.write(path, w, h, px)
+    Files.write(path, Png.encode(w, h, px))
   }
 
   def render(lanes: Seq[Lane], ranges: Seq[Range], width: Int = 1280,
              laneHeight: Int = 56, scale: Int = 3): (Int, Int, Array[Int]) = {
-    require(lanes.nonEmpty, "at least the master lane is required")
-    val leftPad = 110
-    val topPad = 8
-    val bottomPad = 28
-    val height = topPad + lanes.size * laneHeight + bottomPad
-    val plotW = width - leftPad - 12
+    val frame = SvgTimeline.Frame(width, laneHeight, lanes.size)
     val W = width * scale
-    val H = height * scale
+    val H = frame.height * scale
     val px = Array.fill(W * H)(White)
 
-    def fillRect(x0: Double, y0: Double, rw: Double, rh: Double,
-                 color: Int, alpha: Double): Unit = {
-      val xa = math.max(0, (x0 * scale).round.toInt)
-      val ya = math.max(0, (y0 * scale).round.toInt)
-      val xb = math.min(W, ((x0 + rw) * scale).round.toInt)
-      val yb = math.min(H, ((y0 + rh) * scale).round.toInt)
-      var y = ya
-      while (y < yb) {
-        var x = xa
-        while (x < xb) {
-          val i = y * W + x
-          px(i) = if (alpha >= 1.0) color else blend(px(i), color, alpha)
-          x += 1
-        }
-        y += 1
-      }
-    }
-
-    if (ranges.nonEmpty) {
-      val t0 = ranges.map(_.fromSec).min
-      val t1 = ranges.map(_.untilSec).max
-      val span = math.max(1L, t1 - t0)
-      def x(t: Long): Double = leftPad + (t - t0).toDouble / span * plotW
-
-      // month gridlines + %m/%y labels (reference MonthLocator)
-      var m = java.time.Instant.ofEpochSecond(t0).atZone(java.time.ZoneOffset.UTC)
-        .toLocalDate.withDayOfMonth(1)
-      while (m.atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond < t1) {
-        val ms = m.atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond
-        if (ms >= t0) {
-          fillRect(x(ms), topPad, 0.5, height - bottomPad - topPad, ColorGrid, 1.0)
-          drawText(px, W, H, scale,
-            f"${m.getMonthValue}%02d/${m.getYear % 100}%02d",
-            x(ms) - 15, height - 18.0, 0x444444)
-        }
-        m = m.plusMonths(1)
-      }
-
-      for ((lane, li) <- lanes.zipWithIndex) {
-        val isMaster = li == lanes.size - 1
-        val hFrac = if (isMaster) 0.8 else 0.5
-        val alpha = if (isMaster) 1.0 else 0.5
-        val yTop = topPad + li * laneHeight + laneHeight * (1.0 - hFrac) / 2
-        val h = laneHeight * hFrac
-        for (r <- ranges) {
-          val color = r.lanes(li) match {
-            case Some(true) => ColorTrue
-            case Some(false) => ColorFalse
-            case None => ColorNull
+    SvgTimeline.draw(frame, lanes, ranges, new SvgTimeline.Sink {
+      def bar(x0: Double, y0: Double, rw: Double, rh: Double, color: Int, alpha: Double): Unit = {
+        val xa = math.max(0, (x0 * scale).round.toInt)
+        val ya = math.max(0, (y0 * scale).round.toInt)
+        val xb = math.min(W, ((x0 + rw) * scale).round.toInt)
+        val yb = math.min(H, ((y0 + rh) * scale).round.toInt)
+        var y = ya
+        while (y < yb) {
+          var x = xa
+          while (x < xb) {
+            val i = y * W + x
+            px(i) = if (alpha >= 1.0) color else blend(px(i), color, alpha)
+            x += 1
           }
-          val rx = x(r.fromSec)
-          val rw = math.max(0.5, x(r.untilSec) - rx)
-          fillRect(rx, yTop, rw, h, color, alpha)
+          y += 1
         }
-        drawText(px, W, H, scale, lane.label, 6, yTop + h / 2 - 3, 0x222222)
       }
-    }
+      def gridline(x: Double, top: Int, bottom: Int): Unit =
+        bar(x, top, 0.5, bottom - top, SvgTimeline.GridColor, 1.0)
+      def monthLabel(x: Double, axisY: Int, text: String): Unit =
+        drawText(px, W, H, scale, text, x - 15, axisY + 10.0, 0x444444)
+      def laneLabel(x: Int, yMid: Double, text: String): Unit =
+        drawText(px, W, H, scale, text, x, yMid - 3, 0x222222)
+      def annotation(x: Double, laneTop: Double, text: String): Unit = ()
+    })
     (W, H, px)
   }
 

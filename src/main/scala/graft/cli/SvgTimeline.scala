@@ -11,6 +11,10 @@ import java.nio.file.{Files, Path}
   * gridlines labeled `%m/%y`, the raw logic annotated above each lane,
   * and y-axis labels naming the aliases + `master`.
   *
+  * The layout lives here once: [[draw]] walks the figure for the SVG
+  * and [[RasterTimeline]] sinks, and [[Pptx]] takes the colours, lane
+  * style and time extent for its EMU geometry.
+  *
   * The input is the engine's condition frame COLLECTED to rows — a
   * report figure is inherently driver-sized (the pack kernel run-length
   * compresses validity into at most thousands of ranges per condition;
@@ -29,10 +33,93 @@ object SvgTimeline {
     */
   final case class Lane(label: String, annotation: String)
 
-  private val ColorTrue = "#f03b20"
-  private val ColorFalse = "#2b83ba"
-  private val ColorNull = "#bababa"
-  private val ColorGrid = "#e5e5e5"
+  /** 0xRRGGBB lane colour of a 3VL value. */
+  private[cli] def laneColor(v: Option[Boolean]): Int = v match {
+    case Some(true) => 0xF03B20
+    case Some(false) => 0x2B83BA
+    case None => 0xBABABA
+  }
+
+  private[cli] val GridColor = 0xE5E5E5
+
+  /** Lane height (share of the lane slot) and opacity, in integer
+    * percent so the deck's EMU geometry stays integer arithmetic.
+    */
+  private[cli] final case class LaneStyle(heightPct: Int, alphaPct: Int)
+
+  /** Blocks first (half-height, alpha .5), master last (0.8, opaque). */
+  private[cli] def laneStyle(isMaster: Boolean): LaneStyle =
+    if (isMaster) LaneStyle(80, 100) else LaneStyle(50, 50)
+
+  /** Time extent of the ranges; `span` is at least one second. */
+  private[cli] final case class Extent(t0: Long, t1: Long) {
+    val span: Long = math.max(1L, t1 - t0)
+  }
+
+  private[cli] def extent(ranges: Seq[Range]): Extent =
+    Extent(ranges.map(_.fromSec).min, ranges.map(_.untilSec).max)
+
+  private val LeftPad = 110  // y labels
+  private val TopPad = 8
+  private val BottomPad = 28 // x labels
+
+  /** The logical page: `width` × `height` px, lanes stacked from the
+    * top pad, the time axis at `axisY`.
+    */
+  private[cli] final case class Frame(width: Int, laneHeight: Int, nLanes: Int) {
+    require(nLanes > 0, "at least the master lane is required")
+    val height: Int = TopPad + nLanes * laneHeight + BottomPad
+    val plotW: Int = width - LeftPad - 12
+    val axisY: Int = height - BottomPad
+  }
+
+  /** The figure's primitives in logical px; each sink anchors its own
+    * text (SVG at the baseline, the raster's bitmap font top-left).
+    */
+  private[cli] trait Sink {
+    def bar(x: Double, y: Double, w: Double, h: Double, rgb: Int, alpha: Double): Unit
+    def gridline(x: Double, top: Int, bottom: Int): Unit
+    def monthLabel(x: Double, axisY: Int, text: String): Unit
+    def laneLabel(x: Int, yMid: Double, text: String): Unit
+    def annotation(x: Double, laneTop: Double, text: String): Unit
+  }
+
+  /** Walk the figure: month grid, then per lane its bars, label and
+    * annotation. With no ranges only the frame is drawn.
+    */
+  private[cli] def draw(f: Frame, lanes: Seq[Lane], ranges: Seq[Range], sink: Sink): Unit =
+    if (ranges.nonEmpty) {
+      val ext = extent(ranges)
+      def x(t: Long): Double = LeftPad + (t - ext.t0).toDouble / ext.span * f.plotW
+
+      // month gridlines at UTC month starts, labeled %m/%y (reference
+      // MonthLocator + DateFormatter('%m/%y')); skipped when the span
+      // contains none (sub-month plots keep just the frame)
+      val utc = java.time.ZoneOffset.UTC
+      var m = java.time.Instant.ofEpochSecond(ext.t0).atZone(utc).toLocalDate.withDayOfMonth(1)
+      while (m.atStartOfDay(utc).toEpochSecond < ext.t1) {
+        val ms = m.atStartOfDay(utc).toEpochSecond
+        if (ms >= ext.t0) {
+          sink.gridline(x(ms), TopPad, f.axisY)
+          sink.monthLabel(x(ms), f.axisY, f"${m.getMonthValue}%02d/${m.getYear % 100}%02d")
+        }
+        m = m.plusMonths(1)
+      }
+
+      for ((lane, li) <- lanes.zipWithIndex) {
+        val style = laneStyle(li == lanes.size - 1)
+        val hFrac = style.heightPct / 100.0
+        val yTop = TopPad + li * f.laneHeight + f.laneHeight * (1.0 - hFrac) / 2
+        val h = f.laneHeight * hFrac
+        for (r <- ranges) {
+          val rx = x(r.fromSec)
+          sink.bar(rx, yTop, math.max(0.5, x(r.untilSec) - rx), h,
+            laneColor(r.lanes(li)), style.alphaPct / 100.0)
+        }
+        sink.laneLabel(6, yTop + h / 2, lane.label)
+        sink.annotation(x(ranges.head.fromSec), yTop, lane.annotation)
+      }
+    }
 
   def write(path: Path, lanes: Seq[Lane], ranges: Seq[Range],
             width: Int = 1280, laneHeight: Int = 56): Unit =
@@ -40,62 +127,25 @@ object SvgTimeline {
 
   def render(lanes: Seq[Lane], ranges: Seq[Range],
              width: Int = 1280, laneHeight: Int = 56): String = {
-    require(lanes.nonEmpty, "at least the master lane is required")
+    val frame = Frame(width, laneHeight, lanes.size)
+    val height = frame.height
     val sb = new StringBuilder
-    val leftPad = 110  // y labels
-    val topPad = 8
-    val bottomPad = 28 // x labels
-    val height = topPad + lanes.size * laneHeight + bottomPad
-    val plotW = width - leftPad - 12
+    def hex(rgb: Int): String = "#" + Integer.toHexString(0x1000000 | rgb).substring(1)
     sb ++= s"""<svg xmlns="http://www.w3.org/2000/svg" width="$width" height="$height" viewBox="0 0 $width $height">"""
     sb ++= s"""<rect width="$width" height="$height" fill="white"/>"""
-
-    if (ranges.nonEmpty) {
-      val t0 = ranges.map(_.fromSec).min
-      val t1 = ranges.map(_.untilSec).max
-      val span = math.max(1L, t1 - t0)
-      def x(t: Long): Double = leftPad + (t - t0).toDouble / span * plotW
-
-      // month gridlines at UTC month starts, labeled %m/%y (reference
-      // MonthLocator + DateFormatter('%m/%y')); skipped when the span
-      // contains none (sub-month plots keep just the frame)
-      var m = java.time.Instant.ofEpochSecond(t0).atZone(java.time.ZoneOffset.UTC)
-        .toLocalDate.withDayOfMonth(1)
-      while (m.atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond < t1) {
-        val ms = m.atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond
-        if (ms >= t0) {
-          val gx = f"${x(ms)}%.1f"
-          sb ++= s"""<line x1="$gx" y1="$topPad" x2="$gx" y2="${height - bottomPad}" stroke="$ColorGrid"/>"""
-          sb ++= s"""<text x="$gx" y="${height - 10}" font-size="12" text-anchor="middle" fill="#444">""" +
-            f"${m.getMonthValue}%02d/${m.getYear % 100}%02d</text>"
-        }
-        m = m.plusMonths(1)
-      }
-
-      // lanes: blocks first (half-height, alpha .5), master last (0.8, opaque)
-      for ((lane, li) <- lanes.zipWithIndex) {
-        val isMaster = li == lanes.size - 1
-        val hFrac = if (isMaster) 0.8 else 0.5
-        val alpha = if (isMaster) 1.0 else 0.5
-        val yTop = topPad + li * laneHeight + laneHeight * (1.0 - hFrac) / 2
-        val h = laneHeight * hFrac
-        for (r <- ranges) {
-          val color = r.lanes(li) match {
-            case Some(true) => ColorTrue
-            case Some(false) => ColorFalse
-            case None => ColorNull
-          }
-          val rx = x(r.fromSec)
-          val rw = math.max(0.5, x(r.untilSec) - rx)
-          sb ++= f"""<rect x="$rx%.1f" y="$yTop%.1f" width="$rw%.1f" height="$h%.1f" fill="$color" fill-opacity="$alpha%.1f"/>"""
-        }
-        sb ++= s"""<text x="6" y="${yTop + h / 2 + 4}" font-size="13" fill="#222">${esc(lane.label)}</text>"""
-        sb ++= f"""<text x="${x(ranges.head.fromSec)}%.1f" y="${yTop - 3}%.1f" font-size="11" fill="#666">${esc(lane.annotation)}</text>"""
-      }
-    }
+    draw(frame, lanes, ranges, new Sink {
+      def bar(x: Double, y: Double, w: Double, h: Double, rgb: Int, alpha: Double): Unit =
+        sb ++= f"""<rect x="$x%.1f" y="$y%.1f" width="$w%.1f" height="$h%.1f" fill="${hex(rgb)}" fill-opacity="$alpha%.1f"/>"""
+      def gridline(x: Double, top: Int, bottom: Int): Unit =
+        sb ++= f"""<line x1="$x%.1f" y1="$top" x2="$x%.1f" y2="$bottom" stroke="${hex(GridColor)}"/>"""
+      def monthLabel(x: Double, axisY: Int, text: String): Unit =
+        sb ++= f"""<text x="$x%.1f" y="${axisY + 18}" font-size="12" text-anchor="middle" fill="#444">$text</text>"""
+      def laneLabel(x: Int, yMid: Double, text: String): Unit =
+        sb ++= s"""<text x="$x" y="${yMid + 4}" font-size="13" fill="#222">${Ooxml.esc(text)}</text>"""
+      def annotation(x: Double, laneTop: Double, text: String): Unit =
+        sb ++= f"""<text x="$x%.1f" y="${laneTop - 3}%.1f" font-size="11" fill="#666">${Ooxml.esc(text)}</text>"""
+    })
     sb ++= "</svg>"
     sb.toString
   }
-
-  private def esc(s: String): String = Ooxml.esc(s)
 }

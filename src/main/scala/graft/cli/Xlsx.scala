@@ -56,7 +56,7 @@ object Xlsx {
         """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
           """<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships"><sheets>""" +
           names.zipWithIndex.map { case (name, i) =>
-            s"""<sheet name="${esc(name)}" sheetId="${i + 1}" r:id="rId${i + 1}"/>"""
+            s"""<sheet name="${Ooxml.esc(name)}" sheetId="${i + 1}" r:id="rId${i + 1}"/>"""
           }.mkString +
           "</sheets></workbook>")
       part("xl/_rels/workbook.xml.rels",
@@ -100,7 +100,7 @@ object Xlsx {
         val ref = colName(c) + (r + 1)
         cell match {
           case Str(v, bold) =>
-            sb ++= s"""<c r="$ref" s="${if (bold) 1 else 0}" t="inlineStr"><is><t xml:space="preserve">${esc(v)}</t></is></c>"""
+            sb ++= s"""<c r="$ref" s="${if (bold) 1 else 0}" t="inlineStr"><is><t xml:space="preserve">${Ooxml.esc(v)}</t></is></c>"""
           case Num(v) => sb ++= s"""<c r="$ref" s="0"><v>${fmt(v)}</v></c>"""
           case Pct(v) => sb ++= s"""<c r="$ref" s="2"><v>${fmt(v)}</v></c>"""
           case Ts(v) => sb ++= s"""<c r="$ref" s="3"><v>${fmt(serial(v))}</v></c>"""
@@ -152,9 +152,6 @@ object Xlsx {
       cand
     }
   }
-
-  private[cli] def esc(s: String): String =
-    Ooxml.esc(s)
 }
 
 /** Shared XML text handling for the dependency-free OOXML/SVG writers. */

@@ -55,21 +55,6 @@ final class TsaEngine(spark: SparkSession, maxMinutes: Int = 30) {
     catalog.filterInPlace((k, _) => keep.contains(k))
   }
 
-  /** Unpersist cached frames that are no longer catalog entries — each
-    * earlier run's transient `packed` frame and any catalog entry a later
-    * run overwrote. Nothing can re-read them through this engine, so a
-    * caller that never calls [[release]] still holds at most one run's
-    * transient caches plus the live catalog. Unpersisting a frame an
-    * outside caller still holds is safe — it recomputes on next action.
-    */
-  private def reclaimOrphans(): Unit = {
-    val (live, orphaned) =
-      persisted.partition(df => catalog.valuesIterator.exists(_ eq df))
-    orphaned.foreach(_.unpersist())
-    persisted.clear()
-    persisted ++= live
-  }
-
   final case class ConditionResult(
       spec: ConditionSpec,
       data: DataFrame,
@@ -94,7 +79,12 @@ final class TsaEngine(spark: SparkSession, maxMinutes: Int = 30) {
   def run(coll: CollectionSpec, obs: DataFrame, sensorIds: Map[String, Int],
           validationObs: Option[DataFrame]): Vector[ConditionResult] = {
 
-    reclaimOrphans()
+    // Unpersist cached frames that are no longer catalog entries — each
+    // earlier run's transient `packed` frame and any catalog entry a
+    // later run overwrote. Nothing can re-read them through this engine,
+    // so a caller that never calls release() still holds at most one
+    // run's transient caches plus the live catalog.
+    release(keep = catalog.keySet.toSet)
 
     // R1: restrict to the collection's time range — inclusive both ends
     // (tsa/cond_collection.py:90-114); widening to 00:00:00/23:59:59 is

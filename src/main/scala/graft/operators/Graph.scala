@@ -247,18 +247,6 @@ object Graph {
         (col("auth").cast("double") / lit(1000000.0)).as("auth"))
   }
 
-  /** round(A/√B + ½) for A = 10⁶·raw, in exact BigInteger arithmetic
-    * (see [[hits]]). Nonneg inputs; 0 when the raw score or the norm
-    * is zero.
-    *
-    * Inputs arrive as STRINGS, not BigDecimal: a `java.math.BigDecimal`
-    * udf parameter types as DecimalType(38,18), and the analyzer's
-    * implicit cast of the DECIMAL(38,0) norm __b (= Σr² micro²) down to
-    * 20 integer digits overflows past ~10²⁰ — reached around sf1 of the
-    * bipartite-graph gate (ANSI throws; with ANSI off it would zero
-    * every score). String operands carry the full 38-digit value
-    * losslessly; scale-0 decimals render with no fraction part.
-    */
   /** The shared exact kernel: round(A/√B + ½) for A = 10⁶·r — called
     * by the distributed udf AND the small-graph driver loop, so the
     * two paths cannot diverge.
@@ -272,6 +260,18 @@ object Graph {
       s.add(java.math.BigInteger.ONE).shiftRight(1).longValueExact()
     }
 
+  /** round(A/√B + ½) for A = 10⁶·raw, in exact BigInteger arithmetic
+    * (see [[hits]]). Nonneg inputs; 0 when the raw score or the norm
+    * is zero.
+    *
+    * Inputs arrive as STRINGS, not BigDecimal: a `java.math.BigDecimal`
+    * udf parameter types as DecimalType(38,18), and the analyzer's
+    * implicit cast of the DECIMAL(38,0) norm __b (= Σr² micro²) down to
+    * 20 integer digits overflows past ~10²⁰ — reached around sf1 of the
+    * bipartite-graph gate (ANSI throws; with ANSI off it would zero
+    * every score). String operands carry the full 38-digit value
+    * losslessly; scale-0 decimals render with no fraction part.
+    */
   private val microL2Norm =
     udf { (raw: String, b: String) =>
       if (raw == null || b == null) 0L
@@ -324,28 +324,6 @@ object Graph {
     }.toSeq.toDF("node", "hub", "auth")
   }
 
-  /** Per-node triangle counts over the UNDIRECTED graph induced by
-    * (srcCol, dstCol) — the clustering/community-density signal a
-    * crawl-curation pipeline uses alongside PageRank (spam farms and
-    * organic communities have very different triangle densities).
-    *
-    * Distributed shape (the compact-forward / node-iterator bound,
-    * Schank & Wagner 2005): orient every undirected edge from its
-    * lower-(degree, node) endpoint to the higher one. Each triangle
-    * then materializes EXACTLY once, as a wedge at its minimum-rank
-    * vertex closed by one oriented edge — two equi-joins, no distinct
-    * over candidate triples, and the wedge count is bounded by
-    * Σ outdeg² ≤ O(m^{3/2}) because degree-ordering caps oriented
-    * out-degree at O(√m). A star hub (degree n) generates ZERO wedges
-    * at itself — every incident edge points INTO it — which is what
-    * makes this survive skewed degree distributions; the naive
-    * wedge-at-any-vertex join would explode n² at the hub.
-    *
-    * Returns (node, n_tri) for every node, 0 included — counts are
-    * identical to the id-ordered formulation the oracle uses, because
-    * both enumerate the same triangle SET and per-node attribution
-    * sums over set membership.
-    */
   /** k-core membership by iterative peeling (Seidman 1983; the
     * distributed formulation of Montresor et al. 2013): repeatedly drop
     * every node whose degree in the SURVIVING subgraph is < `k`, with
@@ -583,7 +561,27 @@ object Graph {
       .select(explode(Dedup.pairsUdf(col("__items"))).as("__p"))
       .select(col("__p._1").as("src"), col("__p._2").as("dst"))
 
-  /** Per-node triangle counts via degree-oriented wedge enumeration.
+  /** Per-node triangle counts over the UNDIRECTED graph induced by
+    * (srcCol, dstCol) — the clustering/community-density signal a
+    * crawl-curation pipeline uses alongside PageRank (spam farms and
+    * organic communities have very different triangle densities).
+    *
+    * Distributed shape (the compact-forward / node-iterator bound,
+    * Schank & Wagner 2005): orient every undirected edge from its
+    * lower-(degree, node) endpoint to the higher one. Each triangle
+    * then materializes EXACTLY once, as a wedge at its minimum-rank
+    * vertex closed by one oriented edge — two equi-joins, no distinct
+    * over candidate triples, and the wedge count is bounded by
+    * Σ outdeg² ≤ O(m^{3/2}) because degree-ordering caps oriented
+    * out-degree at O(√m). A star hub (degree n) generates ZERO wedges
+    * at itself — every incident edge points INTO it — which is what
+    * makes this survive skewed degree distributions; the naive
+    * wedge-at-any-vertex join would explode n² at the hub.
+    *
+    * Returns (node, n_tri) for every node, 0 included — counts are
+    * identical to the id-ordered formulation the oracle uses, because
+    * both enumerate the same triangle SET and per-node attribution
+    * sums over set membership.
     *
     * Deliberately NO localCheckpoints, unlike the iterative operators
     * above (whose loops need lineage truncation): this is ONE action,

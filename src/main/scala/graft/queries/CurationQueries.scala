@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import graft.sources.{NioStoreFs, Tables}
 
 /** Round-11 training-pipeline operators: URL-level curation (the
   * FineWeb/RefinedWeb domain accounting layer), memorization-risk
@@ -836,7 +836,7 @@ object CurationQueries {
       val baseDir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
         "graft_sinkv2_" + ProcessHandle.current().pid() + "_" +
           Integer.toHexString(d.hashCode))
-      if (java.nio.file.Files.exists(baseDir)) deleteRecursively(baseDir)
+      NioStoreFs.deleteRecursively(baseDir.toString)
       val root = baseDir.resolve("store").toString
       val incoming = baseDir.resolve("incoming").toString
       val ck = baseDir.resolve("ck")
@@ -865,7 +865,7 @@ object CurationQueries {
         q2.processAllAvailable() // epoch 1 -> v2
       } finally q2.stop()
       // REDELIVERY exactly as engine recovery does it
-      deleteRecursively(ck)
+      NioStoreFs.deleteRecursively(ck.toString)
       copyDirRec(ckBak, ck)
       val q3 = start()
       try q3.processAllAvailable() finally q3.stop()
@@ -1028,7 +1028,7 @@ object CurationQueries {
       val baseDir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
         "graft_cdcimg_" + ProcessHandle.current().pid() + "_" +
           Integer.toHexString(d.hashCode))
-      if (java.nio.file.Files.exists(baseDir)) deleteRecursively(baseDir)
+      NioStoreFs.deleteRecursively(baseDir.toString)
       val root = baseDir.resolve("store").toString
       val feed = baseDir.resolve("feed").toString
       SnapshotStore.init(s, base0, root, "doc_id") // v0 — no diff
@@ -1378,7 +1378,7 @@ object CurationQueries {
       val cat = s"gspj_$hash"
       val whPath = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
         "graft_spjwh_" + ProcessHandle.current().pid() + "_" + hash)
-      if (java.nio.file.Files.exists(whPath)) deleteRecursively(whPath)
+      NioStoreFs.deleteRecursively(whPath.toString)
       val wh = whPath.toString
       s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftCatalog")
       s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
@@ -2332,7 +2332,7 @@ object CurationQueries {
       val baseDir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
         "graft_scdc_" + ProcessHandle.current().pid() + "_" +
           Integer.toHexString(d.hashCode))
-      if (java.nio.file.Files.exists(baseDir)) deleteRecursively(baseDir)
+      NioStoreFs.deleteRecursively(baseDir.toString)
       val root = baseDir.resolve("store").toString
       val feed = baseDir.resolve("feed").toString
       SnapshotStore.init(s, base0, root, "doc_id") // v0 — no diff
@@ -2380,7 +2380,7 @@ object CurationQueries {
         Integer.toHexString(d.hashCode)
       val baseDir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
         "graft_cdcsql_" + sfx)
-      if (java.nio.file.Files.exists(baseDir)) deleteRecursively(baseDir)
+      NioStoreFs.deleteRecursively(baseDir.toString)
       java.nio.file.Files.createDirectories(baseDir)
       val wh = baseDir.resolve("wh").toString
       val cat = "graft_cdcsql_" + sfx
@@ -2448,7 +2448,7 @@ object CurationQueries {
         Integer.toHexString(d.hashCode)
       val baseDir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
         "graft_chsql_" + sfx)
-      if (java.nio.file.Files.exists(baseDir)) deleteRecursively(baseDir)
+      NioStoreFs.deleteRecursively(baseDir.toString)
       java.nio.file.Files.createDirectories(baseDir)
       val cat = "graft_chsql_" + sfx
       s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftCatalog")
@@ -2523,7 +2523,7 @@ object CurationQueries {
       val baseDir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
         "graft_cdcren_" + ProcessHandle.current().pid() + "_" +
           Integer.toHexString(d.hashCode))
-      if (java.nio.file.Files.exists(baseDir)) deleteRecursively(baseDir)
+      NioStoreFs.deleteRecursively(baseDir.toString)
       val root = baseDir.resolve("store").toString
       val feed = baseDir.resolve("feed").toString
       SnapshotStore.init(s, base0, root, "doc_id", filesPerCommit = 4) // v0
@@ -2569,7 +2569,7 @@ object CurationQueries {
       val baseDir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
         "graft_stbl_" + ProcessHandle.current().pid() + "_" +
           Integer.toHexString(d.hashCode))
-      if (java.nio.file.Files.exists(baseDir)) deleteRecursively(baseDir)
+      NioStoreFs.deleteRecursively(baseDir.toString)
       val root = baseDir.resolve("store").toString
       val sink = baseDir.resolve("sink").toString
       SnapshotStore.init(s, base0.filter(col("doc_id") % 3 === 0),
@@ -2619,7 +2619,7 @@ object CurationQueries {
       val baseDir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
         "graft_spipe_" + ProcessHandle.current().pid() + "_" +
           Integer.toHexString(d.hashCode))
-      if (java.nio.file.Files.exists(baseDir)) deleteRecursively(baseDir)
+      NioStoreFs.deleteRecursively(baseDir.toString)
       val src = baseDir.resolve("src").toString
       val dst = baseDir.resolve("dst").toString
       SnapshotStore.init(s, base0, src, "doc_id",
@@ -2669,7 +2669,7 @@ object CurationQueries {
       val baseDir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
         "graft_srepl_" + ProcessHandle.current().pid() + "_" +
           Integer.toHexString(d.hashCode))
-      if (java.nio.file.Files.exists(baseDir)) deleteRecursively(baseDir)
+      NioStoreFs.deleteRecursively(baseDir.toString)
       val src = baseDir.resolve("src").toString
       val dst = baseDir.resolve("dst").toString
       SnapshotStore.init(s, base0, src, "doc_id") // v0
@@ -2828,7 +2828,7 @@ object CurationQueries {
       val baseDir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
         "graft_once_" + ProcessHandle.current().pid() + "_" +
           Integer.toHexString(d.hashCode))
-      if (java.nio.file.Files.exists(baseDir)) deleteRecursively(baseDir)
+      NioStoreFs.deleteRecursively(baseDir.toString)
       val root = baseDir.resolve("store").toString
       val incoming = baseDir.resolve("incoming").toString
       java.nio.file.Files.createDirectories(
@@ -3264,7 +3264,7 @@ object CurationQueries {
           Integer.toHexString(d.hashCode))
       // bench runs a gate twice: wipe the incoming dir or the second
       // run's stream would replay the first run's files on top
-      if (java.nio.file.Files.exists(base)) deleteRecursively(base)
+      NioStoreFs.deleteRecursively(base.toString)
       val path = base.resolve("store").toString
       val src = base.resolve("incoming").toString
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
@@ -3340,7 +3340,7 @@ object CurationQueries {
       val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
         "graft_ssnap_" + ProcessHandle.current().pid() + "_" +
           Integer.toHexString(d.hashCode))
-      if (java.nio.file.Files.exists(base)) deleteRecursively(base)
+      NioStoreFs.deleteRecursively(base.toString)
       val root = base.resolve("store").toString
       val src = base.resolve("incoming").toString
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
@@ -3535,7 +3535,7 @@ object CurationQueries {
       val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
         "graft_smor_" + ProcessHandle.current().pid() + "_" +
           Integer.toHexString(d.hashCode))
-      if (java.nio.file.Files.exists(base)) deleteRecursively(base)
+      NioStoreFs.deleteRecursively(base.toString)
       val root = base.resolve("store").toString
       val src = base.resolve("erasures").toString
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
@@ -3955,7 +3955,7 @@ object CurationQueries {
           q.processAllAvailable()
         } finally q.stop()
         }
-      } finally deleteRecursively(tmp)
+      } finally NioStoreFs.deleteRecursively(tmp.toString)
       s.table(sink).filter(col("event_type") =!= "sentinel")
         .orderBy("day", "event_type")
     }),
@@ -3976,12 +3976,6 @@ object CurationQueries {
         .orderBy("doc_id")
     })
   )
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-      .foreach(java.nio.file.Files.deleteIfExists(_))
-  }
 
   /** Recursive directory copy — the checkpoint snapshot/restore
     * primitive the exactly-once redelivery fixtures share (the

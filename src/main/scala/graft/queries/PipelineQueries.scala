@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import graft.sources.{NioStoreFs, Tables}
 
 /** Round-10+ training-pipeline operators: boundary formats, data-quality
   * validation, drift monitoring, multimodal dedup, graph statistics.
@@ -95,7 +95,7 @@ object PipelineQueries {
       val baseDir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
         "graft_star_" + ProcessHandle.current().pid() + "_" +
           Integer.toHexString(d.hashCode))
-      if (java.nio.file.Files.exists(baseDir)) deleteRecursively(baseDir)
+      NioStoreFs.deleteRecursively(baseDir.toString)
       val incoming = baseDir.resolve("incoming")
       java.nio.file.Files.createDirectories(incoming)
       val docs = Tables.documents(s, d).select(col("doc_id"), col("source"),
@@ -319,7 +319,7 @@ object PipelineQueries {
             .outputMode("complete").start()
           try { q.processAllAvailable() } finally { q.stop() }
         }
-      } finally deleteRecursively(tmp)
+      } finally NioStoreFs.deleteRecursively(tmp.toString)
       s.table(sink).orderBy("check", "col_name")
     }),
 
@@ -418,7 +418,7 @@ object PipelineQueries {
             .outputMode("append").start()
           try { q.processAllAvailable() } finally { q.stop() }
         }
-      } finally deleteRecursively(tmp)
+      } finally NioStoreFs.deleteRecursively(tmp.toString)
       s.table(sink).orderBy("id")
     }),
 
@@ -538,18 +538,12 @@ object PipelineQueries {
             .outputMode("complete").start()
           try { q.processAllAvailable() } finally { q.stop() }
         }
-      } finally deleteRecursively(tmp)
+      } finally NioStoreFs.deleteRecursively(tmp.toString)
       s.table(sink)
         .select(col("__r").as("r"), col("__bkt").as("bkt"), col("cnt"))
         .orderBy("r", "bkt")
     })
   )
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-      .foreach(java.nio.file.Files.deleteIfExists(_))
-  }
 
   val oracles: Map[String, String] = Map(
     "q_tfrecord_roundtrip" ->

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.operators.{Dedup, MediaCodecs, Multimodal, NgramLm, Sampling, Similarity, Sketches, TextOps}
-import graft.sources.Tables
+import graft.sources.{NioStoreFs, Tables}
 
 /** Training-data pipeline operators over documents/embeddings, each with
   * a full DuckDB value oracle — including the sketch paths (MinHash,
@@ -113,7 +113,7 @@ object TrainQueries {
             .outputMode("append").start()
           try { q.processAllAvailable() } finally { q.stop() }
         }
-      } finally deleteRecursively(tmp)
+      } finally NioStoreFs.deleteRecursively(tmp.toString)
       s.table(sink).select("doc_id").orderBy("doc_id")
     }),
 
@@ -142,7 +142,7 @@ object TrainQueries {
             .outputMode("append").start()
           try { q.processAllAvailable() } finally { q.stop() }
         }
-      } finally deleteRecursively(tmp)
+      } finally NioStoreFs.deleteRecursively(tmp.toString)
       s.table(sink).select("doc_id").orderBy("doc_id")
     }),
 
@@ -172,7 +172,7 @@ object TrainQueries {
             .outputMode("append").start()
           try { q.processAllAvailable() } finally { q.stop() }
         }
-      } finally deleteRecursively(tmp)
+      } finally NioStoreFs.deleteRecursively(tmp.toString)
       s.table(sink)
         .select(col("id_a"), col("id_b"), col("hamming"))
         .distinct()
@@ -293,7 +293,7 @@ object TrainQueries {
           .writeStream.format("memory").queryName(sink)
           .outputMode("append").start()
         try { q.processAllAvailable() } finally { q.stop() }
-      } finally deleteRecursively(tmp)
+      } finally NioStoreFs.deleteRecursively(tmp.toString)
       s.table(sink).select("doc_id").orderBy("doc_id")
     }),
 
@@ -569,7 +569,7 @@ object TrainQueries {
           .writeStream.format("memory").queryName(sink)
           .outputMode("update").start()
         try { q.processAllAvailable() } finally { q.stop() }
-      } finally deleteRecursively(tmp)
+      } finally NioStoreFs.deleteRecursively(tmp.toString)
       s.table(sink)
         .join(graft.core.SkewOps.distinctCountByKey(
           Tables.documents(s, d).select(col("source"),
@@ -1683,13 +1683,6 @@ object TrainQueries {
       |      ORDER BY doc_id) AS rn
       |  FROM documents)
       |SELECT doc_id FROM fp WHERE rn = 1 ORDER BY doc_id""".stripMargin
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverseIterator
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
-  }
 
   private val shingleSql =
     """toks AS (

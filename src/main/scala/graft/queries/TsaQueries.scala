@@ -6,7 +6,7 @@ import graft.core.{ConditionEval, PackRanges}
 import graft.dsl.{ConditionParser, ErrorCollector}
 import graft.engine.TsaEngine
 import graft.model._
-import graft.sources.{PartitionedStore, Tables}
+import graft.sources.{NioStoreFs, PartitionedStore, Tables}
 
 /** The condition-analysis engine exercised over the driver test data,
   * with full DuckDB oracles (SURVEY.md §2.3/§2.4 R1-R15, A2-A5).
@@ -179,7 +179,7 @@ object TsaQueries {
       else {
         // evicting pins DISK, not just frames — delete the old store or
         // a session-cycling harness accumulates obs copies in /tmp
-        if (cur != null) deleteRecursively(java.nio.file.Paths.get(cur._2))
+        if (cur != null) NioStoreFs.deleteRecursively(cur._2)
         val path = java.nio.file.Files.createTempDirectory("graft_obs_store").toString
         PartitionedStore.writeByDay(obsFromEvents(s, d), path)
         storeCache.set(((s, d), path))
@@ -202,13 +202,6 @@ object TsaQueries {
   val fixtureBackedQueries: Set[String] =
     Set("q_condition_eval", "q_condition_secondary", "q_condition_summary",
       "q_obs_pruned")
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverseIterator
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
-  }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // R3-R8: the pack_ranges kernel, three blocks in one pass.
@@ -250,7 +243,7 @@ object TsaQueries {
             .outputMode("append").start()
           try { q.processAllAvailable() } finally { q.stop() }
         }
-      } finally deleteRecursively(tmp)
+      } finally NioStoreFs.deleteRecursively(tmp.toString)
       s.table(sink)
         .select(col("blockId").as("block_id"),
           timestamp_micros(col("vfrom")).as("vfrom"),
@@ -291,7 +284,7 @@ object TsaQueries {
             .outputMode("append").start()
           try { q.processAllAvailable() } finally { q.stop() }
         }
-      } finally { deleteRecursively(tmpR); deleteRecursively(tmpS) }
+      } finally { NioStoreFs.deleteRecursively(tmpR.toString); NioStoreFs.deleteRecursively(tmpS.toString) }
       s.table(sink)
         .select(col("key").as("user_id"), timestamp_micros(col("ts")).as("ts"),
           col("reading").as("click_val"), col("state_value").as("err_val"))
@@ -332,7 +325,7 @@ object TsaQueries {
             .outputMode("append").start()
           try { q.processAllAvailable() } finally { q.stop() }
         }
-      } finally { deleteRecursively(tmpV); deleteRecursively(tmpC) }
+      } finally { NioStoreFs.deleteRecursively(tmpV.toString); NioStoreFs.deleteRecursively(tmpC.toString) }
       s.table(sink).orderBy("user_id", "view_id", "click_id")
     }),
 
@@ -369,7 +362,7 @@ object TsaQueries {
           q.processAllAvailable()
         } finally q.stop()
         }
-      } finally deleteRecursively(tmp)
+      } finally NioStoreFs.deleteRecursively(tmp.toString)
       s.table(sink).filter(col("user_id") >= 0)
         .orderBy("user_id", "session_start")
     }),
@@ -408,7 +401,7 @@ object TsaQueries {
             .outputMode("append").start()
           try { q.processAllAvailable() } finally { q.stop() }
         }
-      } finally deleteRecursively(tmp)
+      } finally NioStoreFs.deleteRecursively(tmp.toString)
       s.table(sink)
         .select(col("tfrom"), col("statid"), col("seid"), col("sename"),
           col("seval"))
