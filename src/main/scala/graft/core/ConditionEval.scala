@@ -60,8 +60,9 @@ object ConditionEval {
     // equal timestamp an open shadows a close (adjacent ranges),
     // resolved by max(struct(prio, v)).
     //
-    // Chunk-then-stitch forward fill — the same layout, chunk width and
-    // chunk index as PackRanges.pack. A bare Window.orderBy("vt") (what the
+    // Chunk-then-stitch forward fill — the chunk width and chunk index
+    // of PackRanges.pack (a sorted scan per (block, chunk) there, a
+    // window per chunk here). A bare Window.orderBy("vt") (what the
     // reference's ORDER BY vt does, tsa/condition.py:374-380) would move
     // the condition's entire boundary grid onto ONE partition; a
     // condition over hot stations spans the full analysis period, so at
@@ -74,7 +75,7 @@ object ConditionEval {
     val events = blockRanges
       .select(col("alias"), explode(array(
         struct(col("vfrom").as("vt"), struct(lit(1).as("prio"),
-          coalesce(col("istrue").cast("int"), lit(-1)).as("v")).as("ev")),
+          PackRanges.encode3vl(col("istrue")).as("v")).as("ev")),
         struct(col("vuntil").as("vt"), struct(lit(0).as("prio"),
           lit(null).cast("int").as("v")).as("ev")))).as("e"))
       .select(col("alias"), col("e.vt").as("vt"), col("e.ev").as("ev"))
@@ -121,9 +122,7 @@ object ConditionEval {
     // earlier chunks.
     val blockCols = aliases.map { a =>
       val f = coalesce(col(s"__f_$a"), col(s"__ci_$a"))
-      when(f.isNotNull && f("prio") === 1,
-        when(f("v") === 1, lit(true)).when(f("v") === 0, lit(false))
-          .otherwise(lit(null).cast("boolean")))
+      when(f.isNotNull && f("prio") === 1, PackRanges.decode3vl(f("v")))
         .otherwise(lit(null).cast("boolean")).as(a)
     }
 

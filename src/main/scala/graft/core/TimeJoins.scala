@@ -15,8 +15,9 @@ import org.apache.spark.sql.types.StructType
   * at equal time, forward-fill the right columns, keep left rows. ONE
   * shuffle on the key, no O(n·m) interval explosion, and the sort
   * shares the shuffle — the same layout every kernel here uses. At
-  * scale a hot key can be chunk-stitched exactly like
-  * [[PackRanges.packKeyedChunked]]; the join itself never fans out.
+  * scale a hot key can be split into time chunks and stitched at their
+  * borders, as [[PackRanges.pack]] and [[ConditionEval.evalCondition]]
+  * do; the join itself never fans out.
   */
 object TimeJoins {
 

@@ -16,7 +16,7 @@ import scala.collection.mutable
   *     dangling-ref detection, superseding the fragile "primaries first,
   *     user orders secondaries" rule;
   *   - ALL primary blocks of the whole collection packed in ONE
-  *     observation pass (broadcast key tagging + windows partitioned by
+  *     observation pass (broadcast key tagging, then a sorted scan per
   *     block id and time chunk) instead of one Postgres call per block,
   *     so a hot station's long series spreads over many tasks; a condition
   *     reads all its primary blocks back in one filtered scan of it;
@@ -65,19 +65,15 @@ final class TsaEngine(spark: SparkSession, maxMinutes: Int = 30) {
     *
     * @param sensorIds sensor name → id map (reference
     *   tsa/utils.py:275-283 via the sensors metadata table)
-    */
-  def run(coll: CollectionSpec, obs: DataFrame,
-          sensorIds: Map[String, Int]): Vector[ConditionResult] =
-    run(coll, obs, sensorIds, validationObs = None)
-
-  /** @param validationObs relation to probe for station presence (A7) —
+    * @param validationObs relation to probe for station presence (A7) —
     *   pass the cheapest relation that carries `statid` (e.g. the
     *   pre-aggregation scan) when `obs` is a derived view whose
     *   aggregation the probe would otherwise have to execute; station
-    *   presence is invariant under the obs dedup/aggregation.
+    *   presence is invariant under the obs dedup/aggregation. None
+    *   probes `obs`.
     */
   def run(coll: CollectionSpec, obs: DataFrame, sensorIds: Map[String, Int],
-          validationObs: Option[DataFrame]): Vector[ConditionResult] = {
+          validationObs: Option[DataFrame] = None): Vector[ConditionResult] = {
 
     // Unpersist cached frames that are no longer catalog entries — each
     // earlier run's transient `packed` frame and any catalog entry a

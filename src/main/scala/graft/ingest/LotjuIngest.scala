@@ -70,13 +70,18 @@ object LotjuIngest {
     * filter + E5 dedup on the natural key (tfrom, statid).
     */
   def statobs(raw: DataFrame, stations: DataFrame): DataFrame =
+    statobsRows(raw, stations).dropDuplicates("tfrom", "statid")
+
+  /** [[statobs]] without its E5 dedup: E1 parse, E2 remap and E4 null
+    * filter, which the stream shares (it dedups within a watermark).
+    */
+  private[graft] def statobsRows(raw: DataFrame, stations: DataFrame): DataFrame =
     raw
       .withColumn("tfrom", parseLotjuTimestamp(col("AIKA")))
       .join(broadcast(stations.select(col("id").as("statid"), col("lotjuid"))),
         col("ASEMA_ID") === col("lotjuid"))
       .select(col("ID").as("id"), col("tfrom"), col("statid"))
       .filter(col("id").isNotNull && col("tfrom").isNotNull && col("statid").isNotNull)
-      .dropDuplicates("tfrom", "statid")
 
   /** Sensor values: raw `anturi_arvo` → `seobs(id, obsid, seid, seval)`.
     * E3 broadcast FK remap + E4 null filter + E5 dedup on (obsid, seid).
@@ -115,8 +120,8 @@ object LotjuIngest {
 
   /** Full pipeline: raw CSVs (monthly glob ok — replaces the reference's
     * 12-iteration shell loop, E7) → normalized parquet store.
-    */
-  /** @param logCounts when true, count and log inserted rows (the
+    *
+    * @param logCounts when true, count and log inserted rows (the
     *   reference's `RETURNING`-CTE row counting, A8,
     *   database/02_rawdata_schema.sql:67-76) — extra actions, off for
     *   production throughput

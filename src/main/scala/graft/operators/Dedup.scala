@@ -919,12 +919,6 @@ object Dedup {
       out.toSeq
     }
 
-  /** SimHash near-dup pairs with hamming distance <= maxHamming, using
-    * the pigeonhole band trick: split 64 bits into maxHamming+1 bands —
-    * any pair within distance k shares at least one exact band.
-    * Bucket-collect pair generation with the hamming filter fused into
-    * the expansion (see [[hammingPairsUdf]]).
-    */
   /** SimHash signature + pigeonhole band keys: one output row per
     * (input row, band) with `sig`, `band`, `bucket` appended and every
     * other input column passed through. Shared by [[simhashPairs]] and
@@ -953,6 +947,12 @@ object Dedup {
       .withColumnRenamed("col", "bucket")
   }
 
+  /** SimHash near-dup pairs with hamming distance <= maxHamming, using
+    * the pigeonhole band trick: split 64 bits into maxHamming+1 bands —
+    * any pair within distance k shares at least one exact band.
+    * Bucket-collect pair generation with the hamming filter fused into
+    * the expansion (see [[hammingPairsUdf]]).
+    */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 3): DataFrame = {
     val banded = bandedSignatures(

@@ -260,33 +260,6 @@ object NgramLm {
       .select(col(idCol), col(groupCol), col("avg_logp"), col("bucket"))
   }
 
-  /** Interpolated Kneser–Ney bigram probabilities (Kneser & Ney 1995;
-    * Chen & Goodman 1999 — public literature), fixed discount
-    * D = 0.75 — the smoothing KenLM defaults to and the stronger
-    * sibling of [[scoreDocs]]' stupid backoff:
-    *
-    *   p_kn(w2|w1) = (max(c(w1w2) − D, 0)
-    *                  + D·N1+(w1·)·p_cont(w2)) / c(w1·)
-    *   p_cont(w2)  = N1+(·w2) / N1+(··)
-    *
-    * Because D = 3/4, multiplying through by 4·N1+(··) clears EVERY
-    * denominator:
-    *
-    *   p_kn = (max(4c−3, 0)·N + 3·N1+(w1·)·N1+(·w2)) / (4·c(w1·)·N)
-    *
-    * — an INTEGER ratio, divided once exactly
-    * ([[graft.core.Round6.decRatio6]]): the full smoothing
-    * distribution carries a value oracle with no float knife edge.
-    *
-    * Scale: the bigram relation is vocab²-bounded (distinct bigrams,
-    * not corpus rows) and is materialized ONCE for its four
-    * differently-keyed aggregates (exchange reuse does not fire across
-    * different keys); everything after is vocab-sized joins and one
-    * broadcast scalar.
-    *
-    * @return (w1, w2, c12, p_kn): bigrams with c12 ≥ minCount, the
-    *         `limit` highest p_kn (ties → (w1, w2))
-    */
   /** Score documents under the interpolated KN bigram model trained
     * on the `trainPred` rows — [[scoreDocs]]' role (the CCNet
     * perplexity gate) with the KenLM-default smoother instead of
@@ -351,6 +324,33 @@ object NgramLm {
           .as("ctx_oov_rate"))
   }
 
+  /** Interpolated Kneser–Ney bigram probabilities (Kneser & Ney 1995;
+    * Chen & Goodman 1999 — public literature), fixed discount
+    * D = 0.75 — the smoothing KenLM defaults to and the stronger
+    * sibling of [[scoreDocs]]' stupid backoff:
+    *
+    *   p_kn(w2|w1) = (max(c(w1w2) − D, 0)
+    *                  + D·N1+(w1·)·p_cont(w2)) / c(w1·)
+    *   p_cont(w2)  = N1+(·w2) / N1+(··)
+    *
+    * Because D = 3/4, multiplying through by 4·N1+(··) clears EVERY
+    * denominator:
+    *
+    *   p_kn = (max(4c−3, 0)·N + 3·N1+(w1·)·N1+(·w2)) / (4·c(w1·)·N)
+    *
+    * — an INTEGER ratio, divided once exactly
+    * ([[graft.core.Round6.decRatio6]]): the full smoothing
+    * distribution carries a value oracle with no float knife edge.
+    *
+    * Scale: the bigram relation is vocab²-bounded (distinct bigrams,
+    * not corpus rows) and is materialized ONCE for its four
+    * differently-keyed aggregates (exchange reuse does not fire across
+    * different keys); everything after is vocab-sized joins and one
+    * broadcast scalar.
+    *
+    * @return (w1, w2, c12, p_kn): bigrams with c12 ≥ minCount, the
+    *         `limit` highest p_kn (ties → (w1, w2))
+    */
   def knProbs(docs: DataFrame, idCol: String, textCol: String,
               minCount: Long = 5, limit: Int = 50): DataFrame = {
     val tok = tokenized(docs, idCol, textCol, lit(true))

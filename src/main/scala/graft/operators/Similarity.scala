@@ -94,8 +94,8 @@ object Similarity {
     *
     * Hyperplane components are derived from a splitmix stream keyed on
     * (plane, dim) — no runtime randomness, replayable across runs.
-    */
-  /** IMPORTANT scale/codegen note: the hyperplane matrix is passed as ONE
+    *
+    * IMPORTANT scale/codegen note: the hyperplane matrix is passed as ONE
     * literal array-of-arrays and iterated with nested `transform` — an
     * unrolled formulation (nPlanes × dim expression nodes) sends Catalyst
     * analysis + Janino into minutes of single-core compile time before a
@@ -527,12 +527,6 @@ object Similarity {
   private[graft] def cosRound6Udf(a: Column, b: Column): Column =
     round(cosine(a, b), 6)
 
-  /** Embedding-cosine near-dup pairs at scale: hyperplane-LSH bucket
-    * candidates (any shared bucket across `nTables` tables), then exact
-    * cosine verification — precision 1.0, recall < 1 by design;
-    * [[cosinePairs]] is the audit baseline. Same bucket-collect pair
-    * generation as the text dedup operators.
-    */
   /** The storable hyperplane-LSH vector index artifact: (id, table,
     * bucket) sign-bit buckets — what a standing embedding corpus
     * persists so arriving batches dedup against it without touching
@@ -628,6 +622,12 @@ object Similarity {
     cosinePairsLsh(vectors, threshold, dim, nPlanes, nTables)
   }
 
+  /** Embedding-cosine near-dup pairs at scale: hyperplane-LSH bucket
+    * candidates (any shared bucket across `nTables` tables), then exact
+    * cosine verification — precision 1.0, recall < 1 by design;
+    * [[cosinePairs]] is the audit baseline. Same bucket-collect pair
+    * generation as the text dedup operators.
+    */
   def cosinePairsLsh(vectors: DataFrame, threshold: Double, dim: Int,
                      nPlanes: Int = 8, nTables: Int = 12): DataFrame = {
     val base = Dedup.spread(vectors)

@@ -1533,8 +1533,8 @@ object TrainQueries {
   /** Unrolled HITS trajectory: (authRaw, authNorm, auth, hubRaw,
     * hubNorm, hub) CTE sextuple per iteration, mirroring
     * [[graft.operators.Graph.hits]] token for token.
-    */
-  /** HITS twin of [[graft.operators.Graph.hits]]'s exact-integer
+    *
+    * HITS twin of [[graft.operators.Graph.hits]]'s exact-integer
     * trajectory: micro-unit HUGEINT scores, exact Σr² norms, and the
     * half-up L2 division replayed as "largest s with s²·B ≤ 4A²,
     * then (s+1)//2". DuckDB has no arbitrary-precision isqrt and
@@ -1966,8 +1966,8 @@ object TrainQueries {
     * constants by construction, so no cross-engine exp/ln ulp risk),
     * the hashed 1/2-gram feature relation with mean-normalized counts
     * + bias rows, labels, and the zero weight vector.
-    */
-  /** `buckets` parameterizes ONLY the hash modulus, the bias-bucket
+    *
+    * `buckets` parameterizes ONLY the hash modulus, the bias-bucket
     * index and the weight-vector length — the CTE structure is
     * bucket-count-agnostic (weights are a RELATION in the oracle, so
     * the 64-bucket gates and the 8192 to 2M-bucket gates share one
@@ -2092,11 +2092,6 @@ object TrainQueries {
       .map(d => Similarity.planeComponent(Similarity.ProjPlaneOffset + p, d).toString)
       .mkString("[", ",", "]")).mkString("[", ",", "]")
 
-  /** Exact-cosine re-rank shared by the ANN/LSH oracles: candidate pairs
-    * (cand: left_id, right_id) joined to embeddings, unnest-sum cosine
-    * rounded to 6 — the same formulation the q_embed_topk full oracle
-    * already hash-matches against Spark's single-pass native fold.
-    */
   /** Embedding-space dedup composition, LSH shape as a parameter — the
     * gate runs both the small-corpus shape (8,12) and the scale shape
     * (12,24), so the config a real cluster would pick is under the same
@@ -2147,6 +2142,11 @@ object TrainQueries {
        |FROM reach GROUP BY 1 ORDER BY 1""".stripMargin
   }
 
+  /** Exact-cosine re-rank shared by the ANN/LSH oracles: candidate pairs
+    * (cand: left_id, right_id) joined to embeddings, unnest-sum cosine
+    * rounded to 6 — the same formulation the q_embed_topk full oracle
+    * already hash-matches against Spark's single-pass native fold.
+    */
   private[queries] def cosineOverCandidatesSql(leftCol: String, rightCol: String): String =
     s"""pairs AS (
        |  SELECT c.$leftCol, c.$rightCol, a.embedding ea, b.embedding eb

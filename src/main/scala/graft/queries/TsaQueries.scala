@@ -90,6 +90,18 @@ object TsaQueries {
        |    CASE max(enc) WHEN 1 THEN true WHEN 0 THEN false ELSE NULL END AS istrue
        |  FROM grp_tb GROUP BY block_id, grp)""".stripMargin
 
+  /** The blocks of the pack gates, as Spark blocks and as the oracle's
+    * VALUES list and predicate CASE: `q_pack_ranges` and `q_stream_pack`
+    * pack all three, `q_interval_join` joins the first two.
+    */
+  private val packBlocks = Seq(
+    PackRanges.KeyedBlock(0, 1L, 5L, PackRanges.predicate(col("seval"), CmpOp.Ge, Seq(20.0))),
+    PackRanges.KeyedBlock(1, 2L, 1L, PackRanges.predicate(col("seval"), CmpOp.Lt, Seq(50.0))),
+    PackRanges.KeyedBlock(2, 3L, 3L, PackRanges.predicate(col("seval"), CmpOp.In, Seq(10.0, 20.0, 30.0))))
+  private val packKeys = "(0, 1, 5), (1, 2, 1), (2, 3, 3)"
+  private val packPred =
+    "CASE b.block_id WHEN 0 THEN o.seval >= 20 WHEN 1 THEN o.seval < 50 WHEN 2 THEN o.seval IN (10.0, 20.0, 30.0) END"
+
   /** The demo condition used by the engine queries:
     * `s1#view >= 20 and s2#click < 50` at site demo, alias c1 —
     * blocks c1_0=(statid 1, seid 5, >=20), c1_1=(statid 2, seid 1, <50).
@@ -125,8 +137,8 @@ object TsaQueries {
   /** The three engine queries share one evaluated collection per
     * (session, sfDir) — the result catalog IS the reference's temp-table
     * reuse; re-planning it per query would triple the bench cost.
-    */
-  /** ONE-slot cache: verify/bench run one (session, sfDir) at a time,
+    *
+    * ONE-slot cache: verify/bench run one (session, sfDir) at a time,
     * and a new key evicts the old entry — no unbounded static map
     * pinning frames for the life of the JVM if this class outlives a
     * harness run.
@@ -187,6 +199,28 @@ object TsaQueries {
       }
     }
 
+  /** Replay `feeds` as file streams and drain `query` over them into a
+    * memory sink, returned as a table. Each feed lands as one coalesced
+    * parquet file (written in order), so every source is one
+    * micro-batch; state partitions are sized from the feeds, not the
+    * batch default.
+    */
+  private def replayStreams(s: SparkSession, name: String, feeds: DataFrame*)(
+      query: Seq[DataFrame] => DataFrame): DataFrame = {
+    val dirs = feeds.map(_ => java.nio.file.Files.createTempDirectory(name).toString)
+    val sink = s"${name}_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
+    try {
+      feeds.zip(dirs).foreach { case (f, dir) => f.coalesce(1).write.mode("overwrite").parquet(dir) }
+      val sources = dirs.map(dir => s.readStream.schema(s.read.parquet(dir).schema).parquet(dir))
+      graft.streaming.StreamTune.withStatePartitions(s, dirs.map(graft.streaming.StreamTune.dirBytes).sum) {
+        val q = query(sources).writeStream.format("memory").queryName(sink)
+          .outputMode("append").start()
+        try { q.processAllAvailable() } finally { q.stop() }
+      }
+    } finally dirs.foreach(NioStoreFs.deleteRecursively)
+    s.table(sink)
+  }
+
   /** Bench-only: materialize the shared fixtures under their OWN
     * names so the engine-backed gates time their own work instead of
     * whichever-runs-first absorbing the whole build (round-10
@@ -205,14 +239,9 @@ object TsaQueries {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // R3-R8: the pack_ranges kernel, three blocks in one pass.
-    "q_pack_ranges" -> ((s, d) => {
-      val blocks = Seq(
-        PackRanges.KeyedBlock(0, 1L, 5L, PackRanges.predicate(col("seval"), CmpOp.Ge, Seq(20.0))),
-        PackRanges.KeyedBlock(1, 2L, 1L, PackRanges.predicate(col("seval"), CmpOp.Lt, Seq(50.0))),
-        PackRanges.KeyedBlock(2, 3L, 3L, PackRanges.predicate(col("seval"), CmpOp.In, Seq(10.0, 20.0, 30.0))))
-      PackRanges.packKeyedChunked(obsFromEvents(s, d), blocks, MaxMinutes)
-        .orderBy("block_id", "vfrom")
-    }),
+    "q_pack_ranges" -> ((s, d) =>
+      PackRanges.packKeyedChunked(obsFromEvents(s, d), packBlocks, MaxMinutes)
+        .orderBy("block_id", "vfrom")),
 
     // The streaming twin of q_pack_ranges under the SAME hash oracle:
     // the tagged 3VL readings land as parquet, a REAL file-based
@@ -223,34 +252,11 @@ object TsaQueries {
     // minus each block's trailing OPEN island — which is exactly what
     // the oracle SQL selects (ranges minus max-vfrom per block).
     "q_stream_pack" -> ((s, d) => {
-      val blocks = Seq(
-        PackRanges.KeyedBlock(0, 1L, 5L, PackRanges.predicate(col("seval"), CmpOp.Ge, Seq(20.0))),
-        PackRanges.KeyedBlock(1, 2L, 1L, PackRanges.predicate(col("seval"), CmpOp.Lt, Seq(50.0))),
-        PackRanges.KeyedBlock(2, 3L, 3L, PackRanges.predicate(col("seval"), CmpOp.In, Seq(10.0, 20.0, 30.0))))
-      val tagged = PackRanges.tagKeyed(obsFromEvents(s, d), blocks)
-        .select(col("block_id"), col("tfrom"),
-          coalesce(col("istrue").cast("int"), lit(-1)).as("enc"))
-      val tmp = java.nio.file.Files.createTempDirectory("q_stream_pack")
-      val sink = s"stream_pack_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-      try {
-        tagged.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val src = s.readStream.schema(s.read.parquet(tmp.toString).schema)
-          .parquet(tmp.toString)
-        graft.streaming.StreamTune.withStatePartitions(s,
-          graft.streaming.StreamTune.dirBytes(tmp.toString)) {
-          val q = graft.streaming.StreamingPack.packStream(src, MaxMinutes)
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("append").start()
-          try { q.processAllAvailable() } finally { q.stop() }
-        }
-      } finally NioStoreFs.deleteRecursively(tmp.toString)
-      s.table(sink)
-        .select(col("blockId").as("block_id"),
-          timestamp_micros(col("vfrom")).as("vfrom"),
-          timestamp_micros(col("vuntil")).as("vuntil"),
-          when(col("enc") === 1, lit(true)).when(col("enc") === 0, lit(false))
-            .otherwise(lit(null).cast("boolean")).as("istrue"))
-        .orderBy("block_id", "vfrom")
+      val tagged = PackRanges.tagKeyed(obsFromEvents(s, d), packBlocks)
+        .select(col("block_id"), col("tfrom"), PackRanges.encode3vl(col("istrue")).as("enc"))
+      val islands = replayStreams(s, "q_stream_pack", tagged)(src =>
+        graft.streaming.StreamingPack.packStream(src.head, MaxMinutes).toDF())
+      PackRanges.asRanges(islands).orderBy("block_id", "vfrom")
     }),
 
     // The streaming as-of enrich under the batch oracle: clicks and
@@ -266,26 +272,9 @@ object TsaQueries {
       val errors = ev.filter(col("event_type") === "error")
         .groupBy(col("user_id").as("key"), col("ts"))
         .agg(max("value").as("value"))
-      val tmpR = java.nio.file.Files.createTempDirectory("q_stream_asof_r")
-      val tmpS = java.nio.file.Files.createTempDirectory("q_stream_asof_s")
-      val sink = s"stream_asof_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-      try {
-        errors.coalesce(1).write.mode("overwrite").parquet(tmpS.toString)
-        clicks.coalesce(1).write.mode("overwrite").parquet(tmpR.toString)
-        val rSrc = s.readStream.schema(s.read.parquet(tmpR.toString).schema)
-          .parquet(tmpR.toString)
-        val sSrc = s.readStream.schema(s.read.parquet(tmpS.toString).schema)
-          .parquet(tmpS.toString)
-        graft.streaming.StreamTune.withStatePartitions(s,
-          graft.streaming.StreamTune.dirBytes(tmpR.toString) +
-            graft.streaming.StreamTune.dirBytes(tmpS.toString)) {
-          val q = graft.streaming.StreamingAsof.asofStream(rSrc, sSrc).toDF()
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("append").start()
-          try { q.processAllAvailable() } finally { q.stop() }
+      replayStreams(s, "q_stream_asof", errors, clicks) { case Seq(state, readings) =>
+          graft.streaming.StreamingAsof.asofStream(readings, state).toDF()
         }
-      } finally { NioStoreFs.deleteRecursively(tmpR.toString); NioStoreFs.deleteRecursively(tmpS.toString) }
-      s.table(sink)
         .select(col("key").as("user_id"), timestamp_micros(col("ts")).as("ts"),
           col("reading").as("click_val"), col("state_value").as("err_val"))
         .orderBy("user_id", "ts", "click_val")
@@ -305,28 +294,10 @@ object TsaQueries {
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
           col("event_id").as("click_id"))
-      val tmpV = java.nio.file.Files.createTempDirectory("q_stream_join_v")
-      val tmpC = java.nio.file.Files.createTempDirectory("q_stream_join_c")
-      val sink = s"stream_join_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-      try {
-        views.coalesce(1).write.mode("overwrite").parquet(tmpV.toString)
-        clicks.coalesce(1).write.mode("overwrite").parquet(tmpC.toString)
-        val vSrc = s.readStream.schema(s.read.parquet(tmpV.toString).schema)
-          .parquet(tmpV.toString)
-        val cSrc = s.readStream.schema(s.read.parquet(tmpC.toString).schema)
-          .parquet(tmpC.toString)
-        // state partitions sized from the feeds, not the batch default
-        graft.streaming.StreamTune.withStatePartitions(s,
-          graft.streaming.StreamTune.dirBytes(tmpV.toString) +
-            graft.streaming.StreamTune.dirBytes(tmpC.toString)) {
-          val q = graft.streaming.StreamingJoin
-            .attributionJoin(vSrc, cSrc, "6 hours")
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("append").start()
-          try { q.processAllAvailable() } finally { q.stop() }
+      replayStreams(s, "q_stream_join", views, clicks) { case Seq(v, c) =>
+          graft.streaming.StreamingJoin.attributionJoin(v, c, "6 hours")
         }
-      } finally { NioStoreFs.deleteRecursively(tmpV.toString); NioStoreFs.deleteRecursively(tmpC.toString) }
-      s.table(sink).orderBy("user_id", "view_id", "click_id")
+        .orderBy("user_id", "view_id", "click_id")
     }),
 
     // Streaming sessionization under the batch oracle: session_window
@@ -447,10 +418,7 @@ object TsaQueries {
     // R12 as a first-class operator: overlap pairs between two blocks'
     // true-ranges via the binned interval join (oracle: plain theta join).
     "q_interval_join" -> ((s, d) => {
-      val blocks = Seq(
-        PackRanges.KeyedBlock(0, 1L, 5L, PackRanges.predicate(col("seval"), CmpOp.Ge, Seq(20.0))),
-        PackRanges.KeyedBlock(1, 2L, 1L, PackRanges.predicate(col("seval"), CmpOp.Lt, Seq(50.0))))
-      val packed = PackRanges.packKeyedChunked(obsFromEvents(s, d), blocks, MaxMinutes)
+      val packed = PackRanges.packKeyedChunked(obsFromEvents(s, d), packBlocks.take(2), MaxMinutes)
       val l = packed.filter(col("block_id") === 0 && col("istrue") === true)
         .select(col("vfrom").as("lfrom"), col("vuntil").as("luntil"))
       val r = packed.filter(col("block_id") === 1 && col("istrue") === true)
@@ -810,8 +778,7 @@ object TsaQueries {
 
     "q_pack_ranges" ->
       s"""WITH $obsSql,
-         |${packSql("(0, 1, 5), (1, 2, 1), (2, 3, 3)",
-          "CASE b.block_id WHEN 0 THEN o.seval >= 20 WHEN 1 THEN o.seval < 50 WHEN 2 THEN o.seval IN (10.0, 20.0, 30.0) END")}
+         |${packSql(packKeys, packPred)}
          |SELECT block_id, vfrom, vuntil, istrue FROM ranges
          |ORDER BY block_id, vfrom""".stripMargin,
 
@@ -826,8 +793,7 @@ object TsaQueries {
     // trailing island, which stays open in state
     "q_stream_pack" ->
       s"""WITH $obsSql,
-         |${packSql("(0, 1, 5), (1, 2, 1), (2, 3, 3)",
-          "CASE b.block_id WHEN 0 THEN o.seval >= 20 WHEN 1 THEN o.seval < 50 WHEN 2 THEN o.seval IN (10.0, 20.0, 30.0) END")}
+         |${packSql(packKeys, packPred)}
          |SELECT block_id, vfrom, vuntil, istrue FROM ranges r
          |WHERE vfrom < (SELECT max(vfrom) FROM ranges r2
          |               WHERE r2.block_id = r.block_id)

@@ -74,25 +74,6 @@ object PartitionedStore {
       col(tsCol).between(lit(from), lit(until)))
   }
 
-  /** MERGE (keyed upsert) a batch into the day-partitioned store,
-    * rewriting ONLY the partitions the batch touches — the reference's
-    * monthly upsert loop (`ON CONFLICT DO UPDATE` per batch,
-    * SURVEY.md E5/E7) generalized to the lake layout. At 100 TB the
-    * invariant is: a day's corrections cost one day's read + rewrite,
-    * never a table scan.
-    *
-    * Mechanics: the batch's distinct days collect to the driver
-    * (bounded by touched days); the store read is pruned to exactly
-    * those partitions; store rows whose key also appears in the batch
-    * drop (anti join on `keyCols` — update-by-replace); the batch
-    * unions in (inserts + updated rows); the write goes back in
-    * DYNAMIC partition-overwrite mode, so only the touched
-    * `obs_date=` directories are replaced — untouched partitions are
-    * neither read nor written.
-    *
-    * Requires `keyCols` to be a true key of both store and batch
-    * within a day (the reference's natural-key contract).
-    */
   /** DELETE by key (the right-to-be-forgotten path): remove every
     * store row matching a key in `keys`, rewriting ONLY the partitions
     * the key set touches — [[mergeByDay]]'s mechanics with no inserts.
@@ -129,6 +110,25 @@ object PartitionedStore {
     }
   }
 
+  /** MERGE (keyed upsert) a batch into the day-partitioned store,
+    * rewriting ONLY the partitions the batch touches — the reference's
+    * monthly upsert loop (`ON CONFLICT DO UPDATE` per batch,
+    * SURVEY.md E5/E7) generalized to the lake layout. At 100 TB the
+    * invariant is: a day's corrections cost one day's read + rewrite,
+    * never a table scan.
+    *
+    * Mechanics: the batch's distinct days collect to the driver
+    * (bounded by touched days); the store read is pruned to exactly
+    * those partitions; store rows whose key also appears in the batch
+    * drop (anti join on `keyCols` — update-by-replace); the batch
+    * unions in (inserts + updated rows); the write goes back in
+    * DYNAMIC partition-overwrite mode, so only the touched
+    * `obs_date=` directories are replaced — untouched partitions are
+    * neither read nor written.
+    *
+    * Requires `keyCols` to be a true key of both store and batch
+    * within a day (the reference's natural-key contract).
+    */
   def mergeByDay(spark: SparkSession, batch: org.apache.spark.sql.DataFrame,
                  path: String, keyCols: Seq[String],
                  tsCol: String = "tfrom"): Unit = {

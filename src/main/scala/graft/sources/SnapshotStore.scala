@@ -80,8 +80,8 @@ object SnapshotStore extends SnapshotStoreOps(NioStoreFs) {
     * re-inserted after its deletion (new file, higher seq) is never
     * shadowed by the older delete. The public Iceberg v2 sequence-
     * number rule.
-    */
-  /** `bloom`: optional per-file KEY bloom filter (base64 of the
+    *
+    * `bloom`: optional per-file KEY bloom filter (base64 of the
     * m-bit array [[graft.functions.KeyBloomAgg]] builds in the same
     * stats scan) — the parquet-column-bloom/puffin role: point
     * lookups of SCATTERED keys prune files whose range contains a
@@ -89,15 +89,15 @@ object SnapshotStore extends SnapshotStoreOps(NioStoreFs) {
     * [[SnapshotStoreOps.lookupKeys]]). Base64 string (not bytes) so
     * case-class equality — which segment reuse depends on — stays
     * structural.
-    */
-  /** `bytes`: on-disk file size, recorded at commit time (one
+    *
+    * `bytes`: on-disk file size, recorded at commit time (one
     * metadata stat per new file) — what BYTE-sized maintenance
     * ([[SnapshotStoreOps.compactBytes]]) decides from: rows are a
     * poor size proxy when row widths vary 1000× (a JPEG next to a
     * caption). 0 for entries from manifests that predate byte
     * tracking — unknown size never triggers a rewrite.
-    */
-  /** `layout`: the file's PHYSICAL layout spec — the partition-spec-
+    *
+    * `layout`: the file's PHYSICAL layout spec — the partition-spec-
     * evolution shape (Iceberg spec ids) in miniature. None = range-
     * clustered by key, the layout every normal commit writes; an
     * evolved layout (z-order) stamps its descriptor, so one version
@@ -126,14 +126,6 @@ object SnapshotStore extends SnapshotStoreOps(NioStoreFs) {
     */
   final case class DeleteEntry(path: String, minKey: Long, maxKey: Long,
                                rows: Long, seq: Long)
-  /** `schemaDdl`: the DECLARED read schema of this version (Spark DDL
-    * text) — what makes SCHEMA EVOLUTION a metadata operation: an
-    * [[addColumn]]/[[dropColumn]] commits a new manifest with the new
-    * schema and ZERO data files touched. Reads apply the version's
-    * declared schema, so a column added later reads as NULL from
-    * pre-evolution files (parquet explicit-schema semantics) and old
-    * versions keep time-traveling with THEIR schema.
-    */
   /** An immutable MANIFEST SEGMENT: a `manifests/seg-<uuid>.json`
     * file holding a slice of the table's file entries. The version
     * file lists segment paths instead of inlining every entry (the
@@ -147,22 +139,6 @@ object SnapshotStore extends SnapshotStoreOps(NioStoreFs) {
     */
   final case class Segment(path: String, entries: Vector[FileEntry])
 
-  /** `bloomBits`: the table's per-file key-bloom width (0 = blooms
-    * off, the default — every pre-bloom manifest reads as 0). A
-    * table property, not per-commit: every commit path carries it so
-    * rewrites keep building filters. Sizing guidance: ~10–16 bits
-    * per expected row per file → ~1 %–0.2 % false-positive rate at
-    * k = 4; the filter lives in the manifest segment, so budget it
-    * against metadata size (a real deployment side-files large
-    * blooms, the Iceberg puffin shape).
-    */
-  /** `txn`: an optional "appId:batchId" idempotence marker on THIS
-    * commit (the Delta txn-action idea) — set only by the commit
-    * that applied that batch, deliberately NOT carried to later
-    * versions: [[SnapshotStoreOps.appendOnce]] scans retained
-    * manifests for it, so a redelivered micro-batch lands exactly
-    * once within the retention window.
-    */
   /** One RENAME COLUMN event: at commit `v` the column physically
     * named `from` in older files became `to` in the declared schema
     * (and in files written from `v` on). The manifest carries the
@@ -173,6 +149,30 @@ object SnapshotStore extends SnapshotStoreOps(NioStoreFs) {
     */
   final case class Rename(v: Long, from: String, to: String)
 
+  /** `schemaDdl`: the DECLARED read schema of this version (Spark DDL
+    * text) — what makes SCHEMA EVOLUTION a metadata operation: an
+    * [[addColumn]]/[[dropColumn]] commits a new manifest with the new
+    * schema and ZERO data files touched. Reads apply the version's
+    * declared schema, so a column added later reads as NULL from
+    * pre-evolution files (parquet explicit-schema semantics) and old
+    * versions keep time-traveling with THEIR schema.
+    *
+    * `bloomBits`: the table's per-file key-bloom width (0 = blooms
+    * off, the default — every pre-bloom manifest reads as 0). A
+    * table property, not per-commit: every commit path carries it so
+    * rewrites keep building filters. Sizing guidance: ~10–16 bits
+    * per expected row per file → ~1 %–0.2 % false-positive rate at
+    * k = 4; the filter lives in the manifest segment, so budget it
+    * against metadata size (a real deployment side-files large
+    * blooms, the Iceberg puffin shape).
+    *
+    * `txn`: an optional "appId:batchId" idempotence marker on THIS
+    * commit (the Delta txn-action idea) — set only by the commit
+    * that applied that batch, deliberately NOT carried to later
+    * versions: [[SnapshotStoreOps.appendOnce]] scans retained
+    * manifests for it, so a redelivered micro-batch lands exactly
+    * once within the retention window.
+    */
   final case class Manifest(version: Long, keyCol: String,
                             files: Vector[FileEntry],
                             statsCols: Vector[String] = Vector.empty,
@@ -325,11 +325,6 @@ class SnapshotStoreOps(protected val fs: StoreFs) {
       bloomBits = cur.bloomBits, renames = cur.renames, props = cur.props)
   }
 
-  /** SCHEMA EVOLUTION, add: a new version whose declared schema gains
-    * nullable `name` of `typeDdl` (e.g. "STRING", "BIGINT") — pure
-    * metadata, zero files read or written. Existing files simply have
-    * no such column and read as NULL; future commits may populate it.
-    */
   /** TABLE PROPERTIES (the Iceberg/Delta TBLPROPERTIES surface):
     * string key→value pairs carried by the MANIFEST — durable,
     * versioned with the table (time travel sees a version's own
@@ -403,6 +398,11 @@ class SnapshotStoreOps(protected val fs: StoreFs) {
       renames = cur.renames, props = cur.props -- keys))
   }
 
+  /** SCHEMA EVOLUTION, add: a new version whose declared schema gains
+    * nullable `name` of `typeDdl` (e.g. "STRING", "BIGINT") — pure
+    * metadata, zero files read or written. Existing files simply have
+    * no such column and read as NULL; future commits may populate it.
+    */
   def addColumn(root: String, name: String, typeDdl: String): Manifest = {
     val cur = currentManifest(root)
     val schema = cur.schema.getOrElse(sys.error(
@@ -1567,20 +1567,6 @@ class SnapshotStoreOps(protected val fs: StoreFs) {
     compactInto(spark, root, cur, small, big, nOut)
   }
 
-  /** Z-ORDER COMPACTION (Delta's `OPTIMIZE ZORDER BY` / Iceberg's
-    * sort-order rewrite): [[compact]]'s small-file rewrite, but the
-    * rows cluster by the Morton interleave of the KEY and a
-    * zone-mapped secondary column instead of the key alone — every
-    * rewritten file's [min, max] envelope tightens on BOTH
-    * dimensions, so [[scanRanges]]' conjunctive pruning skips files
-    * on either predicate (a key-sorted layout prunes only by key:
-    * each file spans the secondary's full range). Dimension envelopes
-    * come from MANIFEST METADATA alone (key stats + zone maps — no
-    * data read to plan the layout); each dimension range-scales to
-    * the Morton code's 16-bit lanes. Row-identical; all stats
-    * recompute through the normal commit path. NULL secondaries sort
-    * first (their zone maps already read conservatively).
-    */
   /** Scale a dimension into the Morton code's 16-bit lane; the
     * multiply stays in DECIMAL so a full-long envelope cannot
     * overflow (layout-only arithmetic — correctness never depends
@@ -1601,6 +1587,20 @@ class SnapshotStoreOps(protected val fs: StoreFs) {
     ((c.cast("decimal(38,0)") - mn) * 65535L / divisor).cast("long")
   }
 
+  /** Z-ORDER COMPACTION (Delta's `OPTIMIZE ZORDER BY` / Iceberg's
+    * sort-order rewrite): [[compact]]'s small-file rewrite, but the
+    * rows cluster by the Morton interleave of the KEY and a
+    * zone-mapped secondary column instead of the key alone — every
+    * rewritten file's [min, max] envelope tightens on BOTH
+    * dimensions, so [[scanRanges]]' conjunctive pruning skips files
+    * on either predicate (a key-sorted layout prunes only by key:
+    * each file spans the secondary's full range). Dimension envelopes
+    * come from MANIFEST METADATA alone (key stats + zone maps — no
+    * data read to plan the layout); each dimension range-scales to
+    * the Morton code's 16-bit lanes. Row-identical; all stats
+    * recompute through the normal commit path. NULL secondaries sort
+    * first (their zone maps already read conservatively).
+    */
   def compactZorder(spark: SparkSession, root: String, zCol: String,
                     smallRows: Long = 100000L,
                     targetRows: Long = 1000000L): Manifest = {
@@ -1873,18 +1873,6 @@ class SnapshotStoreOps(protected val fs: StoreFs) {
       .filter(col(column).between(lo, hi))
   }
 
-  /** INCREMENTAL APPEND SCAN (the Iceberg incremental-scan surface):
-    * the rows ADDED between `v0` and `v1`, read from ONLY the files
-    * that appeared in the interval — the "give me what's new since my
-    * last sync" consumer shape, file-list-sized to plan and
-    * delta-sized to read regardless of table size (where [[changes]]
-    * hashes BOTH versions row-by-row to also find updates/deletes).
-    * REFUSES non-append-only history: if any `v0` file was rewritten
-    * or dropped, or any delete file landed, in the interval, "added
-    * files" no longer means "added rows" (a merge rewrite carries old
-    * rows into new files) — use [[changes]] there. Added files carry
-    * seq > every pre-existing delete's, so they read plain.
-    */
   /** The files versions `(v0, v1]` APPENDED, with `v1`'s manifest —
     * the shared append-only arithmetic behind [[readIncremental]] and
     * the streaming table read ([[graft.sources.v2
@@ -1916,6 +1904,18 @@ class SnapshotStoreOps(protected val fs: StoreFs) {
     b.files.filterNot(f => aPaths(f.path))
   }
 
+  /** INCREMENTAL APPEND SCAN (the Iceberg incremental-scan surface):
+    * the rows ADDED between `v0` and `v1`, read from ONLY the files
+    * that appeared in the interval — the "give me what's new since my
+    * last sync" consumer shape, file-list-sized to plan and
+    * delta-sized to read regardless of table size (where [[changes]]
+    * hashes BOTH versions row-by-row to also find updates/deletes).
+    * REFUSES non-append-only history: if any `v0` file was rewritten
+    * or dropped, or any delete file landed, in the interval, "added
+    * files" no longer means "added rows" (a merge rewrite carries old
+    * rows into new files) — use [[changes]] there. Added files carry
+    * seq > every pre-existing delete's, so they read plain.
+    */
   def readIncremental(spark: SparkSession, root: String, v0: Long,
                       v1: Long): DataFrame = {
     val (added, b) = incrementalAddedFiles(root, v0, v1)

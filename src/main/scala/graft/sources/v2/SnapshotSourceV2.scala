@@ -150,12 +150,6 @@ object SnapshotSource {
       "manifest-relative path of the data file holding the row"
   }
 
-  /** The file set a V2 scan will actually read, collected from the
-    * physical plan's BatchScanExec — the pruning evidence gates and
-    * specs assert on (`Dataset.inputFiles` only serves built-in
-    * FileTable sources). One home so a Spark upgrade or AQE-wrapping
-    * change lands once.
-    */
   /** Every physical node in a DF's EXECUTED plan, descending through
     * AQE roots and materialized query stages (both hold their
     * re-planned subtree as a FIELD, not a child — a plain collect over
@@ -177,6 +171,12 @@ object SnapshotSource {
     go(df.queryExecution.executedPlan)
   }
 
+  /** The file set a V2 scan will actually read, collected from the
+    * physical plan's BatchScanExec — the pruning evidence gates and
+    * specs assert on (`Dataset.inputFiles` only serves built-in
+    * FileTable sources). One home so a Spark upgrade or AQE-wrapping
+    * change lands once.
+    */
   def scannedFiles(df: org.apache.spark.sql.DataFrame): Seq[String] =
     planNodes(df).flatMap {
       // type-matched, not cast: a plan joining a graft-snapshot read

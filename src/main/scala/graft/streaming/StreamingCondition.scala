@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import graft.core.ConditionEval
+import graft.core.{ConditionEval, PackRanges}
 import graft.model.Expr
 
 /** Live condition evaluation over the WIDE observation layout
@@ -10,7 +10,8 @@ import graft.model.Expr
   * optimization, database/README.md:128-131): block predicates are
   * plain column comparisons, the 3VL master evaluates per ROW, and the
   * master value stream run-length packs into validity islands
-  * incrementally via [[StreamingPack]]'s state machine.
+  * incrementally via [[StreamingPack.packStream]] (the batch kernel's
+  * [[PackRanges.advance]] per key).
   *
   * Wide-layout semantics: all of a station's sensors are co-timestamped
   * on one row (same contract as the batch `q_wide_predicate` path) —
@@ -21,12 +22,6 @@ import graft.model.Expr
   */
 object StreamingCondition {
 
-  /** 3VL-encode a boolean master column (1/0/-1) — the batch kernel's
-    * R6 encoding.
-    */
-  def encode3vl(master: Column): Column =
-    coalesce(master.cast("int"), lit(-1))
-
   /** @param wide streaming wide-layout frame; one row per (key, ts)
     * @param master boolean Column over the sensor columns (compile an
     *   [[Expr]] with [[ConditionEval.compile]] after aliasing, or pass
@@ -36,9 +31,9 @@ object StreamingCondition {
     *   trailing open island lives in state until a later row closes it
     */
   def evalWideStream(wide: DataFrame, keyCol: String, tsCol: String,
-                     master: Column, maxMinutes: Int): Dataset[StreamingPack.Island] =
+                     master: Column, maxMinutes: Int): Dataset[PackRanges.Island] =
     StreamingPack.packStream(
       wide.select(col(keyCol).cast("int").as("block_id"),
-        col(tsCol).as("tfrom"), encode3vl(master).as("enc")),
+        col(tsCol).as("tfrom"), PackRanges.encode3vl(master).as("enc")),
       maxMinutes)
 }

@@ -31,19 +31,15 @@ object StreamingIngest {
   }
 
   /** Transform-only variant for arbitrary streaming sources (tests feed
-    * a MemoryStream). Mirrors [[LotjuIngest.statobs]]; dedup keeps the
-    * FIRST arrival per (tfrom, statid) within the watermark horizon —
-    * duplicates in the raw dumps are re-sends of the same reading, so
-    * first-wins equals the batch arbitrary-survivor semantics on them.
+    * a MemoryStream): [[LotjuIngest.statobs]]'s parse, remap and null
+    * filter; dedup keeps the FIRST arrival per (tfrom, statid) within the
+    * watermark horizon — duplicates in the raw dumps are re-sends of the
+    * same reading, so first-wins equals the batch arbitrary-survivor
+    * semantics on them.
     */
   def statobsStreamFrom(raw: DataFrame, stations: DataFrame,
                         lateness: String): DataFrame =
-    raw
-      .withColumn("tfrom", LotjuIngest.parseLotjuTimestamp(col("AIKA")))
-      .join(broadcast(stations.select(col("id").as("statid"), col("lotjuid"))),
-        col("ASEMA_ID") === col("lotjuid"))
-      .select(col("ID").as("id"), col("tfrom"), col("statid"))
-      .filter(col("id").isNotNull && col("tfrom").isNotNull && col("statid").isNotNull)
+    LotjuIngest.statobsRows(raw, stations)
       .withWatermark("tfrom", lateness)
       .dropDuplicatesWithinWatermark("tfrom", "statid")
 

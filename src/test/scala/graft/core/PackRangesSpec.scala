@@ -78,6 +78,33 @@ class PackRangesSpec extends AnyFunSuite with SparkTest {
     }
   }
 
+  test("a repeated last timestamp adds no zero-length island; the block is NULL after it") {
+    import spark.implicits._
+    // block a: 0→1, 10→0 sent twice; block b: 0, 30, 60 all 1
+    val o = (Seq(0L -> 1.0, 10L -> 0.0, 10L -> 0.0).map { case (m, v) => (ts(m), 1L, 1L, v) } ++
+      Seq(0L, 30L, 60L).map(m => (ts(m), 1L, 2L, 1.0)))
+      .toDF("tfrom", "statid", "seid", "seval")
+    val blocks = Seq(1L, 2L).map(seid => PackRanges.KeyedBlock(seid.toInt - 1, 1L, seid,
+      PackRanges.predicate(col("seval"), CmpOp.Eq, Seq(1.0))))
+    for (h <- chunkWidths) withClue(s"chunkHours=$h: ") {
+      val packed = PackRanges.packKeyedChunked(o, blocks, 30, h)
+      val a = packed.filter(col("block_id") === 0).orderBy("vfrom").collect()
+        .map(r => (r.getTimestamp(1), r.getTimestamp(2), Option(r.get(3)))).toList
+      // the repeat of a's last reading is not a range [10, 10)
+      assert(a == List((ts(0), ts(10), Some(true))))
+      val ranges = packed.select(
+        org.apache.spark.sql.functions.when(col("block_id") === 0, "a").otherwise("b").as("alias"),
+        col("vfrom"), col("vuntil"), col("istrue"))
+      val rows = ConditionEval.evalCondition(ranges, Seq("a", "b"),
+          Expr.Or(Expr.Ref("a"), Expr.Ref("b")), h).collect()
+        .map(r => (r.getTimestamp(0), r.getTimestamp(1), Option(r.get(3)), Option(r.get(4)))).toList
+      // after its last reading a has no data: NULL, not false
+      assert(rows == List(
+        (ts(0), ts(10), Some(true), Some(true)),
+        (ts(10), ts(60), None, Some(true))))
+    }
+  }
+
   test("two-block condition: refinement, 3VL master, summary invariant") {
     val blocks = Seq(
       PackRanges.KeyedBlock(0, 1120L, 27L,

@@ -3,10 +3,13 @@ package graft.core
 import graft.SparkTest
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.optimizer.BuildRight
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{MapGroupsExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,8 +17,8 @@ import scala.jdk.CollectionConverters._
 
 /** Plan-shape assertions: the optimizations we rely on at 100 TB must
   * survive refactors — filter/column pushdown into the parquet scan,
-  * broadcast of dimension tables, and one shuffle feeding each window
-  * pass of the pack kernel (SURVEY.md §4, §7.4 pt 6).
+  * broadcast of dimension tables, and one shuffle feeding each pass of
+  * the pack kernel (SURVEY.md §4, §7.4 pt 6).
   */
 class PlanSpec extends AnyFunSuite with SparkTest with AdaptiveSparkPlanHelper {
 
@@ -75,20 +78,31 @@ class PlanSpec extends AnyFunSuite with SparkTest with AdaptiveSparkPlanHelper {
   }
 
   test("pack kernel: block keys broadcast; one exchange feeds each window pass") {
-    val plan = physicalPlan("q_pack_ranges")
+    val df = graft.SparkEntry.queries("q_pack_ranges")(spark, sf)
+    val plan = df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
     assert(plan.contains("BroadcastHashJoin"), plan)
-    val windows = "Window".r.findAllIn(plan).size
-    assert(windows >= 2, s"expected stacked windows, got $windows\n$plan")
     // the obs aggregation, then one exchange per pass: the readings by
-    // (block_id, chunk) under the chunk-local windows, the partial
-    // islands by block_id under the stitch — the input is read once and
-    // no window adds an exchange of its own
+    // (block, chunk) under the chunk pass, the partial islands by block
+    // under the stitch — the input is read once and neither pass adds
+    // an exchange of its own
     val keys = plan.linesIterator.map(_.trim)
       .filter(_.startsWith("Arguments: hashpartitioning("))
-      .map(l => "([a-z_]+)#".r.findAllMatchIn(l).map(_.group(1)).toList).toList
+      .map(l => "([A-Za-z_]+)#".r.findAllMatchIn(l).map(_.group(1)).toList).toList
     assert(keys.sortBy(_.mkString(",")) ==
-      List(List("block_id"), List("block_id", "chunk"), List("tfrom", "statid", "seid")),
+      List(List("blockId"), List("blockId", "chunk"), List("tfrom", "statid", "seid")),
       s"got $keys:\n$plan")
+    // below the block exchange: one group map over (block, chunk), its
+    // readings ordered by the shuffle's sort, and no window over readings
+    val byBlock = collect(df.queryExecution.executedPlan) {
+      case e @ ShuffleExchangeExec(h: HashPartitioning, _, _, _)
+          if h.expressions.flatMap(_.references.map(_.name)) == Seq("blockId") => e
+    }
+    assert(byBlock.size == 1, plan)
+    val chunkPass = byBlock.head.child
+    val groupMaps = chunkPass.collect { case m: MapGroupsExec => m }
+    assert(groupMaps.map(_.groupingAttributes.map(_.name)) == Seq(Seq("blockId", "chunk")), plan)
+    assert(groupMaps.head.dataOrder.flatMap(_.references.map(_.name)) == Seq("tfrom", "enc"), plan)
+    assert(chunkPass.collect { case w: WindowExec => w }.isEmpty, plan)
   }
 
   /** Formatted mode emits exchange partitioning on its own
