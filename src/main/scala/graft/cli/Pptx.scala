@@ -1,7 +1,7 @@
 package graft.cli
 
-import java.nio.file.{Files, Path}
-import java.util.zip.{ZipEntry, ZipFile, ZipOutputStream}
+import java.nio.file.Path
+import java.util.zip.ZipFile
 
 /** Minimal dependency-free PPTX writer — enough of ECMA-376
   * (PresentationML, a public standard: a ZIP of XML parts) to reproduce
@@ -58,13 +58,10 @@ object Pptx {
     "TIMERANGE_IDX" -> 15, "VALIDTABLE_IDX" -> 18, "ERRORS_IDX" -> 19,
     "MAINPLOT_IDX" -> 11, "FOOTER_IDX" -> 16)
 
-  def write(path: Path, slides: Seq[Slide]): Unit = {
-    val out = new ZipOutputStream(Files.newOutputStream(path))
-    def part(name: String, content: String): Unit = {
-      out.putNextEntry(new ZipEntry(name))
-      out.write(content.getBytes("UTF-8"))
-      out.closeEntry()
-    }
+  /** @param clock stamps every zip entry's modification time */
+  def write(path: Path, slides: Seq[Slide],
+            clock: java.time.Clock = java.time.Clock.systemDefaultZone()): Unit = {
+    val out = new Ooxml.StampedZip(path, clock); import out.part
     try {
       val n = slides.size
       part("[Content_Types].xml",
@@ -138,7 +135,8 @@ object Pptx {
     * the text. Throws (like tsa/cond_collection.py:283-287) when the
     * layout is missing any of the reference's placeholder indices.
     */
-  def writeWithTemplate(template: Path, path: Path, slides: Seq[Slide]): Unit = {
+  def writeWithTemplate(template: Path, path: Path, slides: Seq[Slide],
+                        clock: java.time.Clock = java.time.Clock.systemDefaultZone()): Unit = {
     val zip = new ZipFile(template.toFile)
     try {
       def bytesOf(name: String): Array[Byte] = {
@@ -165,12 +163,7 @@ object Pptx {
         .map(_.group(1).toInt).maxOption.getOrElse(0)
       val n = slides.size
 
-      val out = new ZipOutputStream(Files.newOutputStream(path))
-      def part(name: String, content: Array[Byte]): Unit = {
-        out.putNextEntry(new ZipEntry(name))
-        out.write(content)
-        out.closeEntry()
-      }
+      val out = new Ooxml.StampedZip(path, clock); import out.part
       try {
         val amended = Set("[Content_Types].xml", "ppt/presentation.xml",
           "ppt/_rels/presentation.xml.rels")

@@ -99,13 +99,16 @@ object TsaBatch {
     *
     * @param timelineMaxRows row bound of one condition's timeline
     *   collect, checked against the summary's `n_rows`
+    * @param clock every wall-clock stamp in the reports (INFO sheet,
+    *   "analyzed" cells, slide dates, zip entries): fix it for fixed bytes
     */
   def run(spark: SparkSession, sheets: Vector[(String, String)],
           obsPath: String, outDir: String, name: String,
           xlsx: Boolean = false, pptx: Boolean = false,
           svg: Boolean = false, png: Boolean = false,
           pptxTemplate: Option[java.nio.file.Path] = None,
-          timelineMaxRows: Long = TimelineMaxRows): Unit = {
+          timelineMaxRows: Long = TimelineMaxRows,
+          clock: java.time.Clock = java.time.Clock.systemDefaultZone()): Unit = {
     val obs = spark.read.parquet(obsPath)
     val engine = new TsaEngine(spark)
     val summaryRows = Vector.newBuilder[String]
@@ -118,7 +121,7 @@ object TsaBatch {
     // (tsa/analysis_collection.py:195-231: A1 stamp / B1 label at
     // init, A2/B2 after the last collection)
     val infoFmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
-    val analysisStarted = java.time.LocalDateTime.now().format(infoFmt)
+    val analysisStarted = java.time.LocalDateTime.now(clock).format(infoFmt)
     val deck = Vector.newBuilder[Pptx.Slide]
 
     // Pre-parse every sheet so that after each run the engine can release
@@ -148,7 +151,7 @@ object TsaBatch {
         wsRows += Seq(Xlsx.Str("start", bold = true), Xlsx.Str("end", bold = true),
           Xlsx.Blank, Xlsx.Str("analyzed", bold = true))
         wsRows += Seq(ts(spec.timeFrom), ts(spec.timeUntil), Xlsx.Blank,
-          Xlsx.Ts(new java.sql.Timestamp(System.currentTimeMillis())))
+          Xlsx.Ts(new java.sql.Timestamp(clock.millis())))
         wsRows += Seq("site", "master_alias", "condition", "data_from",
           "data_until", "valid", "notvalid", "nodata", "rows")
           .map(h => Xlsx.Str(h, bold = true))
@@ -205,12 +208,12 @@ object TsaBatch {
                 if (png) RasterTimeline.write(
                   plots.resolve(s"${title}_${r.spec.idString}.png"), lanes, ranges)
               }
-              if (pptx) deck += slideFor(title, r, Some(s), tl)
+              if (pptx) deck += slideFor(title, r, Some(s), tl, clock)
             }
           } else if (pptx)
             // reference still emits a slide for a no-data condition
             // ('Ei dataa saatavilla', no plot)
-            deck += slideFor(title, r, None, None)
+            deck += slideFor(title, r, None, None, clock)
           if (r.errors.nonEmpty) {
             val prev = condNodes.get(r.spec.idString).map(_.errors).getOrElse(Nil)
             condNodes += r.spec.idString ->
@@ -232,15 +235,15 @@ object TsaBatch {
     if (xlsx) {
       val infoSheet = "INFO" -> Seq(
         Seq[Xlsx.Cell](Xlsx.Str(analysisStarted), Xlsx.Str("analysis started")),
-        Seq[Xlsx.Cell](Xlsx.Str(java.time.LocalDateTime.now().format(infoFmt)),
+        Seq[Xlsx.Cell](Xlsx.Str(java.time.LocalDateTime.now(clock).format(infoFmt)),
           Xlsx.Str("analysis ended")))
-      Xlsx.write(Paths.get(s"$outDir/$name.xlsx"), infoSheet +: workbook.result())
+      Xlsx.write(Paths.get(s"$outDir/$name.xlsx"), infoSheet +: workbook.result(), clock)
     }
     if (pptx) pptxTemplate match {
       // the reference's mechanic: fill the provided corporate template
       // (tsa/cond_collection.py:262-287) instead of the generated deck
-      case Some(tpl) => Pptx.writeWithTemplate(tpl, Paths.get(s"$outDir/$name.pptx"), deck.result())
-      case None => Pptx.write(Paths.get(s"$outDir/$name.pptx"), deck.result())
+      case Some(tpl) => Pptx.writeWithTemplate(tpl, Paths.get(s"$outDir/$name.pptx"), deck.result(), clock)
+      case None => Pptx.write(Paths.get(s"$outDir/$name.pptx"), deck.result(), clock)
     }
     val tree = graft.dsl.ErrorNode(name, Nil, collNodes)
     // errors file only when something went wrong (tsabatch.py:93-104)
@@ -294,8 +297,8 @@ object TsaBatch {
     */
   private def slideFor(title: String, r: TsaEngine#ConditionResult,
                        s: Option[org.apache.spark.sql.Row],
-                       timeline: Option[(Seq[SvgTimeline.Lane], Seq[SvgTimeline.Range])])
-      : Pptx.Slide = {
+                       timeline: Option[(Seq[SvgTimeline.Lane], Seq[SvgTimeline.Range])],
+                       clock: java.time.Clock): Pptx.Slide = {
     def dmy(d: java.time.LocalDate) =
       f"${d.getDayOfMonth}%02d.${d.getMonthValue}%02d.${d.getYear}"
     val timeRange = s.flatMap { row =>
@@ -314,7 +317,7 @@ object TsaBatch {
     def pct(c: String) = s.map(row => "%.2f %%".formatLocal(java.util.Locale.ROOT,
       row.getAs[Double](c) * 100)).getOrElse("-")
     Pptx.Slide(
-      header = s"TSA report: $title ${dmy(java.time.LocalDate.now())}",
+      header = s"TSA report: $title ${dmy(java.time.LocalDate.now(clock))}",
       title = r.spec.idString,
       body = r.spec.rawCondition,
       timeRange = timeRange,

@@ -21,14 +21,12 @@ object Xlsx {
   final case class Pct(v: Double) extends Cell
   final case class Ts(v: java.sql.Timestamp) extends Cell
 
-  /** @param sheets (name, rows) in order; row cells map to columns A.. */
-  def write(path: Path, sheets: Seq[(String, Seq[Seq[Cell]])]): Unit = {
-    val out = new ZipOutputStream(Files.newOutputStream(path))
-    def part(name: String, content: String): Unit = {
-      out.putNextEntry(new ZipEntry(name))
-      out.write(content.getBytes("UTF-8"))
-      out.closeEntry()
-    }
+  /** @param sheets (name, rows) in order; row cells map to columns A..
+    * @param clock stamps every zip entry's modification time
+    */
+  def write(path: Path, sheets: Seq[(String, Seq[Seq[Cell]])],
+            clock: java.time.Clock = java.time.Clock.systemDefaultZone()): Unit = {
+    val out = new Ooxml.StampedZip(path, clock); import out.part
     try {
       val n = sheets.size
       part("[Content_Types].xml",
@@ -156,6 +154,17 @@ object Xlsx {
 
 /** Shared XML text handling for the dependency-free OOXML/SVG writers. */
 private[cli] object Ooxml {
+  /** A zip whose parts are stamped from `clock`, not from the time they are written. */
+  final class StampedZip(path: Path, clock: java.time.Clock) {
+    private val out = new ZipOutputStream(Files.newOutputStream(path))
+    def part(name: String, content: Array[Byte]): Unit = {
+      val e = new ZipEntry(name); e.setTime(clock.millis())
+      out.putNextEntry(e); out.write(content); out.closeEntry()
+    }
+    def part(name: String, content: String): Unit = part(name, content.getBytes("UTF-8"))
+    def close(): Unit = out.close()
+  }
+
   /** Escape markup AND drop XML-1.0-invalid control characters — a
     * stray control byte in sheet-derived text would make the whole
     * document unreadable even escaped (only tab/LF/CR are legal below

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions._
 
 /** Bucketed-table sink for join co-location at 100 TB.
   *
@@ -24,9 +25,8 @@ object BucketedStore {
     * into `buckets` buckets. Sorting within buckets additionally lets
     * the join skip its Sort (sort-merge join reads presorted runs).
     */
-  def writeBucketed(df: DataFrame, table: String, keyCols: Seq[String],
-                    buckets: Int, mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode)
+  def writeBucketed(df: DataFrame, table: String, keyCols: Seq[String], buckets: Int): Unit =
+    df.write.mode(SaveMode.Overwrite)
       .bucketBy(buckets, keyCols.head, keyCols.tail: _*)
       .sortBy(keyCols.head, keyCols.tail: _*)
       .format("parquet")
@@ -43,72 +43,63 @@ object BucketedStore {
   * partitions and never opens the rest. This is the Spark-native
   * replacement for the reference's TimescaleDB hypertable chunking on
   * `tfrom` (database/01_init_db.sql:50).
+  *
+  * Every write ([[writeByDay]], [[mergeByDay]], [[deleteByDay]],
+  * `LotjuIngest.ingest`) has one layout in place of the reference's B-tree
+  * indexes on `statobs(statid)`/`seobs(seid, seval)`: range by (`obs_date`,
+  * `statid`), each day file sorted by (`statid`, `tfrom`, `seid`). Zone
+  * maps on `statid` stay tight for the pack's key filter, and the same
+  * rows give the same bytes whatever order they arrived in.
   */
 object PartitionedStore {
 
-  /** Write with a derived `obs_date` partition column; the original
-    * `tfrom` stays untouched inside each file.
-    */
-  def writeByDay(df: org.apache.spark.sql.DataFrame, path: String,
-                 tsCol: String = "tfrom",
+  /** Write with a derived `obs_date` partition column; `tfrom` stays in each file. */
+  def writeByDay(df: DataFrame, path: String,
                  mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.withColumn("obs_date",
-        org.apache.spark.sql.functions.to_date(org.apache.spark.sql.functions.col(tsCol)))
-      .write.mode(mode).partitionBy("obs_date").parquet(path)
+    write(df, path, mode, dynamic = false)
 
-  /** Read back; time filters on `tsCol` should be rewritten against
+  /** The store's only writer. The sort's leading `obs_date` is the
+    * partitioned writer's own required ordering, so the plan keeps one
+    * Sort, directly over the range exchange. `dynamic` replaces only the
+    * days present in `df` (partition-overwrite mode "dynamic").
+    */
+  private def write(df: DataFrame, path: String, mode: SaveMode,
+                    dynamic: Boolean): Unit = {
+    val w = df.withColumn("obs_date", to_date(col("tfrom")))
+      .repartitionByRange(col("obs_date"), col("statid"))
+      .sortWithinPartitions("obs_date", "statid", "tfrom", "seid")
+      .write.mode(mode)
+    (if (dynamic) w.option("partitionOverwriteMode", "dynamic") else w)
+      .partitionBy("obs_date").parquet(path)
+  }
+
+  /** Read back; time filters on `tfrom` should be rewritten against
     * `obs_date` too (partition pruning needs a predicate on the
     * partition column — see [[prunedRange]]).
     */
-  def read(spark: SparkSession, path: String): org.apache.spark.sql.DataFrame =
+  def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
   /** Range filter that prunes: the `obs_date` bounds reach the
     * directory listing (PartitionFilters), the `tsCol` bounds keep the
     * row-level semantics exact within the boundary days.
     */
-  def prunedRange(df: org.apache.spark.sql.DataFrame, tsCol: String,
-                  from: java.sql.Timestamp, until: java.sql.Timestamp): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
+  def prunedRange(df: DataFrame, tsCol: String,
+                  from: java.sql.Timestamp, until: java.sql.Timestamp): DataFrame =
     df.filter(col("obs_date").between(to_date(lit(from)), to_date(lit(until))) &&
       col(tsCol).between(lit(from), lit(until)))
-  }
 
   /** DELETE by key (the right-to-be-forgotten path): remove every
     * store row matching a key in `keys`, rewriting ONLY the partitions
     * the key set touches — [[mergeByDay]]'s mechanics with no inserts.
-    * `keys` must carry `tsCol` (or enough of the key to derive the
-    * day) so the touched-partition set is derivable; an erasure
-    * request without a time scope is a full-table rewrite by
-    * definition and should go through compaction windows instead.
+    * `keys` must carry `tfrom` so the touched-partition set is
+    * derivable; an erasure request without a time scope is a
+    * full-table rewrite by definition and should go through compaction
+    * windows instead.
     */
-  def deleteByDay(spark: SparkSession, keys: org.apache.spark.sql.DataFrame,
-                  path: String, keyCols: Seq[String],
-                  tsCol: String = "tfrom"): Unit = {
-    import org.apache.spark.sql.functions._
-    val days = keys.select(to_date(col(tsCol)).as("obs_date")).distinct()
-      .collect().map(_.getDate(0))
-    if (days.nonEmpty) {
-      val touched = read(spark, path)
-        .filter(col("obs_date").isin(days.map(d => lit(d)): _*))
-      val survivors = touched.join(
-          keys.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
-        .localCheckpoint(eager = true)
-      survivors.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("obs_date").parquet(path)
-      // dynamic overwrite only replaces partitions PRESENT in the
-      // written frame — a day erased to zero rows writes nothing and
-      // would keep its stale directory; drop those explicitly
-      val survivorDays = survivors.select("obs_date").distinct()
-        .collect().map(_.getDate(0).toString).toSet
-      val base = new org.apache.hadoop.fs.Path(path)
-      val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      days.filterNot(d => survivorDays(d.toString)).foreach { d =>
-        fs.delete(new org.apache.hadoop.fs.Path(base, s"obs_date=$d"), true)
-      }
-    }
-  }
+  def deleteByDay(spark: SparkSession, keys: DataFrame,
+                  path: String, keyCols: Seq[String]): Unit =
+    rewriteDays(spark, path, keys, keyCols, None)
 
   /** MERGE (keyed upsert) a batch into the day-partitioned store,
     * rewriting ONLY the partitions the batch touches — the reference's
@@ -129,28 +120,36 @@ object PartitionedStore {
     * Requires `keyCols` to be a true key of both store and batch
     * within a day (the reference's natural-key contract).
     */
-  def mergeByDay(spark: SparkSession, batch: org.apache.spark.sql.DataFrame,
-                 path: String, keyCols: Seq[String],
-                 tsCol: String = "tfrom"): Unit = {
-    import org.apache.spark.sql.functions._
-    val days = batch.select(to_date(col(tsCol)).as("obs_date")).distinct()
-      .collect().map(_.getDate(0))
+  def mergeByDay(spark: SparkSession, batch: DataFrame,
+                 path: String, keyCols: Seq[String]): Unit =
+    rewriteDays(spark, path, batch, keyCols, Some(batch))
+
+  /** Rewrite the days `keys` touches: their rows minus `keys` (on `keyCols`), plus `add`. */
+  private def rewriteDays(spark: SparkSession, path: String, keys: DataFrame,
+                          keyCols: Seq[String], add: Option[DataFrame]): Unit = {
+    def daysOf(df: DataFrame) =
+      df.select(to_date(col("tfrom"))).distinct().collect().map(_.getDate(0))
+    val days = daysOf(keys)
     if (days.nonEmpty) {
-      val touched = read(spark, path)
+      val kept = read(spark, path)
         .filter(col("obs_date").isin(days.map(d => lit(d)): _*))
-      val survivors = touched.join(
-        batch.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
-      // EAGER checkpoint: the merged relation must fully materialize
-      // BEFORE the overwrite touches the directories it was read from
-      // (read-overwrite-same-path is otherwise rejected, and lazily
-      // racing the delete would corrupt); this also bounds the
-      // rewrite's input to the touched days' rows only
-      val merged = survivors.unionByName(
-          batch.withColumn("obs_date", to_date(col(tsCol))))
-        .localCheckpoint(eager = true)
-      merged.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("obs_date").parquet(path)
+        .join(keys.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
+        .drop("obs_date")
+      // EAGER checkpoint: the rows must fully materialize BEFORE the
+      // overwrite touches the directories they were read from (reading
+      // and overwriting one path is otherwise rejected, and lazily racing
+      // the delete would corrupt); it also bounds the rewrite's input
+      val rows = add.fold(kept)(kept.unionByName(_)).localCheckpoint(eager = true)
+      write(rows, path, SaveMode.Overwrite, dynamic = true)
+      // dynamic overwrite only replaces partitions PRESENT in the written
+      // frame: a day a delete erased writes nothing and would keep its
+      // stale directory, so drop it (a merge writes on every day it touches)
+      if (add.isEmpty) {
+        val base = new org.apache.hadoop.fs.Path(path)
+        val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        days.diff(daysOf(rows)).foreach(d =>
+          fs.delete(new org.apache.hadoop.fs.Path(base, s"obs_date=$d"), true))
+      }
     }
   }
 }

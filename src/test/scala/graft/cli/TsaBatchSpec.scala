@@ -3,6 +3,7 @@ package graft.cli
 import graft.SparkTest
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** End-to-end CLI regression: sheet CSV → engine → summary CSV +
   * per-condition parquet. Runs TsaBatch.main in-process (getOrCreate
@@ -472,5 +473,53 @@ class TsaBatchSpec extends AnyFunSuite with SparkTest {
     assert(noValue.getMessage.contains("--out needs a value"), noValue.getMessage)
     assert(TsaBatch.parseArgs(Array("--input", "x", "--xlsx", "--pptx-template", "t.pptx")) ==
       Map("input" -> "x", "xlsx" -> "true", "pptx-template" -> "t.pptx"))
+  }
+
+  test("one fixed clock gives byte-identical reports, stamped from that clock") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("tsabatch_clock")
+    val t0 = java.time.Instant.parse("2018-02-01T00:00:00Z")
+    val obsPath = dir.resolve("obs.parquet").toString
+    (for {
+      h <- 0 until 24 * 40
+      (seid, v) <- Seq(27 -> (if (h % 3 == 0) 8.0 else 2.0), 3 -> (if (h % 2 == 0) -2.0 else 1.0))
+    } yield (java.sql.Timestamp.from(t0.plusSeconds(h * 3600L)), 1120L, seid.toLong, v))
+      .toDF("tfrom", "statid", "seid", "seval").write.parquet(obsPath)
+    val sheet =
+      """"start","end"
+        |"1.2.2018","31.3.2018"
+        |"site","master_alias","condition"
+        |"Testi","A1","s1120#keli_1 = 8 and s1120#tie_1 < 0"
+        |"Testi","B1","s1120#nosuch = 1"
+        |""".stripMargin
+    val at = java.time.Instant.parse("2024-05-06T07:08:10Z")
+    val clock = java.time.Clock.fixed(at, java.time.ZoneOffset.UTC)
+    val files = Seq("fixed_summary.csv", "fixed_ERRORS.json", "fixed.xlsx", "fixed.pptx",
+      "plots/demo_testi_a1.svg", "plots/demo_testi_a1.png")
+    def run(n: Int): Seq[Seq[Byte]] = {
+      val out = dir.resolve(s"out$n")
+      Files.createDirectories(out)
+      TsaBatch.run(spark, Vector("demo" -> sheet), obsPath, out.toString, "fixed",
+        xlsx = true, pptx = true, svg = true, png = true, clock = clock)
+      files.map(f => Files.readAllBytes(out.resolve(f)).toSeq)
+    }
+    val first = run(1)
+    Thread.sleep(2100) // past the zip format's 2-second time resolution
+    val second = run(2)
+    for ((f, (a, b)) <- files.zip(first.zip(second))) assert(a == b, s"$f differs between runs")
+
+    def zipped(name: String)(read: java.util.zip.ZipFile => Unit): Unit = {
+      val zf = new java.util.zip.ZipFile(dir.resolve(s"out1/$name").toFile)
+      try read(zf) finally zf.close()
+    }
+    def text(zf: java.util.zip.ZipFile, part: String): String = {
+      val in = zf.getInputStream(zf.getEntry(part))
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    for (name <- Seq("fixed.xlsx", "fixed.pptx")) zipped(name) { zf =>
+      assert(zf.entries().asScala.forall(_.getTime == at.toEpochMilli), name)
+    }
+    zipped("fixed.xlsx")(zf => assert(text(zf, "xl/worksheets/sheet1.xml").contains("2024-05-06 07:08:10")))
+    zipped("fixed.pptx")(zf => assert(text(zf, "ppt/slides/slide1.xml").contains("06.05.2024")))
   }
 }

@@ -232,4 +232,41 @@ class BucketedStoreSpec extends AnyFunSuite with SparkTest {
     val got = PartitionedStore.read(spark, path).collect()
     assert(got.length == 3) // 6 - 1 - 2
   }
+
+  test("merge and delete rewrite a touched day in (statid, tfrom, seid) order") {
+    import spark.implicits._
+    // rows arrive in descending order; every write must sort them
+    val rows = for (day <- 1 to 2; st <- 3L to 1L by -1; h <- 5 to 0 by -1) yield
+      (java.sql.Timestamp.valueOf(f"2024-04-0$day $h%02d:00:00"), st, 2L, day * 10.0 + h)
+    val path = java.nio.file.Files.createTempDirectory("layout_spec").toString + "/store"
+    PartitionedStore.writeByDay(rows.toDF("tfrom", "statid", "seid", "seval"), path)
+    def dayKeys(day: String): Seq[Seq[(Long, Long, Long)]] =
+      new java.io.File(s"$path/obs_date=$day").listFiles()
+        .filter(_.getName.endsWith(".parquet")).toSeq.map { f =>
+          spark.read.parquet(f.getPath)
+            .select(col("statid"), unix_micros(col("tfrom")), col("seid")).collect()
+            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+        }
+    def assertLayout(day: String, rows: Int): Unit = {
+      val files = dayKeys(day)
+      files.foreach(k => assert(k == k.sorted, s"$day: $k"))
+      assert(files.map(_.size).sum == rows, day)
+    }
+    assertLayout("2024-04-01", 18)
+    // an update, an insert under a lower seid and one under a new
+    // lowest station, all on day 1
+    val batch = Seq(
+      (java.sql.Timestamp.valueOf("2024-04-01 03:00:00"), 2L, 2L, 999.0),
+      (java.sql.Timestamp.valueOf("2024-04-01 03:00:00"), 2L, 1L, 5.0),
+      (java.sql.Timestamp.valueOf("2024-04-01 04:30:00"), 0L, 2L, 6.0))
+      .toDF("tfrom", "statid", "seid", "seval")
+    PartitionedStore.mergeByDay(spark, batch, path, Seq("tfrom", "statid", "seid"))
+    assertLayout("2024-04-01", 20)
+    PartitionedStore.deleteByDay(spark, Seq(
+        (java.sql.Timestamp.valueOf("2024-04-01 05:00:00"), 3L, 2L),
+        (java.sql.Timestamp.valueOf("2024-04-01 00:00:00"), 1L, 2L))
+      .toDF("tfrom", "statid", "seid"), path, Seq("tfrom", "statid", "seid"))
+    assertLayout("2024-04-01", 18)
+    assertLayout("2024-04-02", 18)
+  }
 }
